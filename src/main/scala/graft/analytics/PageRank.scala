@@ -29,13 +29,16 @@ import org.apache.spark.sql.functions._
   * 5.6 s for 10 iterations on the sf0.1 kNN graph, this shape 2.0 s,
   * bit-identical output). The per-iteration shuffle carries one row
   * per (dst × partition). Lineage is cut with localCheckpoint every
-  * `checkpointEvery` iterations (the connectedComponents pattern —
+  * `CheckpointEvery` (2) iterations (the connectedComponents pattern —
   * without it the plan doubles per round). Nodes with no in-edges
   * keep receiving `base` via their union row — nothing vanishes.
   */
 object PageRank {
 
   val MassUnit: Long = 1000000000000L // 1e12 pico-units of total mass
+
+  /** Iterations between lineage cuts; measured below at the loop. */
+  private val CheckpointEvery = 2
 
   /** Ranks the `topN` heaviest nodes of `edges` (directed src→dst).
     * Returns (`srcCol`, pr_pico, rank) — rank 1 = highest mass, ties
@@ -45,9 +48,8 @@ object PageRank {
     * runs over ≤ topN rows.
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-               iters: Int = 10, topN: Int = Int.MaxValue,
-               checkpointEvery: Int = 2): DataFrame =
-    pageRankFrom(edges, srcCol, dstCol, None, iters, topN, checkpointEvery)
+               iters: Int = 10, topN: Int = Int.MaxValue): DataFrame =
+    pageRankFrom(edges, srcCol, dstCol, None, iters, topN)
 
   /** Warm-start arm — the daily-refresh shape: iterate from the
     * PREVIOUS snapshot's stored masses instead of uniform. `prevRanks`
@@ -69,12 +71,11 @@ object PageRank {
     */
   def pageRankWarm(edges: DataFrame, srcCol: String, dstCol: String,
                    prevRanks: DataFrame, iters: Int = 3,
-                   topN: Int = Int.MaxValue,
-                   checkpointEvery: Int = 2): DataFrame =
+                   topN: Int = Int.MaxValue): DataFrame =
     pageRankFrom(edges, srcCol, dstCol,
       Some(prevRanks.select(col(srcCol).as("__pv"),
         col("pr_pico").as("__pmass"))),
-      iters, topN, checkpointEvery)
+      iters, topN)
 
   /** Personalized PageRank (random-walk-with-restart) — seed-set
     * corpus expansion, the "find more documents like these" selection
@@ -97,19 +98,16 @@ object PageRank {
     */
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
                            seeds: DataFrame, iters: Int = 10,
-                           topN: Int = Int.MaxValue,
-                           checkpointEvery: Int = 2): DataFrame =
-    pageRankFrom(edges, srcCol, dstCol, None, iters, topN, checkpointEvery,
+                           topN: Int = Int.MaxValue): DataFrame =
+    pageRankFrom(edges, srcCol, dstCol, None, iters, topN,
       Some(seeds.select(col(srcCol).as("__sv")).distinct()))
       .withColumnRenamed("pr_pico", "ppr_pico")
 
   private def pageRankFrom(edges: DataFrame, srcCol: String, dstCol: String,
                            prev: Option[DataFrame], iters: Int, topN: Int,
-                           checkpointEvery: Int,
                            seeds: Option[DataFrame] = None): DataFrame = {
     require(iters >= 1 && iters <= 100, "pageRank: iters must be in [1, 100]")
     require(topN > 0, "pageRank: topN must be positive")
-    require(checkpointEvery >= 1, "pageRank: checkpointEvery must be >= 1")
     import org.apache.spark.sql.expressions.Window
     val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
       .persist()
@@ -189,7 +187,7 @@ object PageRank {
       // Measured on the sf0.1 kNN graph (5k nodes, 10 iters, warm):
       // every-1 9.2 s, every-2 8.5 s, every-5 13.5 s (deep lineage
       // re-analysis beats the jobs saved) — results bit-identical.
-      if (i % checkpointEvery == 0 || i == iters)
+      if (i % CheckpointEvery == 0 || i == iters)
         pr = pr.localCheckpoint(eager = true)
     }
     e.unpersist(); nodes.unpersist(); nodesB.unpersist()

@@ -1,7 +1,6 @@
 package graft.api
 
-import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.{Executors, ScheduledExecutorService, TimeUnit}
+import java.nio.file.{Files, NoSuchFileException, Path}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{BooleanType, StringType, StructField, StructType}
@@ -87,7 +86,7 @@ object EventLogGenerator {
 
   /** End-to-end XES generation (reference `generateXESfile`,
     * app.py:180-218): generate → empty→None (the HTTP layer maps that to
-    * 204) → parameter-keyed file → XES write.
+    * 204) → XES write, published atomically on the parameter-keyed file.
     *
     * Date bounds: when `startDate`/`endDate` are absent they are
     * defaulted from the data (min/max of `time:timestamp` —
@@ -126,7 +125,8 @@ object EventLogGenerator {
       val key = cacheKey(p)
       // explicit opt-in probe (the reference's `use_cache` flag was dead
       // code, SURVEY §2.8.2); a regeneration still lands on the keyed
-      // path, so later cached requests see the fresh artifact
+      // path, published atomically, so later cached requests see the
+      // fresh artifact and a concurrent reader never sees a partial one
       val hit = if (useCache) cache.lookup(key) else None
       hit.orElse {
         graft.xes.XesWriter.write(df, cache.pathFor(key))
@@ -164,44 +164,42 @@ object EventLogGenerator {
   }
 }
 
-/** Parameter-keyed result cache with TTL eviction (O-5 + O-29).
-  * Explicit opt-in per call (the reference's `use_cache` flag was dead
-  * code — SURVEY §2.8.2); eviction deletes entries older than the TTL
-  * rather than wiping the directory wholesale.
+/** Parameter-keyed result cache with a TTL (O-5 + O-29). Explicit
+  * opt-in per call (the reference's `use_cache` flag was dead code —
+  * SURVEY §2.8.2). `lookup` enforces the TTL itself: an entry older than
+  * `ttlSeconds` reads as a miss and is deleted, so no background thread
+  * is needed. `evictExpired` is the explicit whole-directory sweep.
+  * Entries are published atomically by `XesWriter.write`, so a reader
+  * only ever sees a complete file.
   */
 final class ResultCache(dir: Path, ttlSeconds: Long = 60) {
   Files.createDirectories(dir)
+  private val ttlMillis = ttlSeconds * 1000
 
   def pathFor(key: String, ext: String = "xes"): Path = dir.resolve(s"$key.$ext")
 
   def lookup(key: String, ext: String = "xes"): Option[Path] = {
     val p = pathFor(key, ext)
-    if (Files.exists(p)) Some(p) else None
+    age(p).flatMap { a =>
+      if (a <= ttlMillis) Some(p) else { Files.deleteIfExists(p); None }
+    }
   }
 
   def evictExpired(): Int = {
-    val cutoff = System.currentTimeMillis() - ttlSeconds * 1000
     val s = Files.list(dir)
     try {
       val it = s.iterator()
       var n = 0
       while (it.hasNext) {
         val p = it.next()
-        if (Files.getLastModifiedTime(p).toMillis < cutoff) {
-          Files.deleteIfExists(p); n += 1
-        }
+        if (age(p).exists(_ > ttlMillis) && Files.deleteIfExists(p)) n += 1
       }
       n
     } finally s.close() // Files.list holds a directory handle until closed
   }
 
-  /** Background eviction loop (reference: APScheduler interval job). */
-  def startEvictionLoop(intervalSeconds: Long = 60): ScheduledExecutorService = {
-    val ses = Executors.newSingleThreadScheduledExecutor { r =>
-      val t = new Thread(r, "graft-cache-evict"); t.setDaemon(true); t
-    }
-    ses.scheduleAtFixedRate(() => { try evictExpired() catch { case _: Throwable => () } },
-      intervalSeconds, intervalSeconds, TimeUnit.SECONDS)
-    ses
-  }
+  /** Milliseconds since `p` was last written; None when it does not exist. */
+  private def age(p: Path): Option[Long] =
+    try Some(System.currentTimeMillis() - Files.getLastModifiedTime(p).toMillis)
+    catch { case _: NoSuchFileException => None }
 }

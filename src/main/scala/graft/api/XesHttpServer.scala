@@ -1,10 +1,13 @@
 package graft.api
 
 import java.net.InetSocketAddress
+import java.nio.channels.{Channels, FileChannel}
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
+import java.util.concurrent.Executors
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import org.slf4j.LoggerFactory
 
 import org.apache.spark.sql.DataFrame
 
@@ -26,7 +29,8 @@ import graft.sources.{BotManagerClient, MiniJson}
   * reference's check was dead code), and the empty-result path returns
   * a real 204 (the reference's None-check tested the wrong variable,
   * §2.8.4). Errors map like app.py:96-99: client errors → 400,
-  * everything else → 500.
+  * everything else → 500 with a fixed body; the exception goes to the
+  * log, not to the client.
   *
   * Glue, not engine: one request = one Spark job chain on the shared
   * session. Request concurrency rides Spark's scheduler (the
@@ -54,13 +58,15 @@ final class XesHttpServer(
   // weight 1 / minShare 0, which is exactly the equal-share intent;
   // under the default FIFO mode the property is inert, so setting it
   // is always safe.
-  server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8, r => {
+  private val executor = Executors.newFixedThreadPool(8, r => {
     val t = new Thread(r, "graft-http"); t.setDaemon(true); t
-  }))
+  })
+  server.setExecutor(executor)
+
+  private val log = LoggerFactory.getLogger(classOf[XesHttpServer])
 
   def start(): Int = { server.start(); server.getAddress.getPort }
-  def stop(): Unit = server.stop(0)
-  def boundPort: Int = server.getAddress.getPort
+  def stop(): Unit = { server.stop(0); executor.shutdown() }
 
   private def handle(ex: HttpExchange): Unit = {
     try {
@@ -92,7 +98,9 @@ final class XesHttpServer(
     } catch {
       case BadRequest(msg)                => respond(ex, 400, msg)
       case e: IllegalArgumentException    => respond(ex, 400, String.valueOf(e.getMessage))
-      case e: Throwable                   => respond(ex, 500, String.valueOf(e.getMessage))
+      case e: Throwable =>
+        log.error(s"${ex.getRequestMethod} ${ex.getRequestURI} failed", e)
+        respond(ex, 500, "internal error")
     } finally ex.close()
   }
 
@@ -156,12 +164,18 @@ final class XesHttpServer(
     }
   }
 
+  /** Streams the file from one open channel. A published file is never
+    * written again (a newer one replaces it by rename, an eviction only
+    * unlinks it), so once it is open the whole body is sent as it was.
+    */
   private def respondFile(ex: HttpExchange, path: Path): Unit = {
-    val bytes = Files.readAllBytes(path)
-    ex.getResponseHeaders.add("Content-Type", "application/xml; charset=utf-8")
-    ex.getResponseHeaders.add("Content-Disposition",
-      s"""attachment; filename="${path.getFileName}"""")
-    ex.sendResponseHeaders(200, bytes.length)
-    ex.getResponseBody.write(bytes)
+    val ch = FileChannel.open(path)
+    try {
+      ex.getResponseHeaders.add("Content-Type", "application/xml; charset=utf-8")
+      ex.getResponseHeaders.add("Content-Disposition",
+        s"""attachment; filename="${path.getFileName}"""")
+      ex.sendResponseHeaders(200, ch.size())
+      Channels.newInputStream(ch).transferTo(ex.getResponseBody)
+    } finally ch.close()
   }
 }

@@ -54,10 +54,11 @@ import org.apache.spark.sql.functions._
   */
 object Coreset {
 
-  def kCenters(df: DataFrame, idCol: String, embCol: String, k: Int,
-               checkpointEvery: Int = 2): DataFrame = {
+  /** Rounds between lineage cuts — the PageRank cadence. */
+  private val CheckpointEvery = 2
+
+  def kCenters(df: DataFrame, idCol: String, embCol: String, k: Int): DataFrame = {
     require(k >= 1 && k <= 4096, s"kCenters: k must be in [1, 4096], got $k")
-    require(checkpointEvery >= 1, "kCenters: checkpointEvery must be >= 1")
     for (c <- Seq("__vq", "__nsq", "__best", "sel_round", "far_cos")
          if df.columns.contains(c))
       require(false, s"kCenters: '$c' is reserved for internal use — rename it")
@@ -83,7 +84,7 @@ object Coreset {
       var state = vecs.withColumn("__best", centerCos(first))
       var round = 1
       while (round < k) {
-        if (round % checkpointEvery == 0) state = state.localCheckpoint(eager = true)
+        if (round % CheckpointEvery == 0) state = state.localCheckpoint(eager = true)
         val next = state
           .filter(!col(idCol).isin(selected.map(_._1).toSeq: _*))
           .sort(col("__best").asc, col(idCol).asc)

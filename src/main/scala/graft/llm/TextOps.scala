@@ -2945,14 +2945,6 @@ object TextOps {
           .otherwise(lit("deferred")).as("status"))
   }
 
-  /** The RE2/Java-common BARE-URL matcher (the absolute-only fast
-    * arm): a scheme token at a word boundary, then everything up to
-    * whitespace or an HTML delimiter. Case-insensitive so the messy
-    * `HTTP://Host` forms the canonicalizer absorbs are FOUND, not
-    * silently skipped at extraction.
-    */
-  val LinkPattern = "(?i)\\bhttps?://[^\\s\"<>]+"
-
   /** The full extractor `hostLinkGraph` uses (r16): an `href`
     * attribute (double- OR single-quoted — both are everywhere in
     * real HTML) OR a bare absolute URL, as ONE alternation so

@@ -20,7 +20,6 @@ import org.apache.spark.sql.types.{StringType, TimestampType}
   *  - null fills (filter-before-fill ordering quirk!): event_reader.py:34-43
   *  - rename to XES names: event_reader.py:74-75
   *  - JSON widening: event_reader.py:119-126
-  *  - date bounds: event_reader.py:26-29
   */
 object EventOps {
 
@@ -121,17 +120,4 @@ object EventOps {
       .schema
     flattenJson(col, inferred)(df)
   }
-
-  // ---- O-21: date formatting -------------------------------------------------
-  def formatDate(col: String, out: String, fmt: String = "yyyy-MM-dd"): DataFrame => DataFrame =
-    df => df.withColumn(out, date_format(df(col), fmt))
-
-  // ---- O-23: min/max timestamp bounds (driver-side scalar) --------------------
-  def dateBounds(df: DataFrame, col: String): (java.sql.Timestamp, java.sql.Timestamp) = {
-    val row = df.agg(min(df(col)), max(df(col))).head()
-    (row.getTimestamp(0), row.getTimestamp(1))
-  }
-
-  // ---- O-28: emptiness probe ---------------------------------------------------
-  def isEmpty(df: DataFrame): Boolean = df.isEmpty
 }

@@ -1,7 +1,5 @@
 package graft.xes
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -38,29 +36,22 @@ object XesReader {
   private[xes] final case class RawEvent(caseId: String,
                                          attrs: Map[String, (String, String)])
 
-  /** DOM-parse one XES document (kept for golden tests; the read
-    * paths stream via `staxEvents`).
-    */
-  private[xes] def parseFileRaw(xml: String): Seq[RawEvent] = parseFile(xml)
-
   /** Streaming (StAX cursor) XES event iterator — memory is bounded
     * by ONE TRACE, not the document: events buffer only until their
-    * trace closes (the trace's `concept:name` may legally appear
-    * after its events, and every event of a trace carries the same
-    * case id — same semantics as the DOM parser, minus the
-    * whole-document materialization that made a giant single-shard
-    * log an executor OOM). A stream whose root element is not
-    * `<log>` (sidecars, _SUCCESS markers) yields no events — the
-    * streaming form of the old `contains("<log")` probe. Malformed
-    * XML after a valid root still throws, matching the DOM parser.
-    * The input stream is closed when the document ends.
+    * trace closes, because the trace's `concept:name` may legally
+    * appear after its events, and every event of a trace carries that
+    * one case id (a trace without one yields a null case id). A giant
+    * single-shard log therefore never has to fit in an executor. A
+    * stream whose root element is not `<log>` (sidecars, _SUCCESS
+    * markers) yields no events. Malformed XML after a valid root
+    * throws. The input stream is closed when the document ends.
     *
-    * Only DIRECT children are honored, as in the DOM parser: events
-    * at trace depth, attributes at event depth, the case id at trace
-    * depth — a `<global>` block's defaults or nested containers never
-    * leak into rows. DTDs and external entities are disabled (the
-    * files are machine-written, and a log shard must not be able to
-    * make the parser fetch anything).
+    * Only DIRECT children are honored: events at trace depth,
+    * attributes at event depth, the case id at trace depth — a
+    * `<global>` block's defaults or nested containers never leak into
+    * rows. DTDs and external entities are disabled (the files are
+    * machine-written, and a log shard must not be able to make the
+    * parser fetch anything).
     */
   private[graft] def staxEvents(in: java.io.InputStream): Iterator[RawEvent] = {
     val fac = javax.xml.stream.XMLInputFactory.newInstance()
@@ -141,44 +132,6 @@ object XesReader {
         if (pending.isEmpty) throw new NoSuchElementException("staxEvents")
         pending.dequeue()
       }
-    }
-  }
-
-  private def parseFile(xml: String): Seq[RawEvent] = {
-    val doc = javax.xml.parsers.DocumentBuilderFactory.newInstance()
-      .newDocumentBuilder()
-      .parse(new java.io.ByteArrayInputStream(xml.getBytes(StandardCharsets.UTF_8)))
-    val traces = doc.getElementsByTagName("trace")
-    (0 until traces.getLength).flatMap { i =>
-      val tr = traces.item(i).asInstanceOf[org.w3c.dom.Element]
-      val kids = tr.getChildNodes
-      var caseId: String = null
-      val evs = Seq.newBuilder[Map[String, (String, String)]]
-      var j = 0
-      while (j < kids.getLength) {
-        kids.item(j) match {
-          case e: org.w3c.dom.Element if e.getTagName == "event" =>
-            val ats = e.getChildNodes
-            val m = Map.newBuilder[String, (String, String)]
-            var k = 0
-            while (k < ats.getLength) {
-              ats.item(k) match {
-                case a: org.w3c.dom.Element =>
-                  m += a.getAttribute("key") -> ((a.getTagName, a.getAttribute("value")))
-                case _ =>
-              }
-              k += 1
-            }
-            evs += m.result()
-          case e: org.w3c.dom.Element
-            if e.getTagName == "string" && e.getAttribute("key") == "concept:name" =>
-            caseId = e.getAttribute("value")
-          case _ =>
-        }
-        j += 1
-      }
-      val cid = caseId
-      evs.result().map(RawEvent(cid, _))
     }
   }
 

@@ -1,9 +1,10 @@
 package graft.xes
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, StandardCopyOption, StandardOpenOption}
 import java.time.ZoneOffset
 import java.time.format.DateTimeFormatter
+import java.util.UUID
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions.col
@@ -27,7 +28,8 @@ import org.apache.spark.sql.types._
   *  - Rows with a NULL case id are dropped here as a safety net; the
   *    upstream pipeline already filters them (O-8, event_reader.py:59).
   *  - `write` produces the reference's single-file artifact by streaming
-  *    `toLocalIterator` — the driver holds one trace at a time. A single
+  *    `toLocalIterator` — the driver holds one trace at a time — and
+  *    publishes it with an atomic rename. A single
   *    XES file is inherently a single-writer bottleneck; at cluster
   *    scale use `writeShards`, which writes one self-contained XES file
   *    per partition with no driver involvement at all.
@@ -146,19 +148,28 @@ object XesWriter {
     * when the input has no rows — the caller maps that to HTTP 204
     * (app.py:209-211; the reference's own `file_name is None` check was
     * on the wrong variable, SURVEY §2.8.4 — this is the intended
-    * behavior). Traces stream through the driver one at a time.
+    * behavior). Traces stream through the driver one at a time into a
+    * uniquely named sibling of `path`, which is then renamed onto `path`
+    * in one atomic step: a reader of `path` sees either the previous
+    * complete file or the new complete one, never a partial write, and
+    * a write that fails leaves `path` untouched and no sibling behind.
     */
   def write(df: DataFrame, path: Path, caseCol: String = DefaultCaseCol,
             tsCol: String = DefaultTsCol, tieCols: Seq[String] = Nil): Option[Path] = {
     val it = traceXml(df, caseCol, tsCol, tieCols).toLocalIterator()
     if (!it.hasNext) return None
-    Option(path.getParent).foreach(Files.createDirectories(_))
-    val w = Files.newBufferedWriter(path, StandardCharsets.UTF_8)
+    val dir = path.toAbsolutePath.getParent
+    Files.createDirectories(dir)
+    val tmp = dir.resolve(s".${path.getFileName}.${UUID.randomUUID()}.tmp")
     try {
-      w.write(Header)
-      while (it.hasNext) { w.write(it.next()._2); w.write("\n") }
-      w.write(Footer)
-    } finally w.close()
+      val w = Files.newBufferedWriter(tmp, StandardCharsets.UTF_8, StandardOpenOption.CREATE_NEW)
+      try {
+        w.write(Header)
+        while (it.hasNext) { w.write(it.next()._2); w.write("\n") }
+        w.write(Footer)
+      } finally w.close()
+      Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE)
+    } finally Files.deleteIfExists(tmp) // a no-op once the move has happened
     Some(path)
   }
 

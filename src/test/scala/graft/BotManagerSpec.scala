@@ -13,8 +13,8 @@ import graft.api.ResultCache
 import graft.sources.BotManagerClient
 
 /** Closes the last untested reference paths: the bot-manager HTTP
-  * lookup (O-6) with its driver-side name filter (O-15), and the TTL
-  * cache eviction job (O-29).
+  * lookup (O-6) with its driver-side name filter (O-15), and the cache
+  * TTL (O-29), both at lookup and in the explicit sweep.
   */
 class BotManagerSpec extends AnyFunSuite {
 
@@ -68,5 +68,20 @@ class BotManagerSpec extends AnyFunSuite {
     assert(evicted == 1)
     assert(!Files.exists(old))
     assert(Files.exists(fresh))
+  }
+
+  test("ResultCache lookup: an entry older than the TTL is a miss and is deleted") {
+    val dir = Files.createTempDirectory("ttl-lookup")
+    dir.toFile.deleteOnExit()
+    val cache = new ResultCache(dir, ttlSeconds = 60)
+    val stale = cache.pathFor("stale")
+    Files.writeString(stale, "<log/>")
+    Files.setLastModifiedTime(stale,
+      FileTime.fromMillis(System.currentTimeMillis() - 120 * 1000))
+    Files.writeString(cache.pathFor("fresh"), "<log/>")
+    assert(cache.lookup("stale").isEmpty)
+    assert(!Files.exists(stale))
+    assert(cache.lookup("fresh").contains(cache.pathFor("fresh")))
+    assert(cache.lookup("absent").isEmpty)
   }
 }

@@ -7,14 +7,16 @@ import java.sql.Timestamp
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
 import graft.api.{ResultCache, XesHttpServer}
+import graft.xes.XesWriter
 
 /** Curl-level integration gate for the three reference routes
   * (app.py:76,102,130): 200 with a parseable XES body, 204 on an empty
-  * result, 400 on client errors, and the bot route's id resolution.
+  * result, 400 on client errors, and the bot route's id resolution;
+  * plus concurrent identical requests and the server's shutdown.
   */
 class HttpServerSpec extends SparkSpec {
 
@@ -40,11 +42,13 @@ class HttpServerSpec extends SparkSpec {
 
   private val http = HttpClient.newHttpClient()
 
-  private def withServer[A](f: (XesHttpServer, Int) => A): A = {
+  private def withServer[A](f: (XesHttpServer, Int) => A): A = withServerOver(eventlog)(f)
+
+  private def withServerOver[A](el: DataFrame)(f: (XesHttpServer, Int) => A): A = {
     val dir = Files.createTempDirectory("http-xes")
     dir.toFile.deleteOnExit()
     val srv = new XesHttpServer(
-      () => eventlog, new ResultCache(dir, ttlSeconds = 3600),
+      () => el, new ResultCache(dir, ttlSeconds = 3600),
       resolveBotIds = (url, bot) => if (bot == "sam") Seq("r1", "r2") else Nil)
     val port = srv.start()
     try f(srv, port) finally srv.stop()
@@ -104,7 +108,7 @@ class HttpServerSpec extends SparkSpec {
     }
   }
 
-  test("internal failures surface as 500 with the message, not a hung request") {
+  test("internal failures surface as 500 with a fixed body, not a hung request") {
     val dir = Files.createTempDirectory("http-500")
     dir.toFile.deleteOnExit()
     val srv = new XesHttpServer(
@@ -114,7 +118,7 @@ class HttpServerSpec extends SparkSpec {
     try {
       val r = get(port, "/resource/r1")
       assert(r.statusCode() == 500)
-      assert(r.body().contains("source exploded"))
+      assert(!r.body().contains("source exploded")) // logged, not sent
     } finally srv.stop()
   }
 
@@ -161,5 +165,47 @@ class HttpServerSpec extends SparkSpec {
       val fresh = get(port, "/resource/r1?use_cache=false")
       assert(fresh.statusCode() == 200 && fresh.body() == first.body())
     }
+  }
+
+  test("concurrent identical regenerations all serve the same complete document") {
+    // big enough (about 2.5 MB of XES) that a reader racing an in-place
+    // write would see a cut file
+    import org.apache.spark.sql.functions.{col, concat, lit, timestamp_seconds}
+    import java.util.concurrent.{Executors, TimeUnit}
+    val big = spark.range(10000).select(
+      lit("SERVICE_CUSTOM_MESSAGE_1").as("EVENT_TYPE"),
+      concat(lit("case"), (col("id") % 1000).cast("string")).as("CASE_ID"),
+      concat(lit("act"), col("id").cast("string")).as("ACTIVITY_NAME"),
+      timestamp_seconds(lit(1704067200L) + col("id")).as("TIME_STAMP"),
+      lit("complete").as("LIFECYCLE_PHASE"),
+      lit("big").as("RESOURCE"),
+      lit("user").as("RESOURCE_TYPE"),
+      lit(null).cast("string").as("REMARKS"))
+    withServerOver(big) { (_, port) =>
+      val exec = Executors.newFixedThreadPool(4)
+      try {
+        var first: String = null
+        for (_ <- 1 to 5) {
+          val round = (1 to 4).map(_ => exec.submit(() => get(port, "/resource/big?use_cache=false")))
+          round.map(_.get(120, TimeUnit.SECONDS)).foreach { r =>
+            assert(r.statusCode() == 200)
+            val body = r.body()
+            if (first == null) first = body
+            // a plain Boolean, so that a failure does not print megabytes
+            val same = body.endsWith(XesWriter.Footer) && body == first
+            assert(same, s"a body of ${body.length} chars is cut or differs from the first (${first.length})")
+          }
+        }
+        assert(parseTraces(first) == 1000)
+      } finally exec.shutdown()
+    }
+  }
+
+  test("stop() shuts down the request threads") {
+    withServer { (_, port) => assert(get(port, "/resource/r1").statusCode() == 200) }
+    def alive = Thread.getAllStackTraces.keySet.asScala.exists(_.getName == "graft-http")
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (alive && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(!alive)
   }
 }
