@@ -3,9 +3,13 @@ package graft.api
 import java.nio.file.{Files, NoSuchFileException, Path}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.util.{DateTimeUtils, LegacyDateFormats, TimestampFormatter}
+import org.apache.spark.sql.functions.{date_format, max, min}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{BooleanType, StringType, StructField, StructType}
 
 import graft.operators.EventOps
+import graft.xes.XesWriter
 
 /** The reference's library surface (`generate_eventlog`,
   * event_reader.py:7-45) re-expressed as one declarative DataFrame
@@ -100,36 +104,60 @@ object EventLogGenerator {
     * is a no-op, so the shared cache entry is byte-identical for both.
     * Divergence from the reference, documented: the reference's
     * route-level cache probe uses the raw (None) dates so a dateless
-    * request can never hit the entry its own generation wrote. The
-    * min/max probe is one cheap aggregate-only job; it doubles as the
-    * emptiness check (null min = no rows).
+    * request can never hit the entry its own generation wrote.
+    *
+    * One query per generation: the writer folds the min/max timestamp
+    * while it drains the traces, and the file is keyed and published
+    * after the drain. Only a cache lookup with a date missing needs the
+    * key first; it runs a min/max aggregate before the lookup, and a miss
+    * then writes through the same path. No rows, or no non-null
+    * timestamp when a bound is missing, gives None.
     */
   def generateXes(eventlog: DataFrame, params: Params, cache: ResultCache,
                   inferRemarksSchema: Boolean = false,
                   useCache: Boolean = true): Option[Path] = {
     val df = generate(eventlog, params, inferRemarksSchema)
-    val resolved =
-      if (params.startDate.isDefined && params.endDate.isDefined) Some(params)
-      else {
-        val row = df.agg(
-          org.apache.spark.sql.functions.date_format(
-            org.apache.spark.sql.functions.min(df("time:timestamp")), "yyyy-MM-dd HH:mm:ss.SSSSSS"),
-          org.apache.spark.sql.functions.date_format(
-            org.apache.spark.sql.functions.max(df("time:timestamp")), "yyyy-MM-dd HH:mm:ss.SSSSSS")).head()
-        if (row.isNullAt(0)) None // empty input → 204 intent
-        else Some(params.copy(
-          startDate = params.startDate.orElse(Some(row.getString(0))),
-          endDate = params.endDate.orElse(Some(row.getString(1)))))
-      }
-    resolved.flatMap { p =>
-      val key = cacheKey(p)
-      // explicit opt-in probe (the reference's `use_cache` flag was dead
-      // code, SURVEY §2.8.2); a regeneration still lands on the keyed
-      // path, published atomically, so later cached requests see the
-      // fresh artifact and a concurrent reader never sees a partial one
-      val hit = if (useCache) cache.lookup(key) else None
-      hit.orElse {
-        graft.xes.XesWriter.write(df, cache.pathFor(key))
+    // explicit opt-in probe (the reference's `use_cache` flag was dead
+    // code, SURVEY §2.8.2); a regeneration still lands on the keyed
+    // path, published atomically, so later cached requests see the
+    // fresh artifact and a concurrent reader never sees a partial one
+    if (!useCache) publishKeyed(df, params, cache)
+    else {
+      val known =
+        if (params.startDate.isDefined && params.endDate.isDefined) Some(params)
+        else probeDates(df, params)
+      known.flatMap(p => cache.lookup(cacheKey(p)).orElse(publishKeyed(df, p, cache)))
+    }
+  }
+
+  private val BoundFormat = "yyyy-MM-dd HH:mm:ss.SSSSSS"
+
+  /** `params` with each missing date taken from the data's min/max
+    * timestamp, by a separate aggregate; None when there is none.
+    */
+  private def probeDates(df: DataFrame, params: Params): Option[Params] = {
+    val ts = df("time:timestamp")
+    val row = df.agg(date_format(min(ts), BoundFormat), date_format(max(ts), BoundFormat)).head()
+    if (row.isNullAt(0)) None
+    else Some(params.copy(
+      startDate = params.startDate.orElse(Some(row.getString(0))),
+      endDate = params.endDate.orElse(Some(row.getString(1)))))
+  }
+
+  /** Writes `df` and publishes it on the key of `params`, with each
+    * missing date taken from the bounds the write folded. The bounds are
+    * formatted as `date_format(·, BoundFormat)` formats them in the
+    * session time zone, so the key equals the one `probeDates` gives.
+    */
+  private def publishKeyed(df: DataFrame, params: Params, cache: ResultCache): Option[Path] = {
+    val zone = DateTimeUtils.getZoneId(df.sparkSession.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key))
+    val fmt = TimestampFormatter(BoundFormat, zone, LegacyDateFormats.SIMPLE_DATE_FORMAT,
+      isParsing = false)
+    XesWriter.publish(df, cache.dir) { bounds =>
+      bounds.map { case (lo, hi) =>
+        cache.pathFor(cacheKey(params.copy(
+          startDate = params.startDate.orElse(Some(fmt.format(lo))),
+          endDate = params.endDate.orElse(Some(fmt.format(hi))))))
       }
     }
   }
@@ -167,12 +195,14 @@ object EventLogGenerator {
 /** Parameter-keyed result cache with a TTL (O-5 + O-29). Explicit
   * opt-in per call (the reference's `use_cache` flag was dead code —
   * SURVEY §2.8.2). `lookup` enforces the TTL itself: an entry older than
-  * `ttlSeconds` reads as a miss and is deleted, so no background thread
-  * is needed. `evictExpired` is the explicit whole-directory sweep.
-  * Entries are published atomically by `XesWriter.write`, so a reader
-  * only ever sees a complete file.
+  * `ttlSeconds` reads as a miss, so no background thread is needed. It
+  * leaves the entry in place: the regeneration that follows a miss
+  * replaces it by rename, and deleting it here could unlink a fresh file
+  * a concurrent regeneration has just published. `evictExpired` is the
+  * explicit whole-directory sweep. Entries are published atomically by
+  * `XesWriter`, so a reader only ever sees a complete file.
   */
-final class ResultCache(dir: Path, ttlSeconds: Long = 60) {
+final class ResultCache(val dir: Path, ttlSeconds: Long = 60) {
   Files.createDirectories(dir)
   private val ttlMillis = ttlSeconds * 1000
 
@@ -180,9 +210,7 @@ final class ResultCache(dir: Path, ttlSeconds: Long = 60) {
 
   def lookup(key: String, ext: String = "xes"): Option[Path] = {
     val p = pathFor(key, ext)
-    age(p).flatMap { a =>
-      if (a <= ttlMillis) Some(p) else { Files.deleteIfExists(p); None }
-    }
+    age(p).filter(_ <= ttlMillis).map(_ => p)
   }
 
   def evictExpired(): Int = {

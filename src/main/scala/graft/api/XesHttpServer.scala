@@ -68,44 +68,66 @@ final class XesHttpServer(
   def start(): Int = { server.start(); server.getAddress.getPort }
   def stop(): Unit = { server.stop(0); executor.shutdown() }
 
+  /** Routes one request and logs one INFO line for it, whatever the
+    * outcome: `method= route= ids= use_cache= status= bytes= ms=`.
+    */
   private def handle(ex: HttpExchange): Unit = {
+    val t0 = System.nanoTime()
+    val method = ex.getRequestMethod
+    val segments = ex.getRequestURI.getPath.stripSuffix("/").split("/").drop(1).toList
+    var ids = 0
+    var useCache = false
+    var bytes = 0L
+    def generate(requested: Seq[String], q: Map[String, String]): Long = {
+      ids = requested.size
+      useCache = flag(q, "use_cache")
+      generateAndReply(ex, requested, q, useCache)
+    }
     try {
-      val path = ex.getRequestURI.getPath.stripSuffix("/")
-      val method = ex.getRequestMethod
-      (method, path.split("/").drop(1).toList) match {
+      bytes = (method, segments) match {
         case ("GET", "resource" :: id :: Nil) if id.nonEmpty =>
-          generateAndReply(ex, Seq(id), query(ex))
+          generate(Seq(id), query(ex))
         case ("POST", "resources" :: Nil) =>
           val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
           val fields = MiniJson.parseObject(body)
-          val ids = fields.get("resource_ids") match {
+          val requested = fields.get("resource_ids") match {
             case Some(MiniJson.JArr(items)) =>
               items.collect { case MiniJson.JStr(s) => s }
             case _ => throw BadRequest("body must contain resource_ids: [string, ...]")
           }
-          if (ids.isEmpty) throw BadRequest("resource_ids is empty")
-          generateAndReply(ex, ids, query(ex))
+          if (requested.isEmpty) throw BadRequest("resource_ids is empty")
+          generate(requested, query(ex))
         case ("GET", "bot" :: botName :: Nil) if botName.nonEmpty =>
           val q = query(ex)
           val url = q.getOrElse("bot-manager-url",
             throw BadRequest("bot-manager-url parameter is required"))
-          val ids = resolveBotIds(url, botName)
-          if (ids.isEmpty) throw BadRequest(s"no resources found for bot $botName")
-          generateAndReply(ex, ids, q)
+          val requested = resolveBotIds(url, botName)
+          if (requested.isEmpty) throw BadRequest(s"no resources found for bot $botName")
+          generate(requested, q)
         case _ =>
           respond(ex, 404, "not found")
       }
     } catch {
-      case BadRequest(msg)                => respond(ex, 400, msg)
-      case e: IllegalArgumentException    => respond(ex, 400, String.valueOf(e.getMessage))
+      case BadRequest(msg)                => bytes = respond(ex, 400, msg)
+      case e: IllegalArgumentException    => bytes = respond(ex, 400, String.valueOf(e.getMessage))
       case e: Throwable =>
-        log.error(s"${ex.getRequestMethod} ${ex.getRequestURI} failed", e)
-        respond(ex, 500, "internal error")
-    } finally ex.close()
+        log.error(s"$method ${ex.getRequestURI} failed", e)
+        bytes = respond(ex, 500, "internal error")
+    } finally {
+      ex.close()
+      // the route is one of the known names, never client text, so the
+      // line stays one line of key=value pairs
+      val route = segments.headOption.filter(Routes).getOrElse("other")
+      log.info(f"method=$method route=$route ids=$ids use_cache=$useCache " +
+        f"status=${ex.getResponseCode} bytes=$bytes ms=${(System.nanoTime() - t0) / 1e6}%.1f")
+    }
   }
 
+  private val Routes = Set("resource", "resources", "bot")
+
+  /** Generates the log for `ids` and sends it; returns the body's size. */
   private def generateAndReply(ex: HttpExchange, ids: Seq[String],
-                               q: Map[String, String]): Unit = {
+                               q: Map[String, String], useCache: Boolean): Long = {
     val params = EventLogGenerator.Params(
       resourceIds = ids,
       startDate = q.get("start_date").filter(_.nonEmpty),
@@ -125,8 +147,7 @@ final class XesHttpServer(
     val sc = df.sparkSession.sparkContext
     sc.setLocalProperty("spark.scheduler.pool", s"graft-req-${Thread.currentThread().getId}")
     try {
-      EventLogGenerator.generateXes(df, params, cache,
-          useCache = flag(q, "use_cache")) match {
+      EventLogGenerator.generateXes(df, params, cache, useCache = useCache) match {
         case Some(path) => respondFile(ex, path)
         case None       => respond(ex, 204, "")
       }
@@ -154,7 +175,8 @@ final class XesHttpServer(
   private def decode(s: String): String =
     java.net.URLDecoder.decode(s, StandardCharsets.UTF_8)
 
-  private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
+  /** Sends `body` with status `code`; returns the body's size. */
+  private def respond(ex: HttpExchange, code: Int, body: String): Long = {
     val bytes = body.getBytes(StandardCharsets.UTF_8)
     if (code == 204) ex.sendResponseHeaders(204, -1)
     else {
@@ -162,13 +184,15 @@ final class XesHttpServer(
       ex.sendResponseHeaders(code, if (bytes.isEmpty) -1 else bytes.length)
       if (bytes.nonEmpty) ex.getResponseBody.write(bytes)
     }
+    bytes.length
   }
 
   /** Streams the file from one open channel. A published file is never
     * written again (a newer one replaces it by rename, an eviction only
     * unlinks it), so once it is open the whole body is sent as it was.
+    * Returns the bytes sent.
     */
-  private def respondFile(ex: HttpExchange, path: Path): Unit = {
+  private def respondFile(ex: HttpExchange, path: Path): Long = {
     val ch = FileChannel.open(path)
     try {
       ex.getResponseHeaders.add("Content-Type", "application/xml; charset=utf-8")

@@ -6,7 +6,8 @@ import java.time.ZoneOffset
 import java.time.format.DateTimeFormatter
 import java.util.UUID
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
@@ -29,7 +30,10 @@ import org.apache.spark.sql.types._
   *    upstream pipeline already filters them (O-8, event_reader.py:59).
   *  - `write` produces the reference's single-file artifact by streaming
   *    `toLocalIterator` — the driver holds one trace at a time — and
-  *    publishes it with an atomic rename. A single
+  *    publishes it with an atomic rename. Each trace also carries the
+  *    min and max of its timestamps, which the driver folds as it writes,
+  *    so a caller can name the file after the data's date range without
+  *    a second query. A single
   *    XES file is inherently a single-writer bottleneck; at cluster
   *    scale use `writeShards`, which writes one self-contained XES file
   *    per partition with no driver involvement at all.
@@ -100,9 +104,23 @@ object XesWriter {
     */
   def traceXml(df: DataFrame, caseCol: String = DefaultCaseCol,
                tsCol: String = DefaultTsCol,
-               tieCols: Seq[String] = Nil): Dataset[(String, String)] = {
+               tieCols: Seq[String] = Nil): Dataset[(String, String)] =
+    assemble(df, caseCol, tsCol, tieCols)(_.map(t => (t._1, t._2)))(
+      Encoders.tuple(Encoders.STRING, Encoders.STRING))
+
+  /** Trace assembly, shared by `traceXml` and `publish`: the rows of
+    * each case as (caseId, `<trace>…</trace>`, min, max), where min and
+    * max are the trace's `tsCol` bounds in Spark microseconds, or
+    * (Long.MaxValue, Long.MinValue) when it has no non-null timestamp.
+    * `out` maps each partition's traces to the rows wanted.
+    */
+  private def assemble[T](df: DataFrame, caseCol: String, tsCol: String, tieCols: Seq[String])(
+      out: Iterator[(String, String, Long, Long)] => Iterator[T])(enc: Encoder[T]): Dataset[T] = {
     val schema = df.schema
     val caseIdx = schema.fieldIndex(caseCol)
+    // bounds are tracked for a timestamp column only; any other type
+    // leaves every trace unbounded
+    val tsIdx = if (schema(tsCol).dataType == TimestampType) schema.fieldIndex(tsCol) else -1
     val eventFields: Array[(String, DataType, Int)] =
       schema.fields.zipWithIndex.collect {
         case (f, i) if f.name != caseCol => (f.name, f.dataType, i)
@@ -122,26 +140,36 @@ object XesWriter {
         }
         sb.append("</event>\n")
       }
-      new Iterator[(String, String)] {
+      out(new Iterator[(String, String, Long, Long)] {
         // skip null-case rows (upstream normally filtered them, O-8)
         private def skipNullCase(): Unit =
           while (in.hasNext && in.head.isNullAt(caseIdx)) in.next()
         override def hasNext: Boolean = { skipNullCase(); in.hasNext }
-        override def next(): (String, String) = {
+        override def next(): (String, String, Long, Long) = {
           skipNullCase()
           val caseId = String.valueOf(in.head.get(caseIdx))
           val sb = new StringBuilder(256)
           sb.append("<trace>\n")
           sb.append(s"""<string key="concept:name" value="${escape(caseId)}"/>""").append('\n')
+          // the trace's rows are sorted by timestamp, so its first and last
+          // non-null timestamps are its bounds
+          var first, last: java.sql.Timestamp = null
           while (in.hasNext && !in.head.isNullAt(caseIdx) &&
                  String.valueOf(in.head.get(caseIdx)) == caseId) {
-            renderEvent(in.next(), sb)
+            val r = in.next()
+            if (tsIdx >= 0 && !r.isNullAt(tsIdx)) {
+              last = r.getAs[java.sql.Timestamp](tsIdx)
+              if (first == null) first = last
+            }
+            renderEvent(r, sb)
           }
           sb.append("</trace>")
-          (caseId, sb.toString)
+          if (first == null) (caseId, sb.toString, Long.MaxValue, Long.MinValue)
+          else (caseId, sb.toString, DateTimeUtils.fromJavaTimestamp(first),
+                DateTimeUtils.fromJavaTimestamp(last))
         }
-      }
-    }(Encoders.tuple(Encoders.STRING, Encoders.STRING))
+      })
+    }(enc)
   }
 
   /** Single-file XES artifact (the reference's product). Returns None
@@ -149,28 +177,50 @@ object XesWriter {
     * (app.py:209-211; the reference's own `file_name is None` check was
     * on the wrong variable, SURVEY §2.8.4 — this is the intended
     * behavior). Traces stream through the driver one at a time into a
-    * uniquely named sibling of `path`, which is then renamed onto `path`
-    * in one atomic step: a reader of `path` sees either the previous
-    * complete file or the new complete one, never a partial write, and
-    * a write that fails leaves `path` untouched and no sibling behind.
+    * uniquely named file in `path`'s directory, which is then renamed
+    * onto `path` in one atomic step: a reader of `path` sees either the
+    * previous complete file or the new complete one, never a partial
+    * write, and a write that fails leaves `path` untouched and no temp
+    * file behind.
     */
   def write(df: DataFrame, path: Path, caseCol: String = DefaultCaseCol,
-            tsCol: String = DefaultTsCol, tieCols: Seq[String] = Nil): Option[Path] = {
-    val it = traceXml(df, caseCol, tsCol, tieCols).toLocalIterator()
+            tsCol: String = DefaultTsCol, tieCols: Seq[String] = Nil): Option[Path] =
+    publish(df, path.toAbsolutePath.getParent, caseCol, tsCol, tieCols)(_ => Some(path))
+
+  /** `write` for a target that depends on the data: after the last trace
+    * is written, `target` gets the min and max `tsCol` value over all
+    * rows written (Spark microseconds; None when every one was null) and
+    * names the file in `dir` to publish onto, or None to publish nothing.
+    * Returns None, with no file left behind, when the input has no rows
+    * or `target` gives None.
+    */
+  private[graft] def publish(df: DataFrame, dir: Path, caseCol: String = DefaultCaseCol,
+                             tsCol: String = DefaultTsCol, tieCols: Seq[String] = Nil)(
+      target: Option[(Long, Long)] => Option[Path]): Option[Path] = {
+    val it = assemble(df, caseCol, tsCol, tieCols)(identity)(
+      Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.scalaLong, Encoders.scalaLong))
+      .toLocalIterator()
     if (!it.hasNext) return None
-    val dir = path.toAbsolutePath.getParent
     Files.createDirectories(dir)
-    val tmp = dir.resolve(s".${path.getFileName}.${UUID.randomUUID()}.tmp")
+    val tmp = dir.resolve(s".${UUID.randomUUID()}.tmp")
     try {
+      var lo = Long.MaxValue
+      var hi = Long.MinValue
       val w = Files.newBufferedWriter(tmp, StandardCharsets.UTF_8, StandardOpenOption.CREATE_NEW)
       try {
         w.write(Header)
-        while (it.hasNext) { w.write(it.next()._2); w.write("\n") }
+        while (it.hasNext) {
+          val t = it.next()
+          w.write(t._2); w.write("\n")
+          if (t._3 < lo) lo = t._3
+          if (t._4 > hi) hi = t._4
+        }
         w.write(Footer)
       } finally w.close()
-      Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE)
+      target(if (lo <= hi) Some((lo, hi)) else None).map { path =>
+        Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE)
+      }
     } finally Files.deleteIfExists(tmp) // a no-op once the move has happened
-    Some(path)
   }
 
   /** Scale path: fully distributed sink — every partition writes one

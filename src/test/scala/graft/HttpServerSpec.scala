@@ -122,6 +122,64 @@ class HttpServerSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  test("every request logs exactly one key=value line with its status") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val lines = new ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("request-lines", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.INFO) lines.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger(classOf[XesHttpServer]).asInstanceOf[Logger]
+    val level = logger.getLevel
+    logger.addAppender(appender)
+    logger.setLevel(Level.INFO)
+    // the line is written after the response is sent, so wait for it
+    def linesOf(send: => Int): (Int, Seq[String]) = {
+      val before = lines.size
+      val status = send
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (lines.size == before && System.nanoTime() < deadline) Thread.sleep(20)
+      Thread.sleep(200) // a second line, if there were one, would show by now
+      (status, lines.asScala.toSeq.drop(before))
+    }
+    try {
+      val seen = withServer { (_, port) =>
+        Seq(
+          linesOf(get(port, "/resource/r1?use_cache=true").statusCode()),
+          linesOf(get(port, "/resource/nobody").statusCode()),
+          linesOf(post(port, "/resources", """{"resource_ids": ["r1", "r2"]}""").statusCode()),
+          linesOf(get(port, "/resource/r1?include_bot_messages=yes").statusCode()))
+      }
+      val dir = Files.createTempDirectory("http-log-500")
+      dir.toFile.deleteOnExit()
+      val failing = new XesHttpServer(
+        () => throw new RuntimeException("source exploded"), new ResultCache(dir, ttlSeconds = 3600))
+      val port = failing.start()
+      val crashed = try linesOf(get(port, "/resource/r1").statusCode()) finally failing.stop()
+
+      assert((seen :+ crashed).map(_._1) == Seq(200, 204, 200, 400, 500))
+      for ((status, ls) <- seen :+ crashed) {
+        assert(ls.size == 1, s"status $status logged $ls")
+        assert(ls.head.startsWith("method=") && ls.head.contains(s" status=$status "), ls.head)
+      }
+      val first = seen.head._2.head
+      assert(first.contains("method=GET route=resource ids=1 use_cache=true status=200 bytes="), first)
+      assert(seen(2)._2.head.contains("method=POST route=resources ids=2 use_cache=false"))
+      val bytes = """ bytes=(\d+) ms=\d+\.\d$""".r
+      assert(bytes.findFirstMatchIn(first).exists(_.group(1).toLong > 0), first)
+      assert(bytes.findFirstMatchIn(seen(1)._2.head).exists(_.group(1) == "0"))
+    } finally {
+      logger.removeAppender(appender)
+      logger.setLevel(level)
+      appender.stop()
+    }
+  }
+
   test("concurrent requests run in distinct fair-scheduler pools and both complete") {
     // deterministic gate for the starvation fix: a SparkListener records
     // which pool each job ran in; two concurrent requests must land in

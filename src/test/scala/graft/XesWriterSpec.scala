@@ -188,6 +188,129 @@ class XesWriterSpec extends SparkSpec {
     assert(EventLogGenerator.generateXes(el, Params(resourceIds = Seq("rX")), cache).isEmpty)
   }
 
+  /** Two resources over several cases, with microsecond timestamps whose
+    * min and max fall in different cases and resources.
+    */
+  private lazy val dated = eventlog(
+    for {
+      (r, c, t) <- Seq(
+        ("r1", "c1", "2024-01-01 09:00:00.000001"), ("r1", "c1", "2024-01-01 09:00:05.5"),
+        ("r1", "c2", "2024-01-02 10:15:00.25"), ("r1", "c3", "2024-01-03 23:59:59.999999"),
+        ("r2", "c4", "2023-12-31 23:00:00.000123"), ("r2", "c4", "2024-01-02 08:00:00.0"),
+        ("r2", "c5", "2024-01-04 12:34:56.789"))
+    } yield Row("SERVICE_CUSTOM_MESSAGE_1", c, s"act-$t", ts(t), "complete", r, "user", null))
+
+  /** `params` with each missing date taken from a separate min/max
+    * aggregate over the generated rows, formatted as `date_format` does.
+    */
+  private def probed(el: DataFrame, params: Params): Params = {
+    import org.apache.spark.sql.functions.{date_format, max, min}
+    val df = EventLogGenerator.generate(el, params)
+    val fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
+    val row = df.agg(date_format(min(df("time:timestamp")), fmt),
+      date_format(max(df("time:timestamp")), fmt)).head()
+    params.copy(
+      startDate = params.startDate.orElse(Some(row.getString(0))),
+      endDate = params.endDate.orElse(Some(row.getString(1))))
+  }
+
+  private def withSessionZone[A](zone: String)(body: => A): A = {
+    val key = "spark.sql.session.timeZone"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, zone)
+    try body finally spark.conf.set(key, before)
+  }
+
+  test("generateXes without dates keys the file by the data's bounds, as a min/max probe would") {
+    // a session zone off UTC, so that the bounds must be formatted in it
+    for (zone <- Seq("UTC", "America/Los_Angeles"); ids <- Seq(Seq("r1"), Seq("r1", "r2")))
+      withSessionZone(zone) {
+        val cache = new ResultCache(tmpDir("xes-fold"), ttlSeconds = 3600)
+        val params = Params(resourceIds = ids)
+        val explicit = probed(dated, params)
+        val key = EventLogGenerator.cacheKey(explicit)
+        val path = EventLogGenerator.generateXes(dated, params, cache, useCache = false)
+        assert(path.contains(cache.pathFor(key)), s"zone $zone, ids $ids")
+        val bytes = Files.readAllBytes(path.get)
+
+        // the explicit-date twin publishes the same bytes on the same key
+        val twinCache = new ResultCache(tmpDir("xes-twin"), ttlSeconds = 3600)
+        val twin = EventLogGenerator.generateXes(dated, explicit, twinCache, useCache = false)
+        assert(twin.contains(twinCache.pathFor(key)))
+        assert(java.util.Arrays.equals(Files.readAllBytes(twin.get), bytes))
+
+        // and a dateless cached request is a hit on the file it wrote
+        val mtime = java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 5000)
+        Files.setLastModifiedTime(path.get, mtime)
+        assert(EventLogGenerator.generateXes(dated, params, cache).contains(path.get))
+        assert(Files.getLastModifiedTime(path.get) == mtime)
+      }
+  }
+
+  test("generateXes with one date takes only the missing bound from the data") {
+    val cache = new ResultCache(tmpDir("xes-half"), ttlSeconds = 3600)
+    val startOnly = Params(resourceIds = Seq("r1", "r2"), startDate = Some("2024-01-02 00:00:00"))
+    val endOnly = Params(resourceIds = Seq("r1", "r2"), endDate = Some("2024-01-02 12:00:00"))
+    for (params <- Seq(startOnly, endOnly)) {
+      val key = EventLogGenerator.cacheKey(probed(dated, params))
+      assert(EventLogGenerator.generateXes(dated, params, cache, useCache = false)
+        .contains(cache.pathFor(key)))
+    }
+    // the given bound is kept as sent, not replaced by the data's
+    assert(probed(dated, startOnly) == startOnly.copy(endDate = Some("2024-01-04 12:34:56.789000")))
+    assert(probed(dated, endOnly) == endOnly.copy(startDate = Some("2023-12-31 23:00:00.000123")))
+  }
+
+  test("generateXes over rows whose timestamps are all null returns None and leaves no file") {
+    val el = eventlog(Seq("c1", "c2").map(c =>
+      Row("SERVICE_CUSTOM_MESSAGE_1", c, "hello", null, "complete", "r1", "user", null)))
+    for (useCache <- Seq(false, true)) {
+      val dir = tmpDir("xes-nullts")
+      val cache = new ResultCache(dir, ttlSeconds = 3600)
+      assert(EventLogGenerator.generateXes(el, Params(resourceIds = Seq("r1")), cache,
+        useCache = useCache).isEmpty)
+      assert(Files.list(dir).iterator().asScala.isEmpty, s"use_cache=$useCache")
+    }
+  }
+
+  test("a dateless uncached generateXes runs no more Spark jobs than draining its traces") {
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val groups = new ConcurrentLinkedQueue[String]()
+    val done = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(ps => Option(ps.getProperty("spark.jobGroup.id")))
+          .foreach(groups.add)
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
+        if (groups.contains("marker")) done.countDown()
+    }
+    val sc = spark.sparkContext
+    val params = Params(resourceIds = Seq("r1", "r2"))
+    val cache = new ResultCache(tmpDir("xes-jobs"), ttlSeconds = 3600)
+    def inGroup(g: String)(body: => Unit): Unit = {
+      sc.setJobGroup(g, g, interruptOnCancel = false)
+      try body finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      inGroup("drain") {
+        val it = XesWriter.traceXml(EventLogGenerator.generate(dated, params)).toLocalIterator()
+        while (it.hasNext) it.next()
+      }
+      inGroup("generateXes") {
+        assert(EventLogGenerator.generateXes(dated, params, cache, useCache = false).isDefined)
+      }
+      // listener events arrive in order: once the marker job has ended,
+      // every job before it has been counted
+      inGroup("marker")(spark.range(1).count())
+      assert(done.await(30, TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    val counts = groups.asScala.toSeq.groupBy(identity).map { case (g, js) => g -> js.size }
+    assert(counts("drain") > 0)
+    assert(counts("generateXes") <= counts("drain"), s"jobs per group: $counts")
+  }
+
   test("writeShards: each shard is a self-contained XES document, traces partition-complete") {
     val rows = for {
       c <- Seq("s1", "s2", "s3", "s4", "s5"); i <- 1 to 3
