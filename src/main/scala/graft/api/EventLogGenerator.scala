@@ -206,10 +206,10 @@ final class ResultCache(val dir: Path, ttlSeconds: Long = 60) {
   Files.createDirectories(dir)
   private val ttlMillis = ttlSeconds * 1000
 
-  def pathFor(key: String, ext: String = "xes"): Path = dir.resolve(s"$key.$ext")
+  def pathFor(key: String): Path = dir.resolve(s"$key.xes")
 
-  def lookup(key: String, ext: String = "xes"): Option[Path] = {
-    val p = pathFor(key, ext)
+  def lookup(key: String): Option[Path] = {
+    val p = pathFor(key)
     age(p).filter(_ <= ttlMillis).map(_ => p)
   }
 

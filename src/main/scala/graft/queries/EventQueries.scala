@@ -238,7 +238,8 @@ object EventQueries {
 
     // XES round-trip (O-4's inverse): project events to an XES-shaped
     // frame, render through the REAL single-file writer, parse back
-    // through XesReader, and return the parsed rows. The oracle is the
+    // through XesReader.read (the `xes` DataSource V2 scan, the one read
+    // path), and return the parsed rows. The oracle is the
     // same projection straight off the table — lossless round-trip is
     // the claim (timestamps truncated to seconds: the XES date format
     // carries millisecond precision, the fixture carries micros).
@@ -259,9 +260,9 @@ object EventQueries {
         col("concept:name"), col("event_id"), col("value"))
     }),
 
-    // Same round-trip through the DataSource V2 provider — the
-    // column-pruning scan path (`spark.read.format("xes")`), proven
-    // equal to the raw table by the shared oracle.
+    // Same round-trip, read with `spark.read.format("xes")` directly:
+    // the same scan as q_xes_roundtrip, entered through the DataFrame
+    // reader, proven equal to the raw table by the shared oracle.
     "q_xes_dsv2" -> ((s, dir) => {
       import graft.xes.XesWriter
       val src = Tables.events(s, dir).select(

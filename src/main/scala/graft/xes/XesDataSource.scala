@@ -1,9 +1,12 @@
 package graft.xes
 
+import java.io.{FileNotFoundException, InputStream}
 import java.util.{Map => JMap}
 
+import scala.util.Using
+
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, PathFilter, Path => HPath}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -14,30 +17,37 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
-/** DataSource V2 provider for the XES XML format:
-  * `spark.read.format("xes").load(path)` (registered via
-  * META-INF/services, so the short name works without imports).
+/** DataSource V2 provider for the XES XML format, and graft's one XES
+  * read path: `spark.read.format("xes").load(path)` (registered via
+  * META-INF/services, so the short name works without imports);
+  * `XesReader.read` is this scan.
   *
-  * Why a V2 source on top of `XesReader.read`: the RDD reader
-  * materializes every attribute of every event no matter what the
-  * query needs. Here each shard file is one `InputPartition` (scan
-  * parallelism = shard count, same distribution story as the sharded
-  * writer), and the scan implements
-  * `SupportsPushDownRequiredColumns`, so `SELECT case, ts FROM xes`
-  * only converts the two requested attributes per event — on wide
-  * logs (the reference's dynamic JSON widening can add dozens of
-  * columns) that is the difference between parsing the XML once and
+  * `path` is a file, a directory of shards, or a glob. Listing follows
+  * Hadoop's input rule: a name starting with `_` or `.` is hidden and
+  * skipped, so `_SUCCESS` markers, `.crc` checksums and the
+  * half-written `.<uuid>.tmp` sibling `XesWriter.publish` leaves during
+  * a write are never parsed.
+  *
+  * Each listed file is one `InputPartition` (scan parallelism = shard
+  * count, same distribution story as the sharded writer), and the scan
+  * implements `SupportsPushDownRequiredColumns`, so `SELECT case, ts
+  * FROM xes` only converts the two requested attributes per event —
+  * on wide logs (the reference's dynamic JSON widening can add dozens
+  * of columns) that is the difference between parsing the XML once and
   * building every row twice as wide. XesDsv2Spec gates the pruned
   * `readSchema()` end-to-end.
   *
-  * Schema inference parses ONE file (first in listing order) by
-  * default — the writer's shards all share a schema. `inferAll=true`
-  * unions attribute keys across every file (two passes, like
-  * schema-less `spark.read.json`); conflicting tags widen to string,
-  * matching `XesReader`. Reference: the service serves whole .xes
-  * artifacts (app.py:230); consumers re-load them per analysis query,
-  * which is exactly when pruning pays.
+  * Without a user schema, the schema is inferred like schema-less
+  * `spark.read.json`: one distributed pass, one task per file, unions
+  * the (attribute key → XES tag) pairs of EVERY file, so the schema
+  * does not depend on how the log is split into files (the writer omits
+  * null attributes, so even its own shards need not share a key set).
+  * Type mapping (inverse of XesWriter's): date → timestamp, int → long,
+  * float → double, boolean → boolean, string → string; a key seen under
+  * conflicting tags widens to string with the raw attribute text.
+  * Column order: the case column, then attribute keys sorted.
   */
 class XesDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "xes"
@@ -46,8 +56,7 @@ class XesDataSource extends TableProvider with DataSourceRegister {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     XesDataSource.infer(
       options.get("path"),
-      options.getOrDefault("casecol", XesWriter.DefaultCaseCol),
-      options.getBoolean("inferall", false))
+      options.getOrDefault("casecol", XesWriter.DefaultCaseCol))
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: JMap[String, String]): Table =
@@ -57,39 +66,54 @@ class XesDataSource extends TableProvider with DataSourceRegister {
 
 object XesDataSource {
 
-  /** XES shard files under `path` (a file or a directory), skipping
-    * sidecars like _SUCCESS — same contract as `XesReader.read`.
+  private[xes] def hadoopConf: Configuration =
+    SparkSession.active.sparkContext.hadoopConfiguration
+
+  /** Hadoop's hidden-file rule, the one `FileInputFormat` applies. */
+  private val visible: PathFilter = p =>
+    !p.getName.startsWith("_") && !p.getName.startsWith(".")
+
+  /** The visible files `path` names: its glob matches, with each
+    * matched directory replaced by the files directly inside it,
+    * sorted. A path that matches nothing is a FileNotFoundException;
+    * an empty directory is an empty log.
     */
   private[xes] def listFiles(path: String): Seq[String] = {
     require(path != null, "xes source requires a path")
-    val conf = SparkSession.active.sparkContext.hadoopConfiguration
     val p = new HPath(path)
-    val fs = p.getFileSystem(conf)
-    val st = fs.getFileStatus(p)
-    val files =
-      if (st.isDirectory) fs.listStatus(p).toSeq.filter(_.isFile).map(_.getPath)
-      else Seq(p)
-    files.map(_.toString).sorted
-      .filterNot(f => f.endsWith("_SUCCESS") || f.endsWith(".crc"))
+    val fs = p.getFileSystem(hadoopConf)
+    val matched = Option(fs.globStatus(p, visible)).getOrElse(Array.empty[FileStatus])
+    if (matched.isEmpty) throw new FileNotFoundException(s"xes: no file matches $path")
+    matched.toSeq.flatMap { st =>
+      if (st.isDirectory) fs.listStatus(st.getPath, visible).toSeq.filter(_.isFile)
+      else Seq(st)
+    }.map(_.getPath.toString).sorted
   }
 
-  private[xes] def infer(path: String, caseCol: String, all: Boolean): StructType = {
-    val conf = SparkSession.active.sparkContext.hadoopConfiguration
+  private[xes] def open(file: String, conf: Configuration): InputStream = {
+    val p = new HPath(file)
+    p.getFileSystem(conf).open(p)
+  }
+
+  private def typeOf(tag: String): DataType = tag match {
+    case "date" => TimestampType
+    case "int" => LongType
+    case "float" => DoubleType
+    case "boolean" => BooleanType
+    case _ => StringType
+  }
+
+  private[xes] def infer(path: String, caseCol: String): StructType = {
     val files = listFiles(path)
-    // streaming parse (one trace in memory at a time), same iterator
-    // the scan uses; non-XES files yield no events via the root probe
-    val keyTags = (if (all) files else files.take(1))
-      .iterator
-      .flatMap { f =>
-        val p = new HPath(f)
-        XesReader.staxEvents(p.getFileSystem(conf).open(p))
-      }
-      .flatMap(_.attrs.map { case (k, (tag, _)) => (k, tag) })
-      .toSeq
-      .groupBy(_._1).map { case (k, ts) => k -> ts.map(_._2).toSet }
+    val conf = new SerializableConfiguration(hadoopConf)
+    // one task per file, each returning the file's distinct (key, tag) pairs
+    val keyTags: Map[String, Set[String]] = SparkSession.active.sparkContext
+      .parallelize(files, files.size max 1)
+      .map(f => Using.resource(open(f, conf.value))(in => XesReader.staxEvents(in)
+        .flatMap(_.attrs.iterator.map { case (k, (tag, _)) => (k, tag) }).toSet))
+      .collect().toSet.flatten.groupMap(_._1)(_._2)
     val fields = keyTags.toSeq.sortBy(_._1).map { case (k, tags) =>
-      StructField(k,
-        if (tags.size == 1) XesReader.typeOfTag(tags.head) else StringType)
+      StructField(k, if (tags.size == 1) typeOf(tags.head) else StringType)
     }
     StructType(StructField(caseCol, StringType) +: fields)
   }
@@ -121,7 +145,7 @@ private[xes] class XesScan(path: String, required: StructType, caseCol: String)
   override def planInputPartitions(): Array[InputPartition] =
     XesDataSource.listFiles(path).map(XesInputPartition).toArray
   override def createReaderFactory(): PartitionReaderFactory =
-    XesReaderFactory(required, caseCol)
+    XesReaderFactory(required, caseCol, new SerializableConfiguration(XesDataSource.hadoopConf))
   override def description(): String =
     s"XesScan path=$path cols=${required.fieldNames.mkString(",")}"
 }
@@ -131,20 +155,17 @@ private[xes] case class XesInputPartition(file: String) extends InputPartition
 /** Per-file reader: STREAMS the shard (StAX, one trace in memory at
   * a time — a multi-gigabyte single-shard log reads in constant
   * space), converting ONLY the pruned columns to InternalRow. Files
-  * open via a fresh Hadoop `Configuration()` on the executor
-  * (local/HDFS defaults); custom filesystems would thread the
-  * session conf through the factory.
+  * open with the session's Hadoop configuration, shipped in the
+  * factory.
   */
-private[xes] case class XesReaderFactory(required: StructType, caseCol: String)
+private[xes] case class XesReaderFactory(required: StructType, caseCol: String,
+                                         conf: SerializableConfiguration)
   extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val file = partition.asInstanceOf[XesInputPartition].file
     new PartitionReader[InternalRow] {
-      private val stream = {
-        val p = new HPath(file)
-        p.getFileSystem(new Configuration()).open(p)
-      }
+      private val stream = XesDataSource.open(file, conf.value)
       private val events: Iterator[XesReader.RawEvent] =
         XesReader.staxEvents(stream)
       private var row: InternalRow = _

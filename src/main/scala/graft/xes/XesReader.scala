@@ -1,7 +1,6 @@
 package graft.xes
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** XES XML source — the other half of the reference's artifact
   * lifecycle: the service SERVES .xes files (app.py:230) and its
@@ -10,21 +9,10 @@ import org.apache.spark.sql.types._
   * single-file and sharded outputs (and any XES whose attributes are
   * flat typed key/values) back into one row per event.
   *
-  * Spark-first shape: files parse DISTRIBUTED via `binaryFiles` —
-  * one task per shard file, so reading the sharded sink's output
-  * scales with executors (a single-file log is inherently one task,
-  * same note as the single-file writer) — and each file parses
-  * STREAMING (StAX, `staxEvents`), so executor memory is bounded by
-  * one trace rather than the whole document. Schema is inferred from
-  * the typed attribute tags in TWO passes over the files (exactly
-  * like `spark.read.json` without a user schema): pass 1 unions the
-  * (key → XES type) set; pass 2 parses rows into that fixed schema.
-  * A key observed under conflicting tags widens to string with the
-  * raw attribute text.
-  *
-  * Type mapping (inverse of XesWriter's): date → timestamp,
-  * int → long, float → double, boolean → boolean, string → string.
-  * The trace's own `concept:name` becomes the case column; an absent
+  * There is one read path, the `xes` DataSource V2 scan
+  * (`XesDataSource`): `read` is `spark.read.format("xes")`. This object
+  * holds the streaming parser that scan runs in every task. The
+  * trace's own `concept:name` becomes the case column; an absent
   * attribute is null (the writer omits null attributes symmetrically,
   * so write → read round-trips losslessly up to the date format's
   * millisecond precision — XesReaderSpec pins it, and the
@@ -42,8 +30,8 @@ object XesReader {
     * appear after its events, and every event of a trace carries that
     * one case id (a trace without one yields a null case id). A giant
     * single-shard log therefore never has to fit in an executor. A
-    * stream whose root element is not `<log>` (sidecars, _SUCCESS
-    * markers) yields no events. Malformed XML after a valid root
+    * stream whose root element is not `<log>` (a non-XES file among
+    * the shards) yields no events. Malformed XML after a valid root
     * throws. The input stream is closed when the document ends.
     *
     * Only DIRECT children are honored: events at trace depth,
@@ -135,62 +123,11 @@ object XesReader {
     }
   }
 
-  private[xes] def typeOfTag(tag: String): DataType = typeOf(tag)
-
-  private def typeOf(tag: String): DataType = tag match {
-    case "date" => TimestampType
-    case "int" => LongType
-    case "float" => DoubleType
-    case "boolean" => BooleanType
-    case _ => StringType
-  }
-
-  private def parseValue(dt: DataType, raw: String): Any = dt match {
-    case TimestampType =>
-      java.sql.Timestamp.from(java.time.OffsetDateTime.parse(raw).toInstant)
-    case LongType => java.lang.Long.valueOf(raw)
-    case DoubleType => java.lang.Double.valueOf(raw)
-    case BooleanType => java.lang.Boolean.valueOf(raw)
-    case _ => raw
-  }
-
   /** Read XES file(s) at `path` (a file, a sharded directory, or a
-    * glob) into an event DataFrame. Column order: the case column,
-    * then attribute keys sorted.
-    *
-    * One task per shard file (scan parallelism = shard count), each
-    * parsed STREAMING via `staxEvents` — per-executor memory is
-    * bounded by one trace, so a multi-gigabyte single-shard log reads
-    * in constant space instead of materializing the document twice
-    * (bytes + DOM) the way `wholeTextFiles` did. Sidecars skip via
-    * the iterator's root-element probe.
+    * glob) into an event DataFrame: the `xes` DataSource V2 scan
+    * (`XesDataSource`) with `caseCol` as the case column.
     */
   def read(spark: SparkSession, path: String,
-           caseCol: String = XesWriter.DefaultCaseCol): DataFrame = {
-    val events = spark.sparkContext.binaryFiles(path)
-      .flatMap { case (_, pds) => staxEvents(pds.open()) }
-    // pass 1: schema. A key under exactly one tag gets that tag's
-    // type; conflicting tags widen to string (raw text preserved).
-    val keyTags: Map[String, Set[String]] = events
-      .flatMap(_.attrs.map { case (k, (tag, _)) => (k, tag) })
-      .distinct().collect().groupBy(_._1).map { case (k, ts) => k -> ts.map(_._2).toSet }
-    val keys = keyTags.keys.toSeq.sorted
-    val types: Map[String, DataType] = keyTags.map { case (k, tags) =>
-      k -> (if (tags.size == 1) typeOf(tags.head) else StringType)
-    }
-    val schema = StructType(
-      StructField(caseCol, StringType) +:
-        keys.map(k => StructField(k, types(k))))
-    // pass 2: rows (files re-parse, like schema-less spark.read.json)
-    val rows = events.map { ev =>
-      Row.fromSeq(ev.caseId +: keys.map { k =>
-        ev.attrs.get(k) match {
-          case None => null
-          case Some((_, raw)) if types(k) == StringType => raw
-          case Some((_, raw)) => parseValue(types(k), raw)
-        }
-      })
-    }
-    spark.createDataFrame(rows, schema)
-  }
+           caseCol: String = XesWriter.DefaultCaseCol): DataFrame =
+    spark.read.format("xes").option("casecol", caseCol).load(path)
 }

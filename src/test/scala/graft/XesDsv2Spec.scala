@@ -11,9 +11,9 @@ import org.apache.spark.sql.types._
 import graft.xes.XesWriter
 
 /** Gates for the DataSource V2 XES provider: short-name resolution,
-  * shard-parallel read parity with XesReader, typed schema inference,
-  * and — the reason the source exists — column pruning reaching the
-  * scan's readSchema.
+  * shard-parallel reads, typed schema inference over every file,
+  * hidden-file skipping, and column pruning reaching the scan's
+  * readSchema.
   */
 class XesDsv2Spec extends SparkSpec {
 
@@ -74,7 +74,8 @@ class XesDsv2Spec extends SparkSpec {
     assert(back.count() == 40)
   }
 
-  test("inferall unions conflicting shard schemas and widens to string") {
+  /** a.xes types `v` as int; b.xes types it as string and adds `w`. */
+  private def conflictingLogs(): String = {
     val tmp = Files.createTempDirectory("xes-dsv2-infer")
     val s1 = StructType(Seq(
       StructField("case:concept:name", StringType),
@@ -83,18 +84,40 @@ class XesDsv2Spec extends SparkSpec {
     val s2 = StructType(Seq(
       StructField("case:concept:name", StringType),
       StructField("time:timestamp", TimestampType),
-      StructField("v", StringType)))
+      StructField("v", StringType),
+      StructField("w", StringType)))
     XesWriter.write(spark.createDataFrame(
       Seq(Row("c1", ts("2024-01-01 09:00:00"), 5L)).asJava, s1), tmp.resolve("a.xes"))
     XesWriter.write(spark.createDataFrame(
-      Seq(Row("c2", ts("2024-01-01 09:01:00"), "five")).asJava, s2), tmp.resolve("b.xes"))
-    // default (first file only): v is typed from a.xes alone
-    val first = spark.read.format("xes").load(tmp.toString)
-    assert(first.schema("v").dataType == LongType)
-    // inferall: conflicting tags widen to string, raw text preserved
-    val all = spark.read.format("xes").option("inferall", "true").load(tmp.toString)
+      Seq(Row("c2", ts("2024-01-01 09:01:00"), "five", "only-b")).asJava, s2),
+      tmp.resolve("b.xes"))
+    tmp.toString
+  }
+
+  test("inferall unions conflicting shard schemas and widens to string") {
+    // conflicting tags widen to string, raw text preserved
+    val all = spark.read.format("xes").load(conflictingLogs())
     assert(all.schema("v").dataType == StringType)
     assert(all.select("v").collect().map(_.getString(0)).toSet == Set("5", "five"))
+  }
+
+  test("a directory of logs with different key sets reads every row and column") {
+    val back = spark.read.format("xes").load(conflictingLogs())
+    assert(back.collect().toSet == Set(
+      Row("c1", ts("2024-01-01 09:00:00"), "5", null),
+      Row("c2", ts("2024-01-01 09:01:00"), "five", "only-b")))
+    assert(back.schema.fields.map(f => f.name -> f.dataType).toSeq == Seq(
+      "case:concept:name" -> StringType, "time:timestamp" -> TimestampType,
+      "v" -> StringType, "w" -> StringType))
+  }
+
+  test("a half-written hidden .tmp sibling of a complete log is skipped") {
+    val tmp = Files.createTempDirectory("xes-dsv2-tmp")
+    XesWriter.write(sample, tmp.resolve("log.xes"))
+    val bytes = Files.readAllBytes(tmp.resolve("log.xes"))
+    Files.write(tmp.resolve(s".${java.util.UUID.randomUUID()}.tmp"),
+      java.util.Arrays.copyOf(bytes, bytes.length / 2))
+    assert(canon(spark.read.format("xes").load(tmp.toString)) == canon(sample))
   }
 
   test("single .xes file path and explicit casecol option") {

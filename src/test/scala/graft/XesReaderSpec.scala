@@ -88,20 +88,18 @@ class XesReaderSpec extends SparkSpec {
       s"first event consumed $consumed of ${bytes.length} bytes — not streaming")
     assert(it.size == 5000 * 4 - 1, "remaining events all parse")
 
-    // and the full Spark read paths agree on the same file
+    // and the Spark read path parses the same file whole
     val tmp = Files.createTempDirectory("xes-big")
     val file = tmp.resolve("big.xes")
     Files.write(file, bytes)
-    val legacy = XesReader.read(spark, file.toString)
-    assert(legacy.count() == 20000L)
-    val v2 = spark.read.format("xes").load(file.toString)
-    assert(v2.count() == 20000L)
-    assert(v2.where(org.apache.spark.sql.functions.col("n") === 12343L).count() == 1)
+    val back = XesReader.read(spark, file.toString)
+    assert(back.count() == 20000L)
+    assert(back.where(org.apache.spark.sql.functions.col("n") === 12343L).count() == 1)
   }
 
   test("trace case id appearing AFTER its events still labels every event") {
-    // XES allows trace attributes anywhere among the children; the
-    // per-trace buffering must match the DOM parser's semantics
+    // XES allows trace attributes anywhere among the children, so the
+    // parser buffers a trace's events until the trace closes
     val xml =
       """<?xml version="1.0" encoding="UTF-8"?>
         |<log>
