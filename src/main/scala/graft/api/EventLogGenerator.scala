@@ -3,9 +3,6 @@ package graft.api
 import java.nio.file.{Files, NoSuchFileException, Path}
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.util.{DateTimeUtils, LegacyDateFormats, TimestampFormatter}
-import org.apache.spark.sql.functions.{date_format, max, min}
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{BooleanType, StringType, StructField, StructType}
 
 import graft.operators.EventOps
@@ -92,74 +89,26 @@ object EventLogGenerator {
     * app.py:180-218): generate → empty→None (the HTTP layer maps that to
     * 204) → XES write, published atomically on the parameter-keyed file.
     *
-    * Date bounds: when `startDate`/`endDate` are absent they are
-    * defaulted from the data (min/max of `time:timestamp` —
-    * event_reader.py:26-29) and the RESOLVED bounds key the cache file
-    * (app.py:221-226). The bounds are resolved at FULL timestamp
-    * precision (not the reference's day truncation): `dateRange`
-    * compares whole timestamps, so a day-truncated end bound would
-    * exclude the last day's events and the dateless request would share
-    * a key with an explicit-date twin whose content differs. With
-    * full-precision bounds the twin's `ts >= min && ts <= max` filter
-    * is a no-op, so the shared cache entry is byte-identical for both.
-    * Divergence from the reference, documented: the reference's
-    * route-level cache probe uses the raw (None) dates so a dateless
-    * request can never hit the entry its own generation wrote.
-    *
-    * One query per generation: the writer folds the min/max timestamp
-    * while it drains the traces, and the file is keyed and published
-    * after the drain. Only a cache lookup with a date missing needs the
-    * key first; it runs a min/max aggregate before the lookup, and a miss
-    * then writes through the same path. No rows, or no non-null
-    * timestamp when a bound is missing, gives None.
+    * The file is keyed by the request's parameters as sent, as the
+    * reference's route-level cache key is (app.py:85-86): a missing date
+    * stays absent in the key and bounds nothing, so the generation
+    * covers the whole range the reference's min/max default
+    * (event_reader.py:26-29) would. A dateless request and its
+    * explicit-date twin are separate entries, and a dateless request
+    * hits the entry its own generation wrote. With `useCache` a fresh
+    * entry (`ResultCache` TTL, O-29) is served without running any Spark
+    * job; otherwise, or on a miss, the log is generated and written.
     */
   def generateXes(eventlog: DataFrame, params: Params, cache: ResultCache,
                   inferRemarksSchema: Boolean = false,
                   useCache: Boolean = true): Option[Path] = {
-    val df = generate(eventlog, params, inferRemarksSchema)
+    val key = cacheKey(params)
     // explicit opt-in probe (the reference's `use_cache` flag was dead
     // code, SURVEY §2.8.2); a regeneration still lands on the keyed
     // path, published atomically, so later cached requests see the
     // fresh artifact and a concurrent reader never sees a partial one
-    if (!useCache) publishKeyed(df, params, cache)
-    else {
-      val known =
-        if (params.startDate.isDefined && params.endDate.isDefined) Some(params)
-        else probeDates(df, params)
-      known.flatMap(p => cache.lookup(cacheKey(p)).orElse(publishKeyed(df, p, cache)))
-    }
-  }
-
-  private val BoundFormat = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-
-  /** `params` with each missing date taken from the data's min/max
-    * timestamp, by a separate aggregate; None when there is none.
-    */
-  private def probeDates(df: DataFrame, params: Params): Option[Params] = {
-    val ts = df("time:timestamp")
-    val row = df.agg(date_format(min(ts), BoundFormat), date_format(max(ts), BoundFormat)).head()
-    if (row.isNullAt(0)) None
-    else Some(params.copy(
-      startDate = params.startDate.orElse(Some(row.getString(0))),
-      endDate = params.endDate.orElse(Some(row.getString(1)))))
-  }
-
-  /** Writes `df` and publishes it on the key of `params`, with each
-    * missing date taken from the bounds the write folded. The bounds are
-    * formatted as `date_format(·, BoundFormat)` formats them in the
-    * session time zone, so the key equals the one `probeDates` gives.
-    */
-  private def publishKeyed(df: DataFrame, params: Params, cache: ResultCache): Option[Path] = {
-    val zone = DateTimeUtils.getZoneId(df.sparkSession.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key))
-    val fmt = TimestampFormatter(BoundFormat, zone, LegacyDateFormats.SIMPLE_DATE_FORMAT,
-      isParsing = false)
-    XesWriter.publish(df, cache.dir) { bounds =>
-      bounds.map { case (lo, hi) =>
-        cache.pathFor(cacheKey(params.copy(
-          startDate = params.startDate.orElse(Some(fmt.format(lo))),
-          endDate = params.endDate.orElse(Some(fmt.format(hi))))))
-      }
-    }
+    val hit = if (useCache) cache.lookup(key) else None
+    hit.orElse(XesWriter.write(generate(eventlog, params, inferRemarksSchema), cache.pathFor(key)))
   }
 
   /** Deterministic cache key (O-22): injective over the parameter tuple.
@@ -202,7 +151,7 @@ object EventLogGenerator {
   * explicit whole-directory sweep. Entries are published atomically by
   * `XesWriter`, so a reader only ever sees a complete file.
   */
-final class ResultCache(val dir: Path, ttlSeconds: Long = 60) {
+final class ResultCache(dir: Path, ttlSeconds: Long = 60) {
   Files.createDirectories(dir)
   private val ttlMillis = ttlSeconds * 1000
 

@@ -27,7 +27,7 @@ import org.apache.spark.util.SerializableConfiguration
   * `path` is a file, a directory of shards, or a glob. Listing follows
   * Hadoop's input rule: a name starting with `_` or `.` is hidden and
   * skipped, so `_SUCCESS` markers, `.crc` checksums and the
-  * half-written `.<uuid>.tmp` sibling `XesWriter.publish` leaves during
+  * half-written `.<uuid>.tmp` sibling `XesWriter.write` leaves during
   * a write are never parsed.
   *
   * Each listed file is one `InputPartition` (scan parallelism = shard

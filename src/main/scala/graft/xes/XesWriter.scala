@@ -6,8 +6,7 @@ import java.time.ZoneOffset
 import java.time.format.DateTimeFormatter
 import java.util.UUID
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row}
-import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
@@ -30,10 +29,7 @@ import org.apache.spark.sql.types._
   *    upstream pipeline already filters them (O-8, event_reader.py:59).
   *  - `write` produces the reference's single-file artifact by streaming
   *    `toLocalIterator` — the driver holds one trace at a time — and
-  *    publishes it with an atomic rename. Each trace also carries the
-  *    min and max of its timestamps, which the driver folds as it writes,
-  *    so a caller can name the file after the data's date range without
-  *    a second query. A single
+  *    publishes it with an atomic rename. A single
   *    XES file is inherently a single-writer bottleneck; at cluster
   *    scale use `writeShards`, which writes one self-contained XES file
   *    per partition with no driver involvement at all.
@@ -104,23 +100,9 @@ object XesWriter {
     */
   def traceXml(df: DataFrame, caseCol: String = DefaultCaseCol,
                tsCol: String = DefaultTsCol,
-               tieCols: Seq[String] = Nil): Dataset[(String, String)] =
-    assemble(df, caseCol, tsCol, tieCols)(_.map(t => (t._1, t._2)))(
-      Encoders.tuple(Encoders.STRING, Encoders.STRING))
-
-  /** Trace assembly, shared by `traceXml` and `publish`: the rows of
-    * each case as (caseId, `<trace>…</trace>`, min, max), where min and
-    * max are the trace's `tsCol` bounds in Spark microseconds, or
-    * (Long.MaxValue, Long.MinValue) when it has no non-null timestamp.
-    * `out` maps each partition's traces to the rows wanted.
-    */
-  private def assemble[T](df: DataFrame, caseCol: String, tsCol: String, tieCols: Seq[String])(
-      out: Iterator[(String, String, Long, Long)] => Iterator[T])(enc: Encoder[T]): Dataset[T] = {
+               tieCols: Seq[String] = Nil): Dataset[(String, String)] = {
     val schema = df.schema
     val caseIdx = schema.fieldIndex(caseCol)
-    // bounds are tracked for a timestamp column only; any other type
-    // leaves every trace unbounded
-    val tsIdx = if (schema(tsCol).dataType == TimestampType) schema.fieldIndex(tsCol) else -1
     val eventFields: Array[(String, DataType, Int)] =
       schema.fields.zipWithIndex.collect {
         case (f, i) if f.name != caseCol => (f.name, f.dataType, i)
@@ -140,36 +122,26 @@ object XesWriter {
         }
         sb.append("</event>\n")
       }
-      out(new Iterator[(String, String, Long, Long)] {
+      new Iterator[(String, String)] {
         // skip null-case rows (upstream normally filtered them, O-8)
         private def skipNullCase(): Unit =
           while (in.hasNext && in.head.isNullAt(caseIdx)) in.next()
         override def hasNext: Boolean = { skipNullCase(); in.hasNext }
-        override def next(): (String, String, Long, Long) = {
+        override def next(): (String, String) = {
           skipNullCase()
           val caseId = String.valueOf(in.head.get(caseIdx))
           val sb = new StringBuilder(256)
           sb.append("<trace>\n")
           sb.append(s"""<string key="concept:name" value="${escape(caseId)}"/>""").append('\n')
-          // the trace's rows are sorted by timestamp, so its first and last
-          // non-null timestamps are its bounds
-          var first, last: java.sql.Timestamp = null
           while (in.hasNext && !in.head.isNullAt(caseIdx) &&
                  String.valueOf(in.head.get(caseIdx)) == caseId) {
-            val r = in.next()
-            if (tsIdx >= 0 && !r.isNullAt(tsIdx)) {
-              last = r.getAs[java.sql.Timestamp](tsIdx)
-              if (first == null) first = last
-            }
-            renderEvent(r, sb)
+            renderEvent(in.next(), sb)
           }
           sb.append("</trace>")
-          if (first == null) (caseId, sb.toString, Long.MaxValue, Long.MinValue)
-          else (caseId, sb.toString, DateTimeUtils.fromJavaTimestamp(first),
-                DateTimeUtils.fromJavaTimestamp(last))
+          (caseId, sb.toString)
         }
-      })
-    }(enc)
+      }
+    }(Encoders.tuple(Encoders.STRING, Encoders.STRING))
   }
 
   /** Single-file XES artifact (the reference's product). Returns None
@@ -184,42 +156,20 @@ object XesWriter {
     * file behind.
     */
   def write(df: DataFrame, path: Path, caseCol: String = DefaultCaseCol,
-            tsCol: String = DefaultTsCol, tieCols: Seq[String] = Nil): Option[Path] =
-    publish(df, path.toAbsolutePath.getParent, caseCol, tsCol, tieCols)(_ => Some(path))
-
-  /** `write` for a target that depends on the data: after the last trace
-    * is written, `target` gets the min and max `tsCol` value over all
-    * rows written (Spark microseconds; None when every one was null) and
-    * names the file in `dir` to publish onto, or None to publish nothing.
-    * Returns None, with no file left behind, when the input has no rows
-    * or `target` gives None.
-    */
-  private[graft] def publish(df: DataFrame, dir: Path, caseCol: String = DefaultCaseCol,
-                             tsCol: String = DefaultTsCol, tieCols: Seq[String] = Nil)(
-      target: Option[(Long, Long)] => Option[Path]): Option[Path] = {
-    val it = assemble(df, caseCol, tsCol, tieCols)(identity)(
-      Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.scalaLong, Encoders.scalaLong))
-      .toLocalIterator()
+            tsCol: String = DefaultTsCol, tieCols: Seq[String] = Nil): Option[Path] = {
+    val it = traceXml(df, caseCol, tsCol, tieCols).toLocalIterator()
     if (!it.hasNext) return None
+    val dir = path.toAbsolutePath.getParent
     Files.createDirectories(dir)
     val tmp = dir.resolve(s".${UUID.randomUUID()}.tmp")
     try {
-      var lo = Long.MaxValue
-      var hi = Long.MinValue
       val w = Files.newBufferedWriter(tmp, StandardCharsets.UTF_8, StandardOpenOption.CREATE_NEW)
       try {
         w.write(Header)
-        while (it.hasNext) {
-          val t = it.next()
-          w.write(t._2); w.write("\n")
-          if (t._3 < lo) lo = t._3
-          if (t._4 > hi) hi = t._4
-        }
+        while (it.hasNext) { w.write(it.next()._2); w.write("\n") }
         w.write(Footer)
       } finally w.close()
-      target(if (lo <= hi) Some((lo, hi)) else None).map { path =>
-        Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE)
-      }
+      Some(Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE))
     } finally Files.deleteIfExists(tmp) // a no-op once the move has happened
   }
 

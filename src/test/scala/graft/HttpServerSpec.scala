@@ -2,7 +2,7 @@ package graft
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-import java.nio.file.Files
+import java.nio.file.{Files, StandardOpenOption}
 import java.sql.Timestamp
 
 import scala.jdk.CollectionConverters._
@@ -10,7 +10,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
-import graft.api.{ResultCache, XesHttpServer}
+import graft.api.{EventLogGenerator, ResultCache, XesHttpServer}
+import graft.api.EventLogGenerator.Params
 import graft.xes.XesWriter
 
 /** Curl-level integration gate for the three reference routes
@@ -44,11 +45,16 @@ class HttpServerSpec extends SparkSpec {
 
   private def withServer[A](f: (XesHttpServer, Int) => A): A = withServerOver(eventlog)(f)
 
-  private def withServerOver[A](el: DataFrame)(f: (XesHttpServer, Int) => A): A = {
+  private def tmpCache(): ResultCache = {
     val dir = Files.createTempDirectory("http-xes")
     dir.toFile.deleteOnExit()
+    new ResultCache(dir, ttlSeconds = 3600)
+  }
+
+  private def withServerOver[A](el: DataFrame, cache: ResultCache = tmpCache())(
+      f: (XesHttpServer, Int) => A): A = {
     val srv = new XesHttpServer(
-      () => el, new ResultCache(dir, ttlSeconds = 3600),
+      () => el, cache,
       resolveBotIds = (url, bot) => if (bot == "sam") Seq("r1", "r2") else Nil)
     val port = srv.start()
     try f(srv, port) finally srv.stop()
@@ -213,13 +219,16 @@ class HttpServerSpec extends SparkSpec {
   }
 
   test("use_cache=true serves the cached artifact, use_cache=false regenerates") {
-    withServer { (srv, port) =>
+    val cache = tmpCache()
+    withServerOver(eventlog, cache) { (_, port) =>
       val first = get(port, "/resource/r1?use_cache=true")
       assert(first.statusCode() == 200)
-      // poison-pill check: find the cached file and append a marker; a
+      // poison-pill check: append a marker to the request-keyed file; a
       // cache hit returns the marker, a regeneration removes it
+      val keyed = cache.pathFor(EventLogGenerator.cacheKey(Params(resourceIds = Seq("r1"))))
+      Files.writeString(keyed, "<!--sentinel-->", StandardOpenOption.APPEND)
       val second = get(port, "/resource/r1?use_cache=true")
-      assert(second.statusCode() == 200 && second.body() == first.body())
+      assert(second.statusCode() == 200 && second.body() == first.body() + "<!--sentinel-->")
       val fresh = get(port, "/resource/r1?use_cache=false")
       assert(fresh.statusCode() == 200 && fresh.body() == first.body())
     }

@@ -200,20 +200,6 @@ class XesWriterSpec extends SparkSpec {
         ("r2", "c5", "2024-01-04 12:34:56.789"))
     } yield Row("SERVICE_CUSTOM_MESSAGE_1", c, s"act-$t", ts(t), "complete", r, "user", null))
 
-  /** `params` with each missing date taken from a separate min/max
-    * aggregate over the generated rows, formatted as `date_format` does.
-    */
-  private def probed(el: DataFrame, params: Params): Params = {
-    import org.apache.spark.sql.functions.{date_format, max, min}
-    val df = EventLogGenerator.generate(el, params)
-    val fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-    val row = df.agg(date_format(min(df("time:timestamp")), fmt),
-      date_format(max(df("time:timestamp")), fmt)).head()
-    params.copy(
-      startDate = params.startDate.orElse(Some(row.getString(0))),
-      endDate = params.endDate.orElse(Some(row.getString(1))))
-  }
-
   private def withSessionZone[A](zone: String)(body: => A): A = {
     val key = "spark.sql.session.timeZone"
     val before = spark.conf.get(key)
@@ -221,55 +207,89 @@ class XesWriterSpec extends SparkSpec {
     try body finally spark.conf.set(key, before)
   }
 
-  test("generateXes without dates keys the file by the data's bounds, as a min/max probe would") {
-    // a session zone off UTC, so that the bounds must be formatted in it
+  /** The number of Spark jobs `body` starts, counted by job group as
+    * the job-count test below counts them.
+    */
+  private def jobCount(body: => Unit): Int = {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    def group(js: SparkListenerJobStart): Option[String] =
+      Option(js.properties).flatMap(ps => Option(ps.getProperty("spark.jobGroup.id")))
+    val counted = new AtomicInteger
+    val marker = new CountDownLatch(1)
+    val sc = spark.sparkContext
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = group(js) match {
+        case Some("counted") => counted.incrementAndGet()
+        case Some("marker")  => marker.countDown()
+        case _               =>
+      }
+    }
+    def inGroup(g: String)(b: => Unit): Unit = {
+      sc.setJobGroup(g, g, interruptOnCancel = false)
+      try b finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      inGroup("counted")(body)
+      // listener events arrive in order: once the marker job has started,
+      // every job before it has been counted
+      inGroup("marker")(spark.range(1).count())
+      assert(marker.await(30, TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    counted.get
+  }
+
+  /** Publishes `params` uncached, checks that the file lands on the key
+    * of `params` as sent, then checks that a cached repeat is a hit on
+    * that file which runs no Spark job and leaves the file untouched.
+    */
+  private def assertKeyedAsSent(cache: ResultCache, params: Params, clue: String): Unit = {
+    val path = cache.pathFor(EventLogGenerator.cacheKey(params))
+    assert(EventLogGenerator.generateXes(dated, params, cache, useCache = false).contains(path), clue)
+    val mtime = java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 5000)
+    Files.setLastModifiedTime(path, mtime)
+    val jobs = jobCount {
+      assert(EventLogGenerator.generateXes(dated, params, cache).contains(path), clue)
+    }
+    assert(jobs == 0, clue)
+    assert(Files.getLastModifiedTime(path) == mtime, clue)
+  }
+
+  test("generateXes keys by the request as sent; a cached repeat runs no Spark job") {
+    // a session zone off UTC, so that no key can depend on formatting a date in it
     for (zone <- Seq("UTC", "America/Los_Angeles"); ids <- Seq(Seq("r1"), Seq("r1", "r2")))
       withSessionZone(zone) {
-        val cache = new ResultCache(tmpDir("xes-fold"), ttlSeconds = 3600)
-        val params = Params(resourceIds = ids)
-        val explicit = probed(dated, params)
-        val key = EventLogGenerator.cacheKey(explicit)
-        val path = EventLogGenerator.generateXes(dated, params, cache, useCache = false)
-        assert(path.contains(cache.pathFor(key)), s"zone $zone, ids $ids")
-        val bytes = Files.readAllBytes(path.get)
-
-        // the explicit-date twin publishes the same bytes on the same key
-        val twinCache = new ResultCache(tmpDir("xes-twin"), ttlSeconds = 3600)
-        val twin = EventLogGenerator.generateXes(dated, explicit, twinCache, useCache = false)
-        assert(twin.contains(twinCache.pathFor(key)))
-        assert(java.util.Arrays.equals(Files.readAllBytes(twin.get), bytes))
-
-        // and a dateless cached request is a hit on the file it wrote
-        val mtime = java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 5000)
-        Files.setLastModifiedTime(path.get, mtime)
-        assert(EventLogGenerator.generateXes(dated, params, cache).contains(path.get))
-        assert(Files.getLastModifiedTime(path.get) == mtime)
+        val cache = new ResultCache(tmpDir("xes-key"), ttlSeconds = 3600)
+        assertKeyedAsSent(cache, Params(resourceIds = ids), s"zone $zone, ids $ids")
       }
   }
 
-  test("generateXes with one date takes only the missing bound from the data") {
-    val cache = new ResultCache(tmpDir("xes-half"), ttlSeconds = 3600)
-    val startOnly = Params(resourceIds = Seq("r1", "r2"), startDate = Some("2024-01-02 00:00:00"))
-    val endOnly = Params(resourceIds = Seq("r1", "r2"), endDate = Some("2024-01-02 12:00:00"))
-    for (params <- Seq(startOnly, endOnly)) {
-      val key = EventLogGenerator.cacheKey(probed(dated, params))
-      assert(EventLogGenerator.generateXes(dated, params, cache, useCache = false)
-        .contains(cache.pathFor(key)))
-    }
-    // the given bound is kept as sent, not replaced by the data's
-    assert(probed(dated, startOnly) == startOnly.copy(endDate = Some("2024-01-04 12:34:56.789000")))
-    assert(probed(dated, endOnly) == endOnly.copy(startDate = Some("2023-12-31 23:00:00.000123")))
+  test("generateXes with one date keeps the missing bound out of the key") {
+    for (zone <- Seq("UTC", "America/Los_Angeles"); ids <- Seq(Seq("r1"), Seq("r1", "r2")))
+      withSessionZone(zone) {
+        val cache = new ResultCache(tmpDir("xes-half"), ttlSeconds = 3600)
+        val dateless = Params(resourceIds = ids)
+        val startOnly = dateless.copy(startDate = Some("2024-01-02 00:00:00"))
+        val endOnly = dateless.copy(endDate = Some("2024-01-02 12:00:00"))
+        for (params <- Seq(startOnly, endOnly))
+          assertKeyedAsSent(cache, params, s"zone $zone, $params")
+        assert(Seq(dateless, startOnly, endOnly).map(EventLogGenerator.cacheKey).distinct.size == 3)
+      }
   }
 
-  test("generateXes over rows whose timestamps are all null returns None and leaves no file") {
+  test("generateXes over rows whose timestamps are all null writes them, not None") {
     val el = eventlog(Seq("c1", "c2").map(c =>
       Row("SERVICE_CUSTOM_MESSAGE_1", c, "hello", null, "complete", "r1", "user", null)))
     for (useCache <- Seq(false, true)) {
-      val dir = tmpDir("xes-nullts")
-      val cache = new ResultCache(dir, ttlSeconds = 3600)
-      assert(EventLogGenerator.generateXes(el, Params(resourceIds = Seq("r1")), cache,
-        useCache = useCache).isEmpty)
-      assert(Files.list(dir).iterator().asScala.isEmpty, s"use_cache=$useCache")
+      val cache = new ResultCache(tmpDir("xes-nullts"), ttlSeconds = 3600)
+      val params = Params(resourceIds = Seq("r1"))
+      val path = EventLogGenerator.generateXes(el, params, cache, useCache = useCache)
+      assert(path.contains(cache.pathFor(EventLogGenerator.cacheKey(params))), s"use_cache=$useCache")
+      val doc = parse(path.get)
+      assert(doc.getElementsByTagName("trace").getLength == 2)
+      assert(doc.getElementsByTagName("date").getLength == 0)
     }
   }
 
