@@ -3,6 +3,8 @@ package graft.analytics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.Fixpoint
+
 /** k-core extraction — the density backbone of a graph (Seidman 1983):
   * the unique maximal subgraph in which every node keeps degree ≥ k.
   * On the kNN graph of the embedding store this is the "dense topic
@@ -30,17 +32,16 @@ object Kcore {
     * both engines — same rounds, same answer, contract documented.
     *
     * Scale shape: one distinct-canonicalize shuffle up front; each
-    * round is one equi-join of the edge list against the (shrinking)
-    * survivor set + one partial-aggregated degree count;
-    * localCheckpoint per round truncates the iterative lineage (the
-    * connectedComponents pattern). O(peel-depth) rounds — real near-
-    * dup/kNN graphs peel in a handful.
+    * `Fixpoint` round is one equi-join of the edge list against the
+    * (shrinking) survivor set + one partial-aggregated degree count,
+    * whose checkpoint job also carries the (count, Σ degree) probe; a
+    * capped run logs a WARN. O(peel-depth) rounds — real near-dup/kNN
+    * graphs peel in a handful.
     */
   def kcoreMembers(edges: DataFrame, srcCol: String, dstCol: String,
                    k: Int, maxRounds: Int = 15): DataFrame = {
     require(k >= 1, s"kcoreMembers: k must be >= 1, got $k")
-    require(maxRounds >= 1 && maxRounds <= 50,
-      s"kcoreMembers: maxRounds in [1, 50], got $maxRounds")
+    require(maxRounds <= 50, s"kcoreMembers: maxRounds in [1, 50], got $maxRounds")
     val und = edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
@@ -49,31 +50,17 @@ object Kcore {
     val eu = und.select(col("a").as("src"), col("b").as("dst"))
       .union(und.select(col("b").as("src"), col("a").as("dst")))
       .localCheckpoint(true)
-    var surv = eu.select(col("src").as("id")).distinct()
-      .localCheckpoint(true)
-    def degrees(s: DataFrame): DataFrame = eu
-      .join(s.select(col("id").as("src")), Seq("src"))
-      .join(s.select(col("id").as("dst")), Seq("dst"))
-      .groupBy(col("src").as("id")).agg(count(lit(1)).as("core_degree"))
-    def probe(s: DataFrame): (Long, Long) = {
-      val r = degrees(s).agg(count(lit(1)), coalesce(sum("core_degree"),
-        lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-    var prev = probe(surv)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxRounds) {
-      surv = degrees(surv).filter(col("core_degree") >= k)
-        .select("id").localCheckpoint(true)
-      val cur = probe(surv)
-      converged = cur == prev
-      prev = cur
-      i += 1
-    }
-    // at the fixpoint every survivor's degree is >= k by definition;
-    // no final filter, so the maxRounds-bounded (non-converged) case
+    def degrees(e: DataFrame): DataFrame =
+      e.groupBy(col("src").as("id")).agg(count(lit(1)).as("core_degree"))
+    // the state is the survivors' degrees, all nodes to start with. At
+    // the fixpoint every survivor's degree is >= k by definition; no
+    // final filter, so the maxRounds-bounded (non-converged) case
     // emits the SAME honest superset as the oracle's unrolled rounds
-    degrees(surv).select(col("id"), col("core_degree"))
+    Fixpoint("kcoreMembers", degrees(eu), maxRounds,
+        count(lit(1)).as("n"), sum("core_degree").as("degree_sum")) { (s, _) =>
+      val surv = s.filter(col("core_degree") >= k).select("id")
+      degrees(eu.join(surv.select(col("id").as("src")), Seq("src"))
+        .join(surv.select(col("id").as("dst")), Seq("dst")))
+    }._1
   }
 }

@@ -3,6 +3,8 @@ package graft.analytics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.Fixpoint
+
 /** Synchronous label propagation over an edge list — semi-supervised
   * labeling on the embedding store's kNN graph: a small seeded set
   * (human-annotated docs) spreads labels to the rest of the corpus,
@@ -144,21 +146,21 @@ object LabelProp {
     * features): per node, the MINIMUM hop count from any source, NULL
     * for unreachable nodes (emitted, never dropped — unreachable is
     * the interesting answer). Min-propagation rounds (hop' =
-    * min(hop, neighbor hop + 1)) converge in diameter rounds, with
-    * the same cheap Σ-based convergence probe as
-    * `connectedComponents`; `maxIters` bounds both the rounds and the
-    * reported distance — a node past that radius reports NULL BY
-    * CONTRACT (matching the oracle's recursion bound).
+    * min(hop, neighbor hop + 1)) converge in diameter rounds, run by
+    * `Fixpoint` with a (NULL count, Σ hops) probe; `maxIters` bounds
+    * both the rounds and the reported distance — a node past that
+    * radius reports NULL BY CONTRACT (matching the oracle's recursion
+    * bound), and the capped run says so in Fixpoint's WARN line.
     *
     * Scale shape: the edge list is checkpointed once; each round is
-    * one equi-join + partial-aggregated min — O(diameter) rounds of
-    * edge-linear work, never a frontier collect.
+    * one equi-join + partial-aggregated min, materialized by one
+    * checkpoint job that also carries the probe — O(diameter) rounds
+    * of edge-linear work, never a frontier collect.
     */
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,
               sources: DataFrame, idCol: String,
               maxIters: Int = 20): DataFrame = {
-    require(maxIters >= 1 && maxIters <= 100,
-      s"bfsHops: maxIters in [1, 100], got $maxIters")
+    require(maxIters <= 100, s"bfsHops: maxIters in [1, 100], got $maxIters")
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .localCheckpoint(true)
     val seeds = sources.select(col(idCol).as("id")).distinct()
@@ -171,36 +173,18 @@ object LabelProp {
       .union(e.select(col("dst").as("id")))
       .union(seeds.select(col("id")))
       .distinct()
-    // LAZY checkpoints throughout the loop: the probe right after each
-    // round is the materializing action — one job per round instead of
-    // eager-checkpoint + probe (the r18 connectedComponents fuse)
-    var labels = nodes.join(seeds, Seq("id"), "left")
+    val init = nodes.join(seeds, Seq("id"), "left")
       .select(col("id"), col("__h").as("hops"))
-      .localCheckpoint(eager = false)
-    def probe(df: DataFrame): (Long, Long) = {
-      val r = df.agg(
-        sum(when(col("hops").isNull, 1L).otherwise(0L)),
-        coalesce(sum(col("hops")), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-    var prev = probe(labels)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIters) {
+    Fixpoint("bfsHops", init, maxIters,
+        count_if(col("hops").isNull).as("nulls"), sum("hops").as("hop_sum")) { (labels, _) =>
       val neigh = e
         .join(labels.select(col("id").as("src"), col("hops").as("__nh")),
           Seq("src"))
         .filter(col("__nh").isNotNull)
         .select(col("dst").as("id"), (col("__nh") + 1L).as("hops"))
-      labels = labels.union(neigh)
+      labels.union(neigh)
         .groupBy(col("id")).agg(min(col("hops")).as("hops"))
-        .localCheckpoint(eager = false)
-      val cur = probe(labels)
-      converged = cur == prev
-      prev = cur
-      i += 1
-    }
-    labels
+    }._1
   }
 
   /** Common-neighbor link prediction (Liben-Nowell & Kleinberg 2003 —

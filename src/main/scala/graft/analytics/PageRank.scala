@@ -29,8 +29,8 @@ import org.apache.spark.sql.functions._
   * 5.6 s for 10 iterations on the sf0.1 kNN graph, this shape 2.0 s,
   * bit-identical output). The per-iteration shuffle carries one row
   * per (dst × partition). Lineage is cut with localCheckpoint every
-  * `CheckpointEvery` (2) iterations (the connectedComponents pattern —
-  * without it the plan doubles per round). Nodes with no in-edges
+  * `CheckpointEvery` (2) iterations (a fixed-round loop, not `Fixpoint` —
+  * without the cut the plan doubles per round). Nodes with no in-edges
   * keep receiving `base` via their union row — nothing vanishes.
   */
 object PageRank {

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Fixpoint
+
 /** Deduplication operators for the training-data pipeline layer.
   *
   * Four tiers, cheapest first — the standard large-corpus recipe:
@@ -873,28 +875,6 @@ object Dedup {
         expr("(n_leaked * 1000000L) div n_docs"))
   }
 
-  /** Transitive duplicate clusters: near-dup PAIRS under-merge (A~B,
-    * B~C but A≁C leaves two keep-decisions for one logical document
-    * family), so cluster the pair graph and key each document by its
-    * component's minimum id. Min-label propagation: per round, every
-    * node takes the min of its own and its neighbors' labels — one
-    * keyed shuffle per round, converging in O(component diameter)
-    * rounds. Near-dup components are small and shallow (a boilerplate
-    * family, a mirrored page), so the bound is a handful of rounds;
-    * a web-scale graph with long chains would swap in the
-    * alternating small-star/large-star contraction (Kiveris et al.,
-    * "Connected Components in MapReduce", SoCC'14) — same API.
-    *
-    * The edge list is `localCheckpoint`ed once (it is usually the
-    * output of an expensive similarity join) and each round's labels
-    * are checkpointed too, truncating the iterative lineage — without
-    * that, round k replans rounds 1..k-1.
-    *
-    * Returns (id, cluster_id) for every node of `pairs`; singleton
-    * documents (no pair) are their own cluster by definition and
-    * don't appear. If `maxIter` rounds don't converge, the labels are
-    * returned as-is with a WARN — audit, not silent truncation.
-    */
   /** Incremental connected components — the warm arm of the cluster
     * tier for the daily-crawl shape: yesterday's stored (id,
     * cluster_id) labels stand in for yesterday's WHOLE pair graph
@@ -927,6 +907,30 @@ object Dedup {
       aCol, bCol, maxIter)
   }
 
+  /** Transitive duplicate clusters: near-dup PAIRS under-merge (A~B,
+    * B~C but A≁C leaves two keep-decisions for one logical document
+    * family), so cluster the pair graph and key each document by its
+    * component's minimum id. Min-label propagation: per round, every
+    * node takes the min of its own and its neighbors' labels — one
+    * keyed shuffle per round, converging in O(component diameter)
+    * rounds. Near-dup components are small and shallow (a boilerplate
+    * family, a mirrored page), so the bound is a handful of rounds;
+    * a web-scale graph with long chains would swap in the
+    * alternating small-star/large-star contraction (Kiveris et al.,
+    * "Connected Components in MapReduce", SoCC'14) — same API.
+    *
+    * The edge list is `localCheckpoint`ed once (it is usually the
+    * output of an expensive similarity join) and `Fixpoint` checkpoints
+    * each round's labels, truncating the iterative lineage — without
+    * that, round k replans rounds 1..k-1. Its probe is Σ(cluster_id),
+    * strictly monotone until the fixpoint since labels only DECREASE;
+    * decimal, as Σ of 64-bit ids can pass 2^63 and ANSI mode would throw.
+    *
+    * Returns (id, cluster_id) for every node of `pairs`; singleton
+    * documents (no pair) are their own cluster by definition and
+    * don't appear. If `maxIter` rounds don't converge, the labels are
+    * returned as-is with a WARN — audit, not silent truncation.
+    */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 20): DataFrame = {
     val edges = pairs
@@ -934,47 +938,22 @@ object Dedup {
       .union(pairs.select(col(bCol).cast("long").as("src"), col(aCol).cast("long").as("dst")))
       .distinct()
       .localCheckpoint()
-    var labels = edges.select(col("src").as("id")).distinct()
+    val init = edges.select(col("src").as("id")).distinct()
       .withColumn("cluster_id", col("id"))
-    // Convergence probe: labels only ever DECREASE under min-
-    // propagation, so Σ(cluster_id) is strictly monotone until the
-    // fixpoint — one cheap agg over the checkpointed frame replaces a
-    // per-round join-and-compare. Decimal sum: Σ of 64-bit ids can
-    // pass 2^63 on a big graph, and ANSI mode would throw.
-    def labelSum(df: DataFrame): java.math.BigDecimal = df
-      .agg(sum(col("cluster_id").cast("decimal(38,0)"))).head.getDecimal(0)
-    var prevSum: java.math.BigDecimal = null
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
+    Fixpoint("connectedComponents", init, maxIter,
+        sum(col("cluster_id").cast("decimal(38,0)")).as("label_sum")) { (labels, i) =>
       // one round = neighbor-min + pointer jump (label := label of
-      // label), fused into a single checkpoint job. The jump halves
-      // the effective path length each round — but on CLUSTER-CHAIN
-      // graphs (near-dup clusters bridged in sequence, the media-tier
-      // shape) it is structurally blind: every member already points
-      // at its hub (chain length 1, nothing to compress) while the
-      // smaller min enters each cluster through ONE bridge member and
-      // still needs a neighbor hop per round to reach the hub. r19
-      // measured it: the sf0.1 pixel pair graph took 23 rounds with
-      // the jump alone AND with a double jump (round-for-round equal
-      // sums — the r18 "double pointer-jump" plan is a no-op on this
-      // topology). Fix: from round 3 on, ALSO propagate between the
-      // labels themselves — (lab(dst) <- lab(src)) rides the same
-      // aggregate — i.e. neighbor-min on the CONTRACTED cluster graph
-      // (the Kiveris et al. 2014 alternating-stars idea), so a
-      // boundary crossing reaches the hub in O(1) rounds and chains
-      // of clusters collapse logarithmically. Measured (same-JVM
-      // min-of-2, collect-verified equal to the converged old shape):
-      // pixel pairs 4.03 s/23 rounds -> 1.75 s/6 rounds; minhash
-      // pairs at parity (0.39 vs 0.43 s — 2-round graphs never reach
-      // the label-edge rounds, which is why the branch waits until
-      // round 3; in rounds 1-2 labels are still near-identity and the
-      // label edges are near-duplicates of the plain edges); the
-      // adversarial all-singleton path pays +34% (extra join per
-      // round, rounds already information-bound at log2 n) — not a
-      // production pair-graph shape. Bonus: the pixel graph now
-      // CONVERGES inside maxIter (the old loop shipped the 20-round
-      // cutoff labels, which r19 measured as NOT the fixpoint).
+      // label). The jump alone is blind on CLUSTER-CHAIN graphs
+      // (near-dup clusters bridged in sequence, the media-tier shape):
+      // every member already points at its hub, while the smaller min
+      // enters each cluster through ONE bridge member. So from round 3
+      // on, labels also propagate between themselves (lab(dst) <-
+      // lab(src) rides the same aggregate): neighbor-min on the
+      // contracted cluster graph (Kiveris et al. 2014), which collapses
+      // chains of clusters logarithmically — the sf0.1 pixel pair graph
+      // converges in 6 rounds instead of 23. Rounds 1-2 skip it, as
+      // labels are still near-identity there and the label edges would
+      // repeat the plain ones; the all-singleton path pays ~+34%.
       val neighborMin = (if (i < 2) {
         edges
           .join(labels.withColumnRenamed("id", "src"), "src")
@@ -991,27 +970,13 @@ object Dedup {
             col("__lsrc").as("cluster_id")))
           .union(labels)
       }).groupBy("id").agg(min("cluster_id").as("cluster_id"))
-      val jumped = neighborMin
+      neighborMin
         .join(neighborMin.select(col("id").as("cluster_id"),
           col("cluster_id").as("__jump")), Seq("cluster_id"), "left")
         .select(col("id"),
           least(col("cluster_id"), coalesce(col("__jump"), col("cluster_id")))
             .as("cluster_id"))
-        // LAZY checkpoint: the Σ probe right below is the materializing
-        // action, so each round submits ONE job instead of an eager
-        // checkpoint job plus the probe job (r18: 6.07 -> 5.11 s on the
-        // pixel pair graph, 0.53 -> 0.49 s on the minhash pairs,
-        // output collect-verified identical)
-        .localCheckpoint(eager = false)
-      val s = labelSum(jumped)
-      labels = jumped
-      converged = s == prevSum
-      prevSum = s
-      i += 1
-    }
-    if (!converged) org.slf4j.LoggerFactory.getLogger(getClass).warn(
-      s"connectedComponents: not converged after $maxIter rounds")
-    labels
+    }._1
   }
 
   /** Dedup-aware SOFT retention weights — the downweight-instead-of-drop

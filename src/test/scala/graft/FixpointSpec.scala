@@ -1,0 +1,156 @@
+package graft
+
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.analytics.{Kcore, LabelProp}
+import graft.llm.Dedup
+import graft.operators.{Fixpoint, Iterations}
+
+/** The shared driver loop of the iterative operators: its probe values
+  * are the ones a direct aggregate over each round's frame gives, its
+  * report says how the run ended, it adds no job of its own, and every
+  * capped run of kcoreMembers, bfsHops and connectedComponents says so.
+  */
+class FixpointSpec extends SparkSpec {
+
+  private val probe = Seq(count(lit(1)).as("fx_rows"), sum("id").as("fx_sum"))
+
+  /** Grows `0, 1, 2, …` by one id per round until it holds ids 0..4. */
+  private def grow(cur: DataFrame, round: Int): DataFrame =
+    cur.union(cur.agg((max("id") + 1).as("id")).filter(col("id") < 5))
+
+  test("the observed probe of every round equals a direct agg over that round's checkpointed frame") {
+    val seen = new ConcurrentLinkedQueue[Row]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.observedMetrics.values.filter(_.schema.fieldNames.contains("fx_rows"))
+          .foreach(seen.add)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val frames = ArrayBuffer.empty[DataFrame]
+    spark.listenerManager.register(listener)
+    val (out, it) = try {
+      Fixpoint("grow", spark.range(1).toDF(), 10, probe: _*) { (cur, round) =>
+        frames += cur
+        grow(cur, round)
+      }
+    } finally {
+      // listener events are delivered asynchronously
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (seen.size < frames.size + 1 && System.nanoTime() < deadline) Thread.sleep(20)
+      spark.listenerManager.unregister(listener)
+    }
+    frames += out
+    val direct = frames.map(_.agg(probe.head, probe.tail: _*).head()).toSeq
+    assert(seen.asScala.toSeq == direct,
+      "each round's observation must carry its own frame's values (an eager checkpoint)")
+    assert(direct.map(_.getLong(0)) == Seq(1L, 2L, 3L, 4L, 5L, 5L))
+    assert(it == Iterations(5, converged = true))
+  }
+
+  test("Iterations reports a converged and a capped run; maxRounds must be >= 1") {
+    val init = spark.range(1).toDF()
+    val (done, converged) = Fixpoint("grow", init, 10, probe: _*)(grow)
+    assert(converged == Iterations(5, converged = true))
+    assert(done.count() == 5)
+    val (cut, capped) = Fixpoint("grow", init, 3, probe: _*)(grow)
+    assert(capped == Iterations(3, converged = false))
+    assert(cut.collect().map(_.getLong(0)).sorted.toSeq == Seq(0L, 1L, 2L, 3L))
+    intercept[IllegalArgumentException] {
+      Fixpoint("grow", init, 0, probe: _*)(grow)
+    }
+  }
+
+  test("a one-round run submits no more jobs than checkpointing the initial frame and one step") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val groups = new ConcurrentLinkedQueue[String]()
+    val marker = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(ps => Option(ps.getProperty("spark.jobGroup.id"))) match {
+          case Some("marker") => marker.countDown()
+          case Some(g)        => groups.add(g)
+          case None           =>
+        }
+    }
+    val sc = spark.sparkContext
+    def inGroup(g: String)(body: => Unit): Unit = {
+      sc.setJobGroup(g, g, interruptOnCancel = false)
+      try body finally sc.clearJobGroup()
+    }
+    val init = spark.range(200).select((col("id") % 7).as("id")).groupBy("id").count()
+    def step(cur: DataFrame, round: Int): DataFrame =
+      cur.groupBy((col("id") % 3).as("id")).agg(sum("count").as("count"))
+    sc.addSparkListener(listener)
+    try {
+      inGroup("checkpoints") {
+        step(init.localCheckpoint(eager = true), 0).localCheckpoint(eager = true)
+      }
+      inGroup("fixpoint") {
+        assert(Fixpoint("one", init, 1, sum("count").as("fx_total"))(step)._2.rounds == 1)
+      }
+      // listener events arrive in order: once the marker job has started,
+      // every job before it has been counted
+      inGroup("marker")(spark.range(1).count())
+      assert(marker.await(30, TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    val counts = groups.asScala.toSeq.groupBy(identity).map { case (g, js) => g -> js.size }
+    assert(counts("checkpoints") > 0)
+    assert(counts("fixpoint") <= counts("checkpoints"), counts)
+  }
+
+  test("a capped kcoreMembers, bfsHops or connectedComponents logs one WARN line; a converged one none") {
+    import spark.implicits._
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val warns = new ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("fixpoint-lines", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN) warns.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger(Fixpoint.getClass).asInstanceOf[Logger]
+    val level = logger.getLevel
+    logger.addAppender(appender)
+    logger.setLevel(Level.INFO)
+    def warnsOf(run: => DataFrame): Seq[String] = {
+      warns.clear()
+      run.collect()
+      warns.asScala.toSeq
+    }
+    try {
+      val chain = (1L until 8L).map(i => (i, i + 1)).toDF("src", "dst")
+      val seeds = Seq(1L).toDF("id")
+      val path = LabelProp.symmetrize(chain, "src", "dst")
+      val cases = Seq(
+        ("kcoreMembers", 2,
+          (r: Int) => Kcore.kcoreMembers(chain, "src", "dst", k = 2, maxRounds = r)),
+        ("bfsHops", 2,
+          (r: Int) => LabelProp.bfsHops(path, "src", "dst", seeds, "id", maxIters = r)),
+        ("connectedComponents", 1,
+          (r: Int) => Dedup.connectedComponents(chain, "src", "dst", maxIter = r)))
+      for ((op, cap, run) <- cases) {
+        val capped = warnsOf(run(cap))
+        assert(capped.size == 1, s"$op capped at $cap logged $capped")
+        assert(capped.head == s"fixpoint op=$op rounds=$cap max=$cap converged=false",
+          capped.head)
+        assert(warnsOf(run(20)).isEmpty, s"$op converged but logged a WARN")
+      }
+    } finally {
+      logger.removeAppender(appender)
+      logger.setLevel(level)
+      appender.stop()
+    }
+  }
+}

@@ -364,6 +364,7 @@ class LlmDedupSpec extends SparkSpec {
     // pairwise min-keep (the per-pair heuristic) would key 3~4 by 3,
     // splitting the family; the component keys it by 1
     assert(got(4L) == 1L, "transitive closure, not per-pair keep")
+    intercept[IllegalArgumentException](Dedup.connectedComponents(pairs, "id_a", "id_b", maxIter = 0))
   }
 
   test("connected components: a long cluster-chain converges inside maxIter to the exact min labels") {

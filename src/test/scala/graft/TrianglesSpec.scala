@@ -94,6 +94,23 @@ class TrianglesSpec extends SparkSpec {
     val rep = Kcore.kcoreMembers(edges.repartition(7), "src", "dst", k = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(rep == got)
+    // a pendant chain longer than maxRounds: the 2-core needs 3 peels,
+    // so a cap of r returns exactly r unrolled peels — the honest
+    // superset the oracle's unconditionally unrolled rounds give
+    val und = edges.collect().map(r => (r.getLong(0) min r.getLong(1),
+      r.getLong(0) max r.getLong(1))).filter { case (a, b) => a != b }.toSet
+    def degrees(s: Set[Long]): Map[Long, Long] = und.toSeq
+      .filter { case (a, b) => s(a) && s(b) }
+      .flatMap { case (a, b) => Seq(a, b) }
+      .groupBy(identity).map { case (v, vs) => v -> vs.size.toLong }
+    for (r <- Seq(1, 2)) {
+      val peeled = (1 to r).foldLeft((0L to 6L).toSet)((s, _) =>
+        degrees(s).filter(_._2 >= 2).keySet)
+      val capped = Kcore.kcoreMembers(edges, "src", "dst", k = 2, maxRounds = r)
+        .collect().map(row => row.getLong(0) -> row.getLong(1)).toMap
+      assert(capped == degrees(peeled), s"maxRounds=$r")
+      assert(capped.keySet == (0L to 6L - r).toSet, s"maxRounds=$r keeps the chain's base")
+    }
   }
 
   test("contaminationReport: union counts once, per-detector columns split verbatim vs paraphrase, exact rates") {
