@@ -25,8 +25,8 @@ import graft.operators.Fixpoint
   * struct(-count, label) — the rank-1 window row without the window's
   * extra shuffle-and-sort) — both on the label-bearing edge subset,
   * not the corpus; the label frame carries the immutable seed so no
-  * per-iteration node-table join; lineage cut by localCheckpoint
-  * every 2 rounds (the tuned PageRank cadence).
+  * per-iteration node-table join; lineage cut on the `Fixpoint.rounds`
+  * cadence.
   * Direction note: pass a symmetrized edge list for the classic
   * undirected semantics (`symmetrize`).
   */
@@ -53,16 +53,11 @@ object LabelProp {
     val e = edges.select(col("src"), col("dst")).persist()
     val base = seeds.select(col(idCol).as("__v"), col(seedCol).cast("int").as("__seed"))
       .persist()
-    // r18 loop shape: the label frame CARRIES the (immutable) seed, so
-    // no per-iteration join against the node table; the per-dst argmax
-    // is min(struct(-count, label)) — identical to the old rank-1
-    // window row (max count, then smallest label; count >= 1 so the
-    // negation never overflows) without the window's extra
-    // shuffle-and-sort. Measured: 5 iterations 3.16 s -> ~1.5 s on the
-    // sf0.1 kNN graph, bit-identical output.
-    var lab = base.select(col("__v"), col("__seed").as("__lbl"), col("__seed"))
-      .localCheckpoint(eager = true)
-    for (i <- 1 to iters) {
+    // the "Scale shape" step (r18): 5 iterations 3.16 s -> ~1.5 s on the
+    // sf0.1 kNN graph, bit-identical output; count >= 1, so the argmax's
+    // negation never overflows
+    val init = base.select(col("__v"), col("__seed").as("__lbl"), col("__seed"))
+    val lab = Fixpoint.rounds("propagate", init, iters) { (lab, _) =>
       val majority = e
         .join(lab.filter(col("__lbl").isNotNull), e("src") === lab("__v"))
         .groupBy(col("dst"), col("__lbl").as("__nl"))
@@ -71,13 +66,12 @@ object LabelProp {
         .agg(min(struct((-col("__c")).as("__negc"), col("__nl").as("__l")))
           .as("__m"))
         .select(col("dst"), col("__m.__l").as("__nl"))
-      lab = lab
+      lab
         .join(majority, lab("__v") === majority("dst"), "left")
         .select(col("__v"),
           when(col("__seed").isNotNull, col("__seed"))
             .otherwise(coalesce(col("__nl"), col("__lbl"))).as("__lbl"),
           col("__seed"))
-      if (i % 2 == 0 || i == iters) lab = lab.localCheckpoint(eager = true)
     }
     e.unpersist()
     val out = base.join(lab.select(col("__v"), col("__lbl")), Seq("__v"))

@@ -3,6 +3,8 @@ package graft.analytics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.Fixpoint
+
 /** PageRank over an edge list — centrality for the kNN graph of the
   * embedding store (which documents are the most "representative":
   * the standard graph signal for coreset selection and curriculum
@@ -28,17 +30,13 @@ import org.apache.spark.sql.functions._
   * optimization: the old join-deg-then-left-join-nodes loop measured
   * 5.6 s for 10 iterations on the sf0.1 kNN graph, this shape 2.0 s,
   * bit-identical output). The per-iteration shuffle carries one row
-  * per (dst × partition). Lineage is cut with localCheckpoint every
-  * `CheckpointEvery` (2) iterations (a fixed-round loop, not `Fixpoint` —
-  * without the cut the plan doubles per round). Nodes with no in-edges
-  * keep receiving `base` via their union row — nothing vanishes.
+  * per (dst × partition). Lineage is cut on the `Fixpoint.rounds`
+  * cadence. Nodes with no in-edges keep receiving `base` via their
+  * union row — nothing vanishes.
   */
 object PageRank {
 
   val MassUnit: Long = 1000000000000L // 1e12 pico-units of total mass
-
-  /** Iterations between lineage cuts; measured below at the loop. */
-  private val CheckpointEvery = 2
 
   /** Ranks the `topN` heaviest nodes of `edges` (directed src→dst).
     * Returns (`srcCol`, pr_pico, rank) — rank 1 = highest mass, ties
@@ -113,88 +111,73 @@ object PageRank {
       .persist()
     val nodes = e.select(col("__src").as("__v"))
       .union(e.select(col("__dst").as("__v"))).distinct().persist()
-    val n = nodes.count()
-    require(n > 0, "pageRank: empty graph")
-    // out-degree is a per-edge CONSTANT across iterations — annotate the
-    // edge list with it once and checkpoint, so the loop never joins the
-    // degree table again (r18: one join per iteration, not two)
-    val ed = e.groupBy("__src").agg(count(lit(1)).as("__od"))
-      .join(e, "__src")
-      .select(col("__src"), col("__dst"), col("__od"))
-      .localCheckpoint(eager = true)
-    // nodesB carries each node's per-step teleport mass: uniform for
-    // classic PageRank, seed-only for the personalized walk.
-    val nodesB = seeds match {
-      case None =>
-        nodes.select(col("__v"), lit((MassUnit * 3L) / (20L * n)).as("__base"))
-          .persist()
-      case Some(s) =>
-        val sd = s.persist()
-        // validation failures must not leak the caches persisted above
-        val nSeeds = try {
-          val n0 = sd.count()
-          require(n0 > 0, "personalizedPageRank: empty seed set")
-          val missing = sd.join(nodes, sd("__sv") === nodes("__v"), "left_anti")
-            .count()
-          require(missing == 0,
-            s"personalizedPageRank: $missing seeds are not graph nodes — " +
-              "silently dropping them would re-normalize the walk toward " +
-              "the survivors; intersect the seed set with the graph first")
-          n0
-        } catch {
-          case t: Throwable =>
-            sd.unpersist(); e.unpersist(); nodes.unpersist()
-            throw t
-        }
-        val flagged = nodes.join(sd, nodes("__v") === sd("__sv"), "left")
-          .select(col("__v"),
-            when(col("__sv").isNotNull,
-              lit((MassUnit * 3L) / (20L * nSeeds))).otherwise(lit(0L))
-              .as("__base"),
-            when(col("__sv").isNotNull, lit(MassUnit / nSeeds))
-              .otherwise(lit(0L)).as("__seedinit"))
-          .persist()
-        sd.unpersist()
-        flagged
-    }
-    val init = (seeds, prev) match {
-      case (Some(_), _) =>
-        nodesB.select(col("__v"), col("__seedinit").as("__mass"))
-      case (None, None) =>
-        nodes.select(col("__v"), lit(MassUnit / n).as("__mass"))
-      case (None, Some(p)) =>
-        nodes.join(p, nodes("__v") === p("__pv"), "left")
-          .select(col("__v"),
-            coalesce(col("__pmass"), lit(MassUnit / n)).as("__mass"))
-    }
-    // the teleport rows ride the SAME aggregation as the edge
-    // contributions: pr'(v) = Σ of {base row} ∪ {per-in-edge terms} —
-    // arithmetic identical to base + Σ contrib, one exchange per
-    // iteration instead of a groupBy plus a left join
-    val baseRows = nodesB.select(col("__v"), col("__base").as("__c"))
-    var pr = init.localCheckpoint(eager = true)
-    for (i <- 1 to iters) {
-      pr = ed
-        .join(pr, ed("__src") === pr("__v"))
-        .select(col("__dst").as("__v"),
-          expr("(__mass * 17L) div (20L * __od)").as("__c"))
-        .unionByName(baseRows)
-        .groupBy("__v").agg(sum(col("__c")).as("__mass"))
-      // checkpoint every K rounds, not every round: each eager
-      // localCheckpoint is a blocking job submission (~the iteration
-      // floor at small N), while the lineage between checkpoints is
-      // only K joins deep — the connectedComponents tradeoff, tuned.
-      // Measured on the sf0.1 kNN graph (5k nodes, 10 iters, warm):
-      // every-1 9.2 s, every-2 8.5 s, every-5 13.5 s (deep lineage
-      // re-analysis beats the jobs saved) — results bit-identical.
-      if (i % CheckpointEvery == 0 || i == iters)
-        pr = pr.localCheckpoint(eager = true)
-    }
-    e.unpersist(); nodes.unpersist(); nodesB.unpersist()
-    val cut = pr.select(col("__v").as(srcCol), col("__mass").as("pr_pico"))
-      .orderBy(col("pr_pico").desc, col(srcCol).asc)
-    (if (topN == Int.MaxValue) cut else cut.limit(topN))
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("pr_pico").desc, col(srcCol).asc)).cast("int"))
+    var nodesB: Option[DataFrame] = None
+    try {
+      val n = nodes.count()
+      require(n > 0, "pageRank: empty graph")
+      // out-degree is a per-edge CONSTANT across iterations — annotate the
+      // edge list with it once and checkpoint, so the loop never joins the
+      // degree table again (r18: one join per iteration, not two)
+      val ed = e.groupBy("__src").agg(count(lit(1)).as("__od"))
+        .join(e, "__src")
+        .select(col("__src"), col("__dst"), col("__od"))
+        .localCheckpoint(eager = true)
+      // base carries each node's per-step teleport mass: uniform for
+      // classic PageRank, seed-only for the personalized walk.
+      val base = seeds match {
+        case None =>
+          nodes.select(col("__v"), lit((MassUnit * 3L) / (20L * n)).as("__base"))
+            .persist()
+        case Some(s) =>
+          val sd = s.persist()
+          try {
+            val nSeeds = sd.count()
+            require(nSeeds > 0, "personalizedPageRank: empty seed set")
+            val missing = sd.join(nodes, sd("__sv") === nodes("__v"), "left_anti")
+              .count()
+            require(missing == 0,
+              s"personalizedPageRank: $missing seeds are not graph nodes — " +
+                "silently dropping them would re-normalize the walk toward " +
+                "the survivors; intersect the seed set with the graph first")
+            nodes.join(sd, nodes("__v") === sd("__sv"), "left")
+              .select(col("__v"),
+                when(col("__sv").isNotNull,
+                  lit((MassUnit * 3L) / (20L * nSeeds))).otherwise(lit(0L))
+                  .as("__base"),
+                when(col("__sv").isNotNull, lit(MassUnit / nSeeds))
+                  .otherwise(lit(0L)).as("__seedinit"))
+              .persist()
+          } finally sd.unpersist()
+      }
+      nodesB = Some(base)
+      val init = (seeds, prev) match {
+        case (Some(_), _) =>
+          base.select(col("__v"), col("__seedinit").as("__mass"))
+        case (None, None) =>
+          nodes.select(col("__v"), lit(MassUnit / n).as("__mass"))
+        case (None, Some(p)) =>
+          nodes.join(p, nodes("__v") === p("__pv"), "left")
+            .select(col("__v"),
+              coalesce(col("__pmass"), lit(MassUnit / n)).as("__mass"))
+      }
+      // the teleport rows ride the SAME aggregation as the edge
+      // contributions: pr'(v) = Σ of {base row} ∪ {per-in-edge terms} —
+      // arithmetic identical to base + Σ contrib, one exchange per
+      // iteration instead of a groupBy plus a left join
+      val baseRows = base.select(col("__v"), col("__base").as("__c"))
+      val pr = Fixpoint.rounds("pageRank", init, iters) { (pr, _) =>
+        ed
+          .join(pr, ed("__src") === pr("__v"))
+          .select(col("__dst").as("__v"),
+            expr("(__mass * 17L) div (20L * __od)").as("__c"))
+          .unionByName(baseRows)
+          .groupBy("__v").agg(sum(col("__c")).as("__mass"))
+      }
+      val cut = pr.select(col("__v").as(srcCol), col("__mass").as("pr_pico"))
+        .orderBy(col("pr_pico").desc, col(srcCol).asc)
+      (if (topN == Int.MaxValue) cut else cut.limit(topN))
+        .withColumn("rank", row_number().over(
+          Window.orderBy(col("pr_pico").desc, col(srcCol).asc)).cast("int"))
+    } finally { e.unpersist(); nodes.unpersist(); nodesB.foreach(_.unpersist()) }
   }
 }

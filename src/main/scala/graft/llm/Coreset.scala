@@ -36,9 +36,10 @@ import org.apache.spark.sql.functions._
   * literal (the classic k-center optimization: round i costs one
   * corpus map, not i of them). The argmin is TakeOrdered (local top-1
   * per partition + driver merge of one row each), the only driver
-  * collect is that single row per round, and lineage is cut with
-  * `localCheckpoint` on the PageRank cadence so round i's plan does
-  * not replay rounds 1..i-1. The quantized corpus is persisted once.
+  * collect is that single row per round, and lineage is cut every
+  * `CheckpointEvery` rounds so round i's plan does not replay rounds
+  * 1..i-1 (not `Fixpoint.rounds`: its cuts of the first and last state
+  * cost 12 -> 14 jobs at k = 8). The quantized corpus is persisted once.
   *
   * Returns the k selected centers as (idCol, sel_round, far_cos):
   * sel_round = 1-based selection order, far_cos = the center's max
@@ -54,7 +55,7 @@ import org.apache.spark.sql.functions._
   */
 object Coreset {
 
-  /** Rounds between lineage cuts — the PageRank cadence. */
+  /** Rounds between lineage cuts. */
   private val CheckpointEvery = 2
 
   def kCenters(df: DataFrame, idCol: String, embCol: String, k: Int): DataFrame = {
@@ -70,7 +71,10 @@ object Coreset {
     try {
       // Round 1: the minimum id — deterministic, partition-independent,
       // and replayable as ORDER BY id LIMIT 1 in the oracle.
-      val first = vecs.sort(col(idCol).asc).head()
+      val lowest = vecs.sort(col(idCol).asc).head(1)
+      require(lowest.nonEmpty,
+        s"kCenters: k=$k exceeds the number of distinct vectors (0 found)")
+      val first = lowest(0)
       val selected = collection.mutable.ArrayBuffer[(Long, Double)]()
 
       def centerCos(row: Row): org.apache.spark.sql.Column = {

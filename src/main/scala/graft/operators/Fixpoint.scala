@@ -6,14 +6,16 @@ import org.slf4j.LoggerFactory
 /** How a [[Fixpoint]] run ended: steps run, and whether the probe came to rest. */
 final case class Iterations(rounds: Int, converged: Boolean)
 
-/** The driver loop of graft's iterative operators. The initial frame and
-  * each `step(current, round)` (round from 0) are materialized by an eager
-  * `localCheckpoint`, which cuts the iterative lineage; the probe
-  * aggregates ride that same job through `Dataset.observe`, so convergence
-  * costs no job of its own. The run stops when a round's probe row equals
-  * the previous one, or after `maxRounds` steps, and logs one line: INFO
-  * when converged, WARN when capped. The checkpoint must be eager: on a
-  * lazy one the observation silently reads an empty frame (0, null).
+/** The driver loops of graft's iterative operators. Both forms call
+  * `step(current, round)` with the round from 0 and cut the iterative lineage
+  * with an eager `localCheckpoint`. `apply` runs to convergence: the initial
+  * frame and each step are materialized, and the probe aggregates ride that
+  * same job through `Dataset.observe`, so convergence costs no job of its
+  * own. It stops when a round's probe row equals the previous one, or after
+  * `maxRounds` steps, and logs one line: INFO when converged, WARN when
+  * capped. The checkpoint must be eager: on a lazy one the observation
+  * silently reads an empty frame (0, null). `rounds` runs a fixed number of
+  * steps.
   */
 object Fixpoint {
   private val log = LoggerFactory.getLogger(getClass)
@@ -39,5 +41,21 @@ object Fixpoint {
     val line = s"fixpoint op=$op rounds=${it.rounds} max=$maxRounds converged=${it.converged}"
     if (it.converged) log.info(line) else log.warn(line)
     (out, it)
+  }
+
+  /** Runs exactly `n` steps; `n = 0` returns `init` and starts no job.
+    * Cuts `init`, every second step (PageRank, sf0.1: every step 9.2 s,
+    * every second 8.5 s, every fifth 13.5 s) and the last, which must not
+    * read caches the caller releases after the loop. Uncut, `init` cost
+    * label propagation 45 jobs instead of 41 (sf0.1, 4 cores).
+    */
+  def rounds(op: String, init: DataFrame, n: Int)(
+      step: (DataFrame, Int) => DataFrame): DataFrame = {
+    require(n >= 0, s"$op: rounds must be >= 0, got $n")
+    def cut(df: DataFrame) = df.localCheckpoint(eager = true)
+    (0 until n).foldLeft(if (n == 0) init else cut(init)) { (cur, round) =>
+      val next = step(cur, round)
+      if (round % 2 == 1 || round == n - 1) cut(next) else next
+    }
   }
 }

@@ -106,6 +106,10 @@ class CoresetSpec extends SparkSpec {
       Coreset.kCenters(df, "vec_id", "embedding", k = 3).collect()
     }
     assert(e.getMessage.contains("exceeds"))
+    val empty = intercept[IllegalArgumentException] {
+      Coreset.kCenters(df.limit(0), "vec_id", "embedding", k = 1).collect()
+    }
+    assert(empty.getMessage.contains("exceeds the number of distinct vectors (0 found)"))
   }
 
   test("reserved columns are rejected") {

@@ -14,10 +14,13 @@ import graft.analytics.{Kcore, LabelProp}
 import graft.llm.Dedup
 import graft.operators.{Fixpoint, Iterations}
 
-/** The shared driver loop of the iterative operators: its probe values
-  * are the ones a direct aggregate over each round's frame gives, its
-  * report says how the run ended, it adds no job of its own, and every
-  * capped run of kcoreMembers, bfsHops and connectedComponents says so.
+/** The shared driver loops of the iterative operators. The convergence
+  * form: its probe values are the ones a direct aggregate over each
+  * round's frame gives, its report says how the run ended, it adds no
+  * job of its own, and every capped run of kcoreMembers, bfsHops and
+  * connectedComponents says so. The fixed-round form: it computes what
+  * plain repetition computes, and starts exactly one job per cut of its
+  * cadence.
   */
 class FixpointSpec extends SparkSpec {
 
@@ -70,42 +73,47 @@ class FixpointSpec extends SparkSpec {
   }
 
   test("a one-round run submits no more jobs than checkpointing the initial frame and one step") {
-    import java.util.concurrent.{CountDownLatch, TimeUnit}
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val groups = new ConcurrentLinkedQueue[String]()
-    val marker = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).flatMap(ps => Option(ps.getProperty("spark.jobGroup.id"))) match {
-          case Some("marker") => marker.countDown()
-          case Some(g)        => groups.add(g)
-          case None           =>
-        }
-    }
-    val sc = spark.sparkContext
-    def inGroup(g: String)(body: => Unit): Unit = {
-      sc.setJobGroup(g, g, interruptOnCancel = false)
-      try body finally sc.clearJobGroup()
-    }
     val init = spark.range(200).select((col("id") % 7).as("id")).groupBy("id").count()
     def step(cur: DataFrame, round: Int): DataFrame =
       cur.groupBy((col("id") % 3).as("id")).agg(sum("count").as("count"))
-    sc.addSparkListener(listener)
-    try {
-      inGroup("checkpoints") {
-        step(init.localCheckpoint(eager = true), 0).localCheckpoint(eager = true)
-      }
-      inGroup("fixpoint") {
-        assert(Fixpoint("one", init, 1, sum("count").as("fx_total"))(step)._2.rounds == 1)
-      }
-      // listener events arrive in order: once the marker job has started,
-      // every job before it has been counted
-      inGroup("marker")(spark.range(1).count())
-      assert(marker.await(30, TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(listener)
-    val counts = groups.asScala.toSeq.groupBy(identity).map { case (g, js) => g -> js.size }
+    val counts = jobsByGroup(
+      "checkpoints" -> (() =>
+        step(init.localCheckpoint(eager = true), 0).localCheckpoint(eager = true)),
+      "fixpoint" -> (() =>
+        assert(Fixpoint("one", init, 1, sum("count").as("fx_total"))(step)._2.rounds == 1)))
     assert(counts("checkpoints") > 0)
     assert(counts("fixpoint") <= counts("checkpoints"), counts)
+  }
+
+  /** A shuffle-free step, so that one cut of its frame is one job. */
+  private def affine(cur: DataFrame, round: Int): DataFrame =
+    cur.select(((col("id") * 3 + round) % 101).as("id"))
+
+  test("rounds(n) gives the same rows as n plain applications of step") {
+    val init = spark.range(50).toDF()
+    for (n <- 0 to 5) {
+      val plain = (0 until n).foldLeft(init)(affine)
+      val fixed = Fixpoint.rounds("affine", init, n)(affine)
+      assert(fixed.exceptAll(plain).isEmpty && plain.exceptAll(fixed).isEmpty, s"n = $n")
+    }
+  }
+
+  test("rounds cuts init, every second step and the last step, and nothing else") {
+    val init = spark.range(50).toDF()
+    val cuts = Map(1 -> 2, 2 -> 2, 3 -> 3, 4 -> 3, 5 -> 4, 6 -> 4)
+    val oneCut = "one cut" -> (() => affine(init, 0).localCheckpoint(eager = true))
+    val runs = cuts.keys.toSeq.sorted.map(n => s"n=$n" -> (() => Fixpoint.rounds("affine", init, n)(affine)))
+    val jobs = jobsByGroup(oneCut +: runs: _*)
+    assert(jobs("one cut") == 1, jobs)
+    for ((n, c) <- cuts) assert(jobs(s"n=$n") == c, s"n = $n: $jobs")
+  }
+
+  test("rounds(0) returns init without starting a job; a negative count is rejected") {
+    val init = spark.range(50).toDF()
+    val zero = jobsByGroup("zero" -> (() => assert(Fixpoint.rounds("affine", init, 0)(affine) eq init)))
+    assert(zero("zero") == 0)
+    val e = intercept[IllegalArgumentException](Fixpoint.rounds("affine", init, -1)(affine))
+    assert(e.getMessage.contains("affine"))
   }
 
   test("a capped kcoreMembers, bfsHops or connectedComponents logs one WARN line; a converged one none") {

@@ -119,6 +119,19 @@ class PageRankSpec extends SparkSpec {
     assert(e2.getMessage.contains("empty seed set"))
   }
 
+  test("an empty graph fails loudly and leaves no cache behind") {
+    import spark.implicits._
+    // ids, not a count: the context cleaner may drop unreferenced
+    // checkpoints of earlier tests meanwhile
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    val empty = intercept[IllegalArgumentException] {
+      PageRank.pageRank(Seq.empty[(Long, Long)].toDF("src", "dst"), "src", "dst").collect()
+    }
+    assert(empty.getMessage.contains("empty graph"))
+    assert((persisted -- before).isEmpty, spark.sparkContext.getPersistentRDDs)
+  }
+
   test("warm start: composition law on an unchanged graph — warm(cold(5), 3) = cold(8) bit-for-bit") {
     import spark.implicits._
     val edges = (0 until 40).flatMap { i =>

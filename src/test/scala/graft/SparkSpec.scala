@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,4 +31,36 @@ object TestSpark {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** Runs each body, in order, in a Spark job group of its name and
+    * returns the number of jobs each one started (0 for none).
+    */
+  def jobsByGroup(bodies: (String, () => Any)*): Map[String, Int] = {
+    val marker = "jobsByGroup-marker"
+    val groups = new ConcurrentLinkedQueue[String]()
+    val markerStarted = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(ps => Option(ps.getProperty("spark.jobGroup.id"))) match {
+          case Some(`marker`) => markerStarted.countDown()
+          case Some(g)        => groups.add(g)
+          case None           =>
+        }
+    }
+    val sc = spark.sparkContext
+    def inGroup(g: String)(body: => Any): Unit = {
+      sc.setJobGroup(g, g, interruptOnCancel = false)
+      try body finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      for ((g, body) <- bodies) inGroup(g)(body())
+      // listener events arrive in order: once the marker job has started,
+      // every job before it has been counted
+      inGroup(marker)(spark.range(1).count())
+      assert(markerStarted.await(30, TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    val started = groups.asScala.toSeq
+    bodies.map { case (g, _) => g -> started.count(_ == g) }.toMap
+  }
 }

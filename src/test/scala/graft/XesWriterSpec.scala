@@ -207,40 +207,6 @@ class XesWriterSpec extends SparkSpec {
     try body finally spark.conf.set(key, before)
   }
 
-  /** The number of Spark jobs `body` starts, counted by job group as
-    * the job-count test below counts them.
-    */
-  private def jobCount(body: => Unit): Int = {
-    import java.util.concurrent.{CountDownLatch, TimeUnit}
-    import java.util.concurrent.atomic.AtomicInteger
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    def group(js: SparkListenerJobStart): Option[String] =
-      Option(js.properties).flatMap(ps => Option(ps.getProperty("spark.jobGroup.id")))
-    val counted = new AtomicInteger
-    val marker = new CountDownLatch(1)
-    val sc = spark.sparkContext
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = group(js) match {
-        case Some("counted") => counted.incrementAndGet()
-        case Some("marker")  => marker.countDown()
-        case _               =>
-      }
-    }
-    def inGroup(g: String)(b: => Unit): Unit = {
-      sc.setJobGroup(g, g, interruptOnCancel = false)
-      try b finally sc.clearJobGroup()
-    }
-    sc.addSparkListener(listener)
-    try {
-      inGroup("counted")(body)
-      // listener events arrive in order: once the marker job has started,
-      // every job before it has been counted
-      inGroup("marker")(spark.range(1).count())
-      assert(marker.await(30, TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(listener)
-    counted.get
-  }
-
   /** Publishes `params` uncached, checks that the file lands on the key
     * of `params` as sent, then checks that a cached repeat is a hit on
     * that file which runs no Spark job and leaves the file untouched.
@@ -250,10 +216,9 @@ class XesWriterSpec extends SparkSpec {
     assert(EventLogGenerator.generateXes(dated, params, cache, useCache = false).contains(path), clue)
     val mtime = java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 5000)
     Files.setLastModifiedTime(path, mtime)
-    val jobs = jobCount {
-      assert(EventLogGenerator.generateXes(dated, params, cache).contains(path), clue)
-    }
-    assert(jobs == 0, clue)
+    val jobs = jobsByGroup("hit" -> (() =>
+      assert(EventLogGenerator.generateXes(dated, params, cache).contains(path), clue)))
+    assert(jobs("hit") == 0, clue)
     assert(Files.getLastModifiedTime(path) == mtime, clue)
   }
 
@@ -294,39 +259,15 @@ class XesWriterSpec extends SparkSpec {
   }
 
   test("a dateless uncached generateXes runs no more Spark jobs than draining its traces") {
-    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-    val groups = new ConcurrentLinkedQueue[String]()
-    val done = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).flatMap(ps => Option(ps.getProperty("spark.jobGroup.id")))
-          .foreach(groups.add)
-      override def onJobEnd(je: SparkListenerJobEnd): Unit =
-        if (groups.contains("marker")) done.countDown()
-    }
-    val sc = spark.sparkContext
     val params = Params(resourceIds = Seq("r1", "r2"))
     val cache = new ResultCache(tmpDir("xes-jobs"), ttlSeconds = 3600)
-    def inGroup(g: String)(body: => Unit): Unit = {
-      sc.setJobGroup(g, g, interruptOnCancel = false)
-      try body finally sc.clearJobGroup()
-    }
-    sc.addSparkListener(listener)
-    try {
-      inGroup("drain") {
+    val counts = jobsByGroup(
+      "drain" -> (() => {
         val it = XesWriter.traceXml(EventLogGenerator.generate(dated, params)).toLocalIterator()
         while (it.hasNext) it.next()
-      }
-      inGroup("generateXes") {
-        assert(EventLogGenerator.generateXes(dated, params, cache, useCache = false).isDefined)
-      }
-      // listener events arrive in order: once the marker job has ended,
-      // every job before it has been counted
-      inGroup("marker")(spark.range(1).count())
-      assert(done.await(30, TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(listener)
-    val counts = groups.asScala.toSeq.groupBy(identity).map { case (g, js) => g -> js.size }
+      }),
+      "generateXes" -> (() =>
+        assert(EventLogGenerator.generateXes(dated, params, cache, useCache = false).isDefined)))
     assert(counts("drain") > 0)
     assert(counts("generateXes") <= counts("drain"), s"jobs per group: $counts")
   }
