@@ -107,11 +107,7 @@ object Bench {
     // bench_out.json write, so a two-query adjudication pass can never
     // clobber the committed full-suite baseline.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, s"SPARK_GRAFT_ONLY names unknown queries: $unknown")
-    }
+      .map(SparkEntry.only(_).fold(err => throw new IllegalArgumentException(err), identity))
     val selected = only match {
       case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
       case None => SparkEntry.queries

@@ -39,6 +39,20 @@ object SparkEntry {
       graft.queries.RelationalQueries.queries ++
       graft.queries.PipelineQueries.queries
 
+  /** The query names a comma-separated `SPARK_GRAFT_ONLY` list selects.
+    * Blank entries are skipped. Left carries the error when a name is
+    * not a query or no name is left: a subset run that matches nothing
+    * would otherwise "pass" by running nothing.
+    */
+  def only(list: String): Either[String, Set[String]] = {
+    val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = names -- queries.keySet
+    if (names.isEmpty) Left(s"SPARK_GRAFT_ONLY names no query: '$list'")
+    else if (unknown.nonEmpty)
+      Left(s"SPARK_GRAFT_ONLY names unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    else Right(names)
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.
     */

@@ -17,18 +17,12 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // Local-iteration filter: SPARK_GRAFT_ONLY=q_a,q_b dumps just those
     // queries. Unset (the driver's invocation) → the full inventory.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    // A mistyped name would otherwise match nothing and the run would
-    // "pass" by dumping nothing — fail loudly instead (r8 advisor).
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      if (unknown.nonEmpty) {
-        System.err.println(
-          s"[verify] FATAL: SPARK_GRAFT_ONLY names not in SparkEntry.queries: ${unknown.mkString(", ")}")
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(SparkEntry.only(_) match {
+      case Right(names) => names
+      case Left(err) =>
+        System.err.println(s"[verify] FATAL: $err")
         sys.exit(2)
-      }
-    }
+    })
     def selected(name: String): Boolean = only.forall(_.contains(name))
     SparkEntry.queries
       .filter { case (name, _) => selected(name) }

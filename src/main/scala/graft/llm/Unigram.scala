@@ -162,21 +162,17 @@ object Unigram {
   /** Per-source subword statistics under the unigram table — the same
     * encode-ONCE-per-distinct-word scale shape as `Bpe.subwordStats`
     * (vocabulary-sized kernel pass, corpus picks counts up through a
-    * broadcast join; `broadcastEncoded = false` swaps to a
-    * shuffle-hash join for adversarial vocabularies).
+    * broadcast join).
     */
   def subwordStats(df: DataFrame, groupCol: String, textCol: String,
-                   pieces: Seq[(String, Long)], maxPieceLen: Int = 8,
-                   broadcastEncoded: Boolean = true): DataFrame = {
+                   pieces: Seq[(String, Long)], maxPieceLen: Int = 8): DataFrame = {
     val toks = df
       .withColumn("__toks", TextOps.tokens(textCol))
       .select(col(groupCol), explode_outer(col("__toks")).as("tok"))
       .filter(col("tok").isNotNull && col("tok") =!= "")
     val vocabEnc = toks.select("tok").distinct()
       .withColumn("n_sub", size(encode(col("tok"), pieces, maxPieceLen)))
-    val enc = if (broadcastEncoded) broadcast(vocabEnc)
-              else vocabEnc.hint("shuffle_hash")
-    toks.join(enc, Seq("tok"))
+    toks.join(broadcast(vocabEnc), Seq("tok"))
       .groupBy(groupCol)
       .agg(count(lit(1)).as("n_words"),
         sum(col("n_sub").cast("long")).as("n_subwords"),

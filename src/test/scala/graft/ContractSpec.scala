@@ -79,13 +79,12 @@ class ContractSpec extends SparkSpec {
     // The driver canonicalizes by sorting EVERY column in pandas; an
     // array/map/struct cell is unhashable there and the query then
     // registers NOTHING — not even a row count (r8 verdict #1,
-    // q_pca_project). Schema resolution is analysis-only, so this
-    // sweeps all queries cheaply.
+    // q_pca_project). The schemas come from the plan ledger's one
+    // construction pass over all queries.
     import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
-    val dir = "/root/testdata/sf0.001"
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, q) =>
-        q(spark, dir).schema.fields.collect {
+    val offenders = PlanLedger.pass.toSeq.sortBy(_._1).flatMap {
+      case (name, e) =>
+        e.schema.fields.collect {
           case f if f.dataType.isInstanceOf[ArrayType] ||
             f.dataType.isInstanceOf[MapType] ||
             f.dataType.isInstanceOf[StructType] =>
@@ -94,5 +93,12 @@ class ContractSpec extends SparkSpec {
     }
     assert(offenders.isEmpty,
       s"complex-typed columns would be invisible to the driver: $offenders")
+  }
+
+  test("SPARK_GRAFT_ONLY skips blank entries and rejects unknown names") {
+    assert(SparkEntry.only("q_topk,, q_union,") == Right(Set("q_topk", "q_union")))
+    assert(SparkEntry.only(" , ").isLeft)
+    assert(SparkEntry.only("q_topk,q_nope") ==
+      Left("SPARK_GRAFT_ONLY names unknown queries: q_nope"))
   }
 }

@@ -8,7 +8,8 @@ Usage:
 Prints the markdown block that belongs between the
 `<!-- BEGIN bench_out.json -->` / `<!-- END bench_out.json -->`
 markers in BASELINE.md; with --apply it rewrites that block in place.
-The judge reads ONE table; the prose history lives in the appendix.
+The judge reads ONE table; below it BASELINE.md keeps only a short list of
+measurement lessons, and the round-by-round history lives in git.
 """
 import json
 import sys
@@ -20,7 +21,7 @@ def block(b):
     sf = str(b["sf"]).rstrip("/").split("/")[-1]
     lines.append(f"`graft.Bench`, local[32], {sf}: "
                  f"**{len(q)} queries, {b['value']:.1f} s total** "
-                 f"(min-of-passes protocol, see below).")
+                 f"(min-of-passes protocol, see Bench.scala).")
     lines.append("")
     heavy = sorted((s, n) for n, s in q.items() if s >= 2.0)[::-1]
     mid = [(s, n) for n, s in q.items() if 0.5 <= s < 2.0]
@@ -33,9 +34,7 @@ def block(b):
     lines.append(f"| < 0.5 s | {len(cheap)} | {sum(s for s, _ in cheap):.1f} |")
     lines.append("")
     lines.append("Heaviest queries (each a documented Σf²-BY-CONTRACT exact "
-                 "tier or a sum-of-its-parts composition — every one has a "
-                 "gated sub-quadratic arm or a persisted-prefix note in the "
-                 "tier notes):")
+                 "tier or a sum-of-its-parts composition):")
     lines.append("")
     lines.append("| query | sec |")
     lines.append("|---|---|")
