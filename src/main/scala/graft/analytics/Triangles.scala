@@ -40,16 +40,21 @@ import org.apache.spark.sql.functions._
 object Triangles {
 
   def localTriangles(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
+    // und, deg and od are each read by several joins below: eager local
+    // checkpoints compute each once and leave no CacheManager entry
+    // behind (q_triangles, sf0.1, 4 cores, same JVM, min of 3: 2.43 s against
+    // 3.09 s for uncut persists and 2.87 s for persists released after
+    // checkpointing the result)
     val und = edges
       .select(least(col(aCol), col(bCol)).as("a"),
         greatest(col(aCol), col(bCol)).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
-      .persist()
+      .localCheckpoint(eager = true)
     val deg = und.select(col("a").as("v"))
       .union(und.select(col("b").as("v")))
       .groupBy("v").agg(count(lit(1)).as("degree"))
-      .persist()
+      .localCheckpoint(eager = true)
     // src = argmin of the two endpoints under (degree, id); a < b by
     // construction, so a wins ties — degree dominates, id breaks.
     val ori = und
@@ -63,7 +68,7 @@ object Triangles {
     val od = ori
       .join(deg.select(col("v").as("dst"), col("degree").as("__dd")), Seq("dst"))
       .select(col("src"), col("dst"), col("__dd"))
-      .persist()
+      .localCheckpoint(eager = true)
     val wedges = od.as("e1").join(od.as("e2"),
         col("e1.src") === col("e2.src") &&
           (col("e1.__dd") < col("e2.__dd") ||

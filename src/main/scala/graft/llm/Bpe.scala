@@ -113,19 +113,6 @@ object Bpe {
   def encode(tokenCol: Column, merges: Seq[(String, String)]): Column =
     graft.functions.BpeFunctions.bpeEncode(tokenCol, merges)
 
-  /** Per-source subword statistics — the scale-aware shape: tokens are
-    * encoded ONCE PER DISTINCT WORD (a vocabulary-sized map pass), and
-    * the corpus-sized token stream picks its subword count up through
-    * a broadcast join. Encoding per occurrence would run the merge
-    * loop ~(corpus/vocab)× more often for identical results.
-    *
-    * The distinct-word table is natural-language-vocabulary-shaped
-    * (Heaps' law keeps it sublinear in corpus size) but NOT bounded by
-    * `maxVocab` — adversarial corpora (random hex, id dumps) make it
-    * corpus-sized. `broadcastEncoded = false` swaps the map-side join
-    * for a shuffle-hash join on the token key for that regime;
-    * row-identical either way.
-    */
   /** Tokenizer fertility report — the standard tokenizer-evaluation
     * metric, per group (typically language): subwords emitted per
     * whitespace word and characters per subword, both in exact
@@ -136,26 +123,33 @@ object Bpe {
     * arithmetic runs on the collapsed per-group rows.
     */
   def fertility(df: DataFrame, groupCol: String, textCol: String,
-                merges: Seq[(String, String)],
-                broadcastEncoded: Boolean = true): DataFrame =
-    subwordStats(df, groupCol, textCol, merges, broadcastEncoded)
+                merges: Seq[(String, String)]): DataFrame =
+    subwordStats(df, groupCol, textCol, merges)
       .withColumn("fertility_micro",
         expr("(n_subwords * 1000000L) div n_words"))
       .withColumn("chars_per_subword_micro",
         expr("(n_chars * 1000000L) div n_subwords"))
 
+  /** Per-source subword statistics — the scale-aware shape: tokens are
+    * encoded ONCE PER DISTINCT WORD (a vocabulary-sized map pass), and
+    * the corpus-sized token stream picks its subword count up through
+    * a broadcast join. Encoding per occurrence would run the merge
+    * loop ~(corpus/vocab)× more often for identical results.
+    *
+    * The distinct-word table is natural-language-vocabulary-shaped
+    * (Heaps' law keeps it sublinear in corpus size) but NOT bounded by
+    * `maxVocab` — adversarial corpora (random hex, id dumps) make it
+    * corpus-sized, and the broadcast then ships a corpus-sized table.
+    */
   def subwordStats(df: DataFrame, groupCol: String, textCol: String,
-                   merges: Seq[(String, String)],
-                   broadcastEncoded: Boolean = true): DataFrame = {
+                   merges: Seq[(String, String)]): DataFrame = {
     val toks = df
       .withColumn("__toks", TextOps.tokens(textCol))
       .select(col(groupCol), explode_outer(col("__toks")).as("tok"))
       .filter(col("tok").isNotNull && col("tok") =!= "")
     val vocabEnc = toks.select("tok").distinct()
       .withColumn("n_sub", size(encode(col("tok"), merges)))
-    val enc = if (broadcastEncoded) broadcast(vocabEnc)
-              else vocabEnc.hint("shuffle_hash")
-    toks.join(enc, Seq("tok"))
+    toks.join(broadcast(vocabEnc), Seq("tok"))
       .groupBy(groupCol)
       .agg(count(lit(1)).as("n_words"),
         sum(col("n_sub").cast("long")).as("n_subwords"),

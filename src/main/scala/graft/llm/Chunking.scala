@@ -134,11 +134,10 @@ object Chunking {
     * pipeline reproduces the exact same sample — the property random()
     * sampling can't give an incremental 100 TB pipeline.
     *
-    * `portableHash = true` (default) uses a Weyl mix on the low 16 id
-    * bits — exact integer arithmetic both Spark and DuckDB reproduce,
-    * so the query is oracle-checkable; granularity is 1/65536 and ids
-    * congruent mod 2^16 sample together. Production corpora with
-    * opaque ids should pass `false` for full-width `xxhash64`.
+    * The hash is a Weyl mix on the low 16 id bits — exact integer
+    * arithmetic both Spark and DuckDB reproduce, so the query is
+    * oracle-checkable; granularity is 1/65536 and ids congruent mod
+    * 2^16 sample together.
     */
   /** Deterministic train/val/test assignment: the same Weyl bucket as
     * `stratifiedSample` cut into cumulative-weight ranges, emitted as
@@ -699,15 +698,12 @@ object Chunking {
   }
 
   def stratifiedSample(df: DataFrame, stratumCol: String, idCol: String,
-                       rates: Map[String, Double],
-                       portableHash: Boolean = true): DataFrame = {
+                       rates: Map[String, Double]): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val ratesDf = rates.toSeq.sortBy(_._1).toDF(stratumCol, "__rate")
     val denom = 65536L
-    val bucket =
-      if (portableHash) pmod(pmod(col(idCol), lit(denom)) * lit(40503L), lit(denom))
-      else pmod(xxhash64(col(idCol)), lit(denom))
+    val bucket = pmod(pmod(col(idCol), lit(denom)) * lit(40503L), lit(denom))
     df.select(col(idCol), col(stratumCol))
       .join(broadcast(ratesDf), Seq(stratumCol))
       .where(bucket < col("__rate") * lit(denom.toDouble))

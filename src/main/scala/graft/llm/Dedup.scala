@@ -55,154 +55,62 @@ object Dedup {
     * count). This is the ORACLE-CHECKABLE exact tier; MinHash-LSH
     * below is the same semantics with sub-quadratic candidates and is
     * the 100 TB path.
+    *
+    * An inverted-index set-similarity join: `coOccurrence` counts
+    * |A∩B| per pair over `postingsOf`, the Jaccard size prefilter
+    * (`sizeBound`) rides in its join condition, and `jaccardOf` scores
+    * it. Output is identical to the naive all-pairs join (LlmDedupSpec
+    * pins this against an in-memory brute force). `maxPostingLen` drops
+    * hot postings from one join side (`capHot`): capped output may
+    * under-count, and `hotPostings` names exactly what was dropped.
+    * `ngramJaccardPairsPrefix` is the output-equal arm for corpora with
+    * selective grams.
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         blockCol: String, n: Int, threshold: Double,
-                        maxPostingLen: Option[Int] = None,
-                        prefixFilter: Boolean = false): DataFrame = {
-    if (prefixFilter) {
-      require(maxPostingLen.isEmpty,
-        "prefixFilter and maxPostingLen are alternative hot-gram defenses; pick one")
-      return ngramJaccardPairsPrefix(df, idCol, textCol, blockCol, n, threshold)
-    }
-    // Inverted-index set-similarity join: explode each document's
-    // distinct n-grams into postings, join postings on (block, gram) —
-    // high-cardinality keys, so parallelism scales with gram
-    // cardinality, not the handful of block values — then |A∩B| is the
-    // count of co-occurring grams per pair: no per-pair array
-    // materialization or set operations at all. The size prefilter
-    // (jaccard >= t ⇒ min|set| >= t·max|set|) rides in the join
-    // condition. Output is identical to the naive all-pairs join
-    // (LlmDedupSpec pins this against an in-memory brute force).
-    //
-    // Scale notes: the co-occurrence volume is Σ_gram f² per block —
-    // hot boilerplate grams are the risk; AQE skew-join splitting
-    // absorbs moderate skew. A PPJoin-style rarest-first prefix filter
-    // was measured here and LOST on this fixture (1.4M of 2.3M pairs
-    // survived it — the 931-gram vocabulary makes every gram common,
-    // so the saved co-occurrences didn't pay for per-candidate array
-    // verification); on real corpora with selective grams it wins,
-    // trading this count-only aggregation for a candidate set that no
-    // longer grows with Σ f² — that arm is `prefixFilter = true`
-    // (ngramJaccardPairsPrefix), output-equal by construction and
-    // property-gated on a realistic-vocabulary corpus in LlmDedupSpec.
-    // (Measured: swapping the gram string for xxhash64(gram) as the
-    // join key does NOT move this query — the cost is the Σf²
-    // co-occurrence row count, not key width — so the exact tier keeps
-    // collision-free string identity.)
-    val allPostings = postingsOf(df, idCol, textCol, blockCol, n)
-    // Optional hot-gram guard: a (block, gram) posting list of length f
-    // contributes f² co-occurrence rows, so one boilerplate shingle at
-    // corpus scale stalls the stage. With `maxPostingLen` set, postings
-    // hotter than the cap are DROPPED from the join — which loses the
-    // intersections they carried, so capped output may under-count
-    // Jaccard. The hot list stays a DataFrame anti-join side (a
-    // |postings|/cap-bounded aggregate): at 100 TB that list can be
-    // 10⁷-10⁸ rows, which must never collect to the driver, and keeping
-    // the plan fully lazy means merely CONSTRUCTING a capped query runs
-    // no job. The drop is never silent: `hotPostings` is the audit
-    // query (same postingsOf subtree, so it cannot drift from what the
-    // join drops), and the harness runs it as q_hot_postings beside
-    // q_ngram_jaccard_capped. Cost note: the postings subtree is
-    // evaluated twice (main + hot side) — that re-scan is the price of
-    // laziness and is linear, unlike the f² blowup the cap removes.
-    // The cap anti-joins ONE side only: an equi-join co-occurrence row
-    // needs the gram on BOTH sides, so removing hot grams from side a
-    // alone kills exactly the same pairs as filtering both — and the
-    // self-join then evaluates the (postings + hot-agg) subtree once,
-    // not twice (measured: two-sided capping cost MORE than it saved
-    // on the fixture; one-sided is ~2× cheaper than uncapped).
-    val cappedA = maxPostingLen match {
-      case None => allPostings
-      case Some(cap) =>
-        val hot = hotPostings(df, idCol, textCol, blockCol, n, cap)
-          .select(col(blockCol), col("gram"))
-        allPostings.join(hot, Seq(blockCol, "gram"), "left_anti")
-    }
-    val a = cappedA.as("a")
-    val b = allPostings.as("b")
-    a.join(b, col(s"a.$blockCol") === col(s"b.$blockCol") &&
-             col("a.gram") === col("b.gram") &&
-             col(s"a.$idCol") < col(s"b.$idCol") &&
-             least(col("a.sz"), col("b.sz")).cast("double") >=
-               greatest(col("a.sz"), col("b.sz")).cast("double") * threshold)
-      .groupBy(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"),
-        col("a.sz").as("sza"), col("b.sz").as("szb"))
-      .agg(count(lit(1)).as("isz"))
-      .select(col("id_a"), col("id_b"),
-        (col("isz").cast("double") /
-          (col("sza") + col("szb") - col("isz")).cast("double")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+                        maxPostingLen: Option[Int] = None): DataFrame = {
+    val (a, b) = capHot(df, idCol, textCol, blockCol, n, maxPostingLen)
+    jaccardOf(coOccurrence(a, b, Seq(blockCol, "gram"), idCol, "sz", "isz",
+      sizeBound(threshold)), threshold)
   }
 
   /** Asymmetric near-dup: n-gram CONTAINMENT pairs. Jaccard misses a
     * small document lifted wholesale into a much larger one (the
     * union denominator swamps the intersection); containment scores
     * |A∩B| / min(|A|,|B|), so a fully-embedded small doc scores 1.0
-    * regardless of the host's size. Same inverted-index join as
-    * `ngramJaccardPairs` (one posting explode, co-occurrence count,
-    * no per-pair arrays) MINUS the size prefilter — a size ratio is
-    * exactly what containment must not prune on. The Σf² scale story
-    * and hot-gram exposure are the Jaccard tier's; at passage
-    * granularity the winnowing index (`fingerprintPairs`) is the
-    * sub-quadratic arm of the same question.
+    * regardless of the host's size. The same `coOccurrence` count and
+    * `capHot` valve as `ngramJaccardPairs`, scored by `containmentOf`,
+    * MINUS the size prefilter — a size ratio is exactly what
+    * containment must not prune on, which makes the cap matter more
+    * here. At passage granularity the winnowing index
+    * (`fingerprintPairs`) is the sub-quadratic arm of the same question.
     */
   def ngramContainmentPairs(df: DataFrame, idCol: String, textCol: String,
                             blockCol: String, n: Int, threshold: Double,
                             maxPostingLen: Option[Int] = None): DataFrame = {
     require(threshold > 0.0, "ngramContainmentPairs: threshold must be > 0")
-    val allPostings = postingsOf(df, idCol, textCol, blockCol, n)
-    // same hot-gram valve and one-sided-cap reasoning as
-    // ngramJaccardPairs — MORE important here, since containment has
-    // no size prefilter thinning the co-occurrence rows; the cap's
-    // audit is the same `hotPostings` query, and capped output
-    // under-counts BY CONTRACT (never silently: run the audit beside)
-    val p = maxPostingLen match {
-      case None => allPostings
-      case Some(cap) =>
-        val hot = hotPostings(df, idCol, textCol, blockCol, n, cap)
-          .select(col(blockCol), col("gram"))
-        allPostings.join(hot, Seq(blockCol, "gram"), "left_anti")
-    }
-    val a = p.as("a")
-    val b = allPostings.as("b")
-    a.join(b, col(s"a.$blockCol") === col(s"b.$blockCol") &&
-             col("a.gram") === col("b.gram") &&
-             col(s"a.$idCol") < col(s"b.$idCol"))
-      .groupBy(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"),
-        col("a.sz").as("sza"), col("b.sz").as("szb"))
-      .agg(count(lit(1)).as("shared"))
-      .select(col("id_a"), col("id_b"), col("shared"),
-        (col("shared").cast("double") /
-          least(col("sza"), col("szb")).cast("double")).as("containment"))
-      .filter(col("containment") >= threshold)
+    val (a, b) = capHot(df, idCol, textCol, blockCol, n, maxPostingLen)
+    containmentOf(coOccurrence(a, b, Seq(blockCol, "gram"), idCol, "sz", "shared"),
+      threshold)
   }
 
   /** Sub-quadratic arm of `ngramContainmentPairs` — the asymmetric
     * prefix filter. Containment's denominator is min(|A|,|B|), so a
     * symmetric size prefilter is forbidden, but a PREFIX filter on the
-    * SMALLER set is still sound: order each document's grams under one
-    * global rarest-first total order (document frequency per block,
-    * gram string tie-break) and keep the first
-    * |S| - ⌈t·|S|⌉ + 1 grams. For any pair with containment ≥ t the
+    * SMALLER set is still sound: for any pair with containment ≥ t the
     * shared-gram count is an integer ≥ ⌈t·|S|⌉ where S is the smaller
     * set — strictly more than S's suffix holds — so the other document
-    * must hit S's prefix (pigeonhole). Candidates therefore come from
-    * joining every document's own prefix postings against FULL
-    * postings of documents at least as large (`s.sz <= o.sz` keeps s
-    * on the min side; ties probe both directions and dedup), and the
-    * exact array verification makes output identical to the standard
-    * arm — same integer shared count, same one-divide double — so it
-    * carries the same DuckDB oracle verbatim.
+    * must hit S's `prefixPostings` (pigeonhole). Candidates therefore
+    * come from joining every document's own prefix postings against
+    * FULL postings of documents at least as large (`s.sz <= o.sz` keeps
+    * s on the min side; ties probe both directions and dedup), and the
+    * exact verify over `gramSets` (`withSets`, `containmentOf`) makes
+    * output identical to the standard arm, so it carries the same
+    * DuckDB oracle verbatim.
     *
     * Cost trade mirrors `ngramJaccardPairsPrefix`: candidate volume is
-    * Σ_gram (prefix_f × full_f) instead of Σ_gram f², and prefix grams
-    * are the rarest ones, so on selective-vocabulary corpora the
-    * quadratic surface collapses; the price is per-candidate array
-    * materialization. On the fixture's 31-word vocabulary every gram
-    * is common and the standard arm wins — the crossover is gated by
-    * output-equality in LlmDedupSpec on a realistic-vocabulary corpus,
-    * exactly the PPJoin story.
+    * Σ_gram (prefix_f × full_f) instead of Σ_gram f²; on the fixture's
+    * 31-word vocabulary every gram is common and the standard arm wins.
     */
   def ngramContainmentPairsBanded(df: DataFrame, idCol: String, textCol: String,
                                   blockCol: String, n: Int,
@@ -210,16 +118,7 @@ object Dedup {
     require(threshold > 0.0 && threshold <= 1.0,
       "ngramContainmentPairsBanded: threshold must be in (0, 1]")
     val postings = postingsOf(df, idCol, textCol, blockCol, n, spread = false)
-    val freq = postings.groupBy(col(blockCol), col("gram"))
-      .agg(count(lit(1)).as("__df"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(blockCol), col(idCol))
-      .orderBy(col("__df"), col("gram"))
-    val prefix = postings.join(freq, Seq(blockCol, "gram"))
-      .withColumn("__rnk", row_number().over(w))
-      .filter(col("__rnk") <= col("sz") - ceil(lit(threshold) * col("sz")) + 1)
-      .select(col(blockCol), col("gram"), col(idCol), col("sz"))
-    val s = prefix.as("s")
+    val s = prefixPostings(postings, idCol, blockCol, threshold).as("s")
     val o = postings.as("o")
     val candidates = s.join(o,
         col(s"s.$blockCol") === col(s"o.$blockCol") &&
@@ -229,57 +128,53 @@ object Dedup {
       .select(least(col(s"s.$idCol"), col(s"o.$idCol")).as("id_a"),
         greatest(col(s"s.$idCol"), col(s"o.$idCol")).as("id_b"))
       .distinct()
-    val sets = df.filter(col(blockCol).isNotNull)
-      .withColumn("__toks", TextOps.tokens(textCol))
-      .select(col(idCol), TextOps.ngrams("__toks", n).as("grams"))
-      .withColumn("sz", coalesce(size(col("grams")), lit(-1)))
-      .select(col(idCol), col("grams"), col("sz"))
-    candidates
-      .join(sets.toDF("id_a", "ga", "sza"), "id_a")
-      .join(sets.toDF("id_b", "gb", "szb"), "id_b")
-      .withColumn("shared", size(array_intersect(col("ga"), col("gb"))).cast("long"))
-      .select(col("id_a"), col("id_b"), col("shared"),
-        (col("shared").cast("double") /
-          least(col("sza"), col("szb")).cast("double")).as("containment"))
-      .filter(col("containment") >= threshold)
+    containmentOf(withSets(candidates, gramSets(df.filter(col(blockCol).isNotNull),
+        textCol, n, idCol))
+      .withColumn("shared", size(array_intersect(col("ga"), col("gb"))).cast("long")),
+      threshold)
   }
 
-  /** The exploded (id, block, |grams|, gram) posting frame both the
-    * exact join and the hot-gram audit are built from — shared so the
-    * audit can never drift from what the capped join actually drops.
+  /** PPJoin-style prefix-filtered exact Jaccard join — the selective-
+    * vocabulary arm of `ngramJaccardPairs`.
+    *
+    * Each document indexes only its `prefixPostings`. Two documents
+    * with Jaccard ≥ t must share a prefix gram under ANY shared total
+    * order (pigeonhole on the ⌈t·|grams|⌉-sized suffixes), so
+    * candidates from prefix-posting collisions are COMPLETE, and the
+    * exact verify over `gramSets` (`withSets`, `jaccardOf`) makes
+    * output identical to the standard arm — same integer
+    * intersect/union sizes, same one-divide double, so it carries the
+    * same DuckDB oracle.
+    *
+    * Cost trade vs the standard arm: candidate volume is Σ f² over
+    * PREFIX postings only — on corpora with selective grams the rare
+    * prefix grams have tiny posting lists and the quadratic surface
+    * collapses; the price is per-candidate array materialization +
+    * intersection instead of the count-only aggregation. On this
+    * repo's adversarial 31-word-vocabulary fixture every gram is common
+    * and the standard arm wins: 1.4M of 2.3M pairs survived the prefix
+    * filter, and the saved co-occurrences did not pay for the array
+    * verify. The crossover is gated by output-equality in LlmDedupSpec
+    * on a generated realistic-vocabulary corpus.
     */
-  private def postingsOf(df: DataFrame, idCol: String, textCol: String,
-                         blockCol: String, n: Int,
-                         spread: Boolean = true): DataFrame =
-    // null-block rows can never equi-join on (block, gram) — drop them
-    // before the gram explode instead of shipping dead postings.
-    // repartition FIRST (spread): a small parquet arrives as ONE
-    // partition and the tokenize/ngram lambdas below are per-row
-    // interpreted HOFs — without the spread they run single-core ahead
-    // of every consumer (measured: -6 s on q_ngram_jaccard at sf0.1).
-    // The PPJoin arm opts OUT: its freq-join/window/self-join DAG
-    // re-plans around the extra exchange and regresses ~2.5× (measured)
-    // explode_outer, NOT explode: a plain explode makes the optimizer
-    // infer `size(grams) > 0`, and predicate pushdown re-substitutes
-    // the grams alias at the parquet scan BELOW the repartition — the
-    // whole interpreted ngram expression then evaluates twice, the
-    // first time single-core in the lone input partition (measured:
-    // 4.5 s of q_hot_postings' 4.8 s). The outer variant infers no
-    // filter; the cheap isNotNull above the generator drops the empty-
-    // gram rows explode would have dropped.
-    // sz is wrapped NON-NULLABLE (coalesce) because the downstream
-    // jaccard filter infers isnotnull(sz), and pushdown re-substitutes
-    // size(ngrams(...)) at the scan below the repartition — the same
-    // class of trap as the explode note above. A null-text row (the
-    // only way sz could be null) carries no grams, so the sentinel
-    // never joins.
-    (if (spread) df.filter(col(blockCol).isNotNull).repartition(col(idCol))
-     else df.filter(col(blockCol).isNotNull))
-      .withColumn("__toks", TextOps.tokens(textCol))
-      .select(col(idCol), col(blockCol), TextOps.ngrams("__toks", n).as("grams"))
-      .withColumn("sz", coalesce(size(col("grams")), lit(-1)))
-      .select(col(idCol), col(blockCol), col("sz"), explode_outer(col("grams")).as("gram"))
-      .filter(col("gram").isNotNull)
+  def ngramJaccardPairsPrefix(df: DataFrame, idCol: String, textCol: String,
+                              blockCol: String, n: Int,
+                              threshold: Double): DataFrame = {
+    val prefix = prefixPostings(
+      postingsOf(df, idCol, textCol, blockCol, n, spread = false), idCol, blockCol, threshold)
+    val a = prefix.as("a")
+    val b = prefix.as("b")
+    val candidates = a.join(b,
+        col(s"a.$blockCol") === col(s"b.$blockCol") &&
+          col("a.gram") === col("b.gram") &&
+          col(s"a.$idCol") < col(s"b.$idCol") &&
+          sizeBound(threshold))
+      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
+      .distinct()
+    jaccardOf(withSets(candidates, gramSets(df.filter(col(blockCol).isNotNull),
+        textCol, n, idCol))
+      .withColumn("isz", size(array_intersect(col("ga"), col("gb")))), threshold)
+  }
 
   /** Audit for the `maxPostingLen` cap: every (block, gram) posting
     * list longer than the cap, with its length — exactly the postings
@@ -294,69 +189,172 @@ object Dedup {
       .agg(count(lit(1)).as("posting_len"))
       .filter(col("posting_len") > maxPostingLen)
 
-  /** PPJoin-style prefix-filtered exact Jaccard join — the selective-
-    * vocabulary arm of `ngramJaccardPairs` (`prefixFilter = true`).
-    *
-    * Each document indexes only its PREFIX: the first
-    * |grams| - ⌈t·|grams|⌉ + 1 grams under one global rarest-first
-    * order (document frequency per block, gram string as the total-
-    * order tie-break). Two documents with Jaccard ≥ t must share a
-    * prefix gram under ANY shared total order (pigeonhole on the
-    * ⌈t·|grams|⌉-sized suffixes), so candidates from prefix-posting
-    * collisions are COMPLETE and the exact array verification makes
-    * output identical to the standard arm — same integer
-    * intersect/union sizes, same one-divide double, so it can carry
-    * the same DuckDB oracle.
-    *
-    * Cost trade vs the standard arm: candidate volume is Σ f² over
-    * PREFIX postings only — on corpora with selective grams the rare
-    * prefix grams have tiny posting lists and the quadratic surface
-    * collapses; the price is per-candidate array materialization +
-    * intersection instead of the count-only aggregation. On this
-    * repo's adversarial 31-word-vocabulary fixture every gram is
-    * common, so the standard arm wins there (measured r4, note above);
-    * the crossover is gated by output-equality in LlmDedupSpec on a
-    * generated realistic-vocabulary corpus.
+  /** The exploded (id, block, |grams|, gram) posting frame the exact
+    * tier and the hot-gram audit are built from — shared so the audit
+    * can never drift from what the capped join actually drops.
     */
-  def ngramJaccardPairsPrefix(df: DataFrame, idCol: String, textCol: String,
-                              blockCol: String, n: Int,
-                              threshold: Double): DataFrame = {
-    val postings = postingsOf(df, idCol, textCol, blockCol, n, spread = false)
+  private def postingsOf(df: DataFrame, idCol: String, textCol: String,
+                         blockCol: String, n: Int,
+                         spread: Boolean = true): DataFrame = {
+    // null-block rows can never equi-join on (block, gram) — drop them
+    // before the gram explode instead of shipping dead postings.
+    // repartition FIRST (spread): a small parquet arrives as ONE
+    // partition and the tokenize/ngram lambdas below are per-row
+    // interpreted HOFs — without the spread they run single-core ahead
+    // of every consumer (measured: -6 s on q_ngram_jaccard at sf0.1).
+    // The prefix arms opt OUT: their freq-join/window/self-join DAG
+    // re-plans around the extra exchange and regresses ~2.5× (measured)
+    val src = df.filter(col(blockCol).isNotNull)
+    explodeNonEmpty(gramSets(if (spread) src.repartition(col(idCol)) else src,
+        textCol, n, idCol, blockCol),
+      "grams", "gram", col(idCol), col(blockCol), col("sz"))
+  }
+
+  /** Each document's distinct n-gram array `grams` and its size `sz`,
+    * beside the `keys` columns. `sz` is wrapped NON-NULLABLE
+    * (coalesce) because a downstream size or score filter infers
+    * isnotnull(sz), and pushdown re-substitutes size(ngrams(...)) at
+    * the scan below the repartition, evaluating the interpreted ngram
+    * expression a second time, single-core. A null-text row (the only
+    * way sz could be null) carries no grams, so the -1 sentinel never
+    * pairs.
+    */
+  private def gramSets(df: DataFrame, textCol: String, n: Int, keys: String*): DataFrame =
+    df.withColumn("__toks", TextOps.tokens(textCol))
+      .select(keys.map(col) :+ TextOps.ngrams("__toks", n).as("grams"): _*)
+      .withColumn("sz", coalesce(size(col("grams")), lit(-1)))
+
+  /** One row per non-null element of the array column `arr`, named
+    * `as`, beside the `keep` columns. explode_outer + isNotNull, NOT
+    * explode: a plain explode makes the optimizer infer `size(arr) > 0`,
+    * and predicate pushdown re-substitutes the array's expression at the
+    * parquet scan BELOW the repartition — the whole interpreted ngram
+    * or hash chain then evaluates twice, the first time single-core in
+    * the lone input partition (measured: 4.5 s of q_hot_postings' 4.8 s,
+    * 16 s of q_fingerprint_pairs' 17 s). The outer variant infers no
+    * filter; the cheap isNotNull drops the rows explode would have.
+    */
+  private def explodeNonEmpty(df: DataFrame, arr: String, as: String,
+                              keep: Column*): DataFrame =
+    df.select(keep :+ explode_outer(col(arr)).as(as): _*)
+      .filter(col(as).isNotNull)
+
+  /** `df` with its token array as `__toks`, keeping rows of at least
+    * `k` tokens. Gate on the TOKEN count, never on the size of an array
+    * derived from the tokens: n-grams and k-windows are empty iff
+    * tokens < k, and a size(derived) filter is pushdown-re-substituted
+    * at the scan below the repartition, evaluating the interpreted
+    * lambdas a second time, single-core.
+    */
+  private def withTokens(df: DataFrame, textCol: String, k: Int): DataFrame =
+    df.withColumn("__toks", TextOps.tokens(textCol))
+      .filter(size(col("__toks")) >= k)
+
+  /** The one-sided hot-gram cap: (side a, side b) of the co-occurrence
+    * self-join over `postingsOf`. A (block, gram) posting list of length
+    * f contributes f² co-occurrence rows, so one boilerplate shingle at
+    * corpus scale stalls the stage; with `maxPostingLen` set, postings
+    * hotter than the cap are DROPPED from side a, which loses the
+    * intersections they carried, so capped output may under-count. An
+    * equi-join co-occurrence row needs the gram on BOTH sides, so
+    * removing hot grams from side a alone kills exactly the same pairs
+    * as filtering both — and the self-join then evaluates the
+    * (postings + hot-agg) subtree once, not twice (measured: two-sided
+    * capping cost MORE than it saved on the fixture; one-sided is ~2×
+    * cheaper than uncapped). The hot list stays a DataFrame anti-join
+    * side (a |postings|/cap-bounded aggregate): at 100 TB it can be
+    * 10⁷-10⁸ rows, which must never collect to the driver, and the lazy
+    * plan means CONSTRUCTING a capped query runs no job. The drop is
+    * never silent: `hotPostings` is the audit (same `postingsOf`
+    * subtree), run as q_hot_postings beside q_ngram_jaccard_capped.
+    */
+  private def capHot(df: DataFrame, idCol: String, textCol: String,
+                     blockCol: String, n: Int,
+                     maxPostingLen: Option[Int]): (DataFrame, DataFrame) = {
+    val all = postingsOf(df, idCol, textCol, blockCol, n)
+    val a = maxPostingLen.fold(all) { cap =>
+      all.join(hotPostings(df, idCol, textCol, blockCol, n, cap)
+        .select(col(blockCol), col("gram")), Seq(blockCol, "gram"), "left_anti")
+    }
+    (a, all)
+  }
+
+  /** The co-occurrence kernel: pairs (`id_a` < `id_b`) of `a` and `b`
+    * rows equal on every `keys` column and on `preds`, with the count
+    * of shared keys as `countAs` and each side's `sizeCol` as
+    * `<sizeCol>a` / `<sizeCol>b`. Over postings this is |A∩B| per pair
+    * with no per-pair array materialization or set operation at all;
+    * parallelism scales with key cardinality, not the handful of block
+    * values.
+    *
+    * Scale notes: the row count is Σ_key f² — hot boilerplate keys are
+    * the risk (`capHot`); AQE skew-join splitting absorbs moderate skew.
+    * Swapping the gram string for xxhash64(gram) as the key does NOT
+    * move q_ngram_jaccard — the cost is the Σf² row count, not key
+    * width — so the exact tier keeps collision-free string identity.
+    */
+  private def coOccurrence(a: DataFrame, b: DataFrame, keys: Seq[String],
+                           idCol: String, sizeCol: String, countAs: String,
+                           preds: Column*): DataFrame =
+    a.as("a").join(b.as("b"),
+        ((keys.map(k => col(s"a.$k") === col(s"b.$k")) :+
+          (col(s"a.$idCol") < col(s"b.$idCol"))) ++ preds).reduce(_ && _))
+      .groupBy(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"),
+        col(s"a.$sizeCol").as(s"${sizeCol}a"), col(s"b.$sizeCol").as(s"${sizeCol}b"))
+      .agg(count(lit(1)).as(countAs))
+
+  /** The Jaccard size prefilter over the `a`/`b` sides of a postings
+    * join: jaccard ≥ t ⇒ min|set| ≥ t·max|set|.
+    */
+  private def sizeBound(threshold: Double): Column =
+    least(col("a.sz"), col("b.sz")).cast("double") >=
+      greatest(col("a.sz"), col("b.sz")).cast("double") * threshold
+
+  /** The rarest-first prefix of every document's postings: grams
+    * ordered by one global total order (document frequency per block,
+    * gram string as the tie-break), first |grams| - ⌈t·|grams|⌉ + 1
+    * kept — the pigeonhole bound both prefix arms rest on.
+    */
+  private def prefixPostings(postings: DataFrame, idCol: String, blockCol: String,
+                             threshold: Double): DataFrame = {
     val freq = postings.groupBy(col(blockCol), col("gram"))
       .agg(count(lit(1)).as("__df"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(blockCol), col(idCol))
       .orderBy(col("__df"), col("gram"))
-    val prefix = postings.join(freq, Seq(blockCol, "gram"))
+    postings.join(freq, Seq(blockCol, "gram"))
       .withColumn("__rnk", row_number().over(w))
       .filter(col("__rnk") <= col("sz") - ceil(lit(threshold) * col("sz")) + 1)
       .select(col(blockCol), col("gram"), col(idCol), col("sz"))
-    val a = prefix.as("a")
-    val b = prefix.as("b")
-    val candidates = a.join(b,
-        col(s"a.$blockCol") === col(s"b.$blockCol") &&
-          col("a.gram") === col("b.gram") &&
-          col(s"a.$idCol") < col(s"b.$idCol") &&
-          least(col("a.sz"), col("b.sz")).cast("double") >=
-            greatest(col("a.sz"), col("b.sz")).cast("double") * threshold)
-      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
-      .distinct()
-    // exact verification on the full gram sets (the arrays both sides
-    // of a candidate pair; cheap at prefix-filtered candidate counts)
-    val sets = df.filter(col(blockCol).isNotNull)
-      .withColumn("__toks", TextOps.tokens(textCol))
-      .select(col(idCol), TextOps.ngrams("__toks", n).as("grams"))
-      .withColumn("sz", coalesce(size(col("grams")), lit(-1)))
-      .select(col(idCol), col("grams"), col("sz"))
+  }
+
+  /** The exact verify's two-sided join: each (id_a, id_b) candidate
+    * with both documents' `gramSets` as (ga, sza) and (gb, szb).
+    */
+  private def withSets(candidates: DataFrame, sets: DataFrame): DataFrame =
     candidates
       .join(sets.toDF("id_a", "ga", "sza"), "id_a")
       .join(sets.toDF("id_b", "gb", "szb"), "id_b")
-      .withColumn("isz", size(array_intersect(col("ga"), col("gb"))))
-      .select(col("id_a"), col("id_b"),
+
+  /** Pairs whose Jaccard |A∩B| / (|A| + |B| - |A∩B|), from the integer
+    * sizes `isz`, `sza`, `szb` in one double divide, reaches
+    * `threshold` — the formula every exact-Jaccard arm and the MinHash
+    * verify share, so they carry the same DuckDB oracle.
+    */
+  private def jaccardOf(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs.select(col("id_a"), col("id_b"),
         (col("isz").cast("double") /
           (col("sza") + col("szb") - col("isz")).cast("double")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-  }
+
+  /** Pairs whose containment `shared` / min(`sza`, `szb`) reaches
+    * `threshold` — both containment arms' score.
+    */
+  private def containmentOf(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs.select(col("id_a"), col("id_b"), col("shared"),
+        (col("shared").cast("double") /
+          least(col("sza"), col("szb")).cast("double")).as("containment"))
+      .filter(col("containment") >= threshold)
 
   /** MinHash signature: sig[i] = min over shingles of
     * XXH64(xxhash64(shingle), seed = i). Each shingle string is hashed
@@ -370,13 +368,7 @@ object Dedup {
                         carryCols: Seq[String] = Nil): DataFrame =
     // sketching is CPU-bound and a small parquet arrives as ONE
     // partition — spread rows before the kernel or it runs one-core
-    df.repartition(col(idCol))
-      .withColumn("__toks", TextOps.tokens(textCol))
-      // gate on the TOKEN count, not size(grams) > 0: grams is empty
-      // iff tokens < n, and a size(grams) filter gets pushdown-
-      // re-substituted at the scan below the repartition, evaluating
-      // the interpreted ngram lambdas a second time, single-core
-      .filter(size(col("__toks")) >= shingleN)
+    withTokens(df.repartition(col(idCol)), textCol, shingleN)
       .withColumn("grams", TextOps.ngrams("__toks", shingleN))
       .withColumn("__sh", expr("transform(grams, s -> xxhash64(s))"))
       .select(col(idCol) +: carryCols.map(col) :+ col("grams") :+
@@ -407,8 +399,9 @@ object Dedup {
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_key")
 
   /** Banded-LSH near-duplicate pairs, verified with exact Jaccard on
-    * the shingle sets. Candidates come only from band collisions —
-    * the join is on (band, band_key), never a cross product.
+    * the shingle sets — the exact arms' `gramSets`, `withSets` and
+    * `jaccardOf`. Candidates come only from band collisions — the join
+    * is on (band, band_key), never a cross product.
     *
     * `blockCol` optionally restricts pairs to a shared block (the same
     * language/source blocking the exact tier uses): the block value
@@ -445,23 +438,12 @@ object Dedup {
       .select(col("p.l").as("id_a"), col("p.r").as("id_b"))
       .distinct()
     // verification recomputes only the shingle sets (cheap), not the
-    // 64-hash signatures. sz non-nullable for the same pushdown reason
-    // as postingsOf: the jaccard filter must not re-evaluate the ngram
-    // expression inside the scan. (r18: checkpointing this frame was
-    // MEASURED A REGRESSION — 1.07 s -> 1.47 s — the blocking
-    // materialization of the gram arrays costs more than the two
-    // re-derivations it saves; the lazy twin-join stays.)
-    val sets = df.withColumn("__toks", TextOps.tokens(textCol))
-      .select(col(idCol), TextOps.ngrams("__toks", shingleN).as("grams"))
-      .withColumn("sz", coalesce(size(col("grams")), lit(-1)))
-    candidates
-      .join(sets.toDF("id_a", "ga", "sza"), "id_a")
-      .join(sets.toDF("id_b", "gb", "szb"), "id_b")
-      .withColumn("isz", size(array_intersect(col("ga"), col("gb"))))
-      .select(col("id_a"), col("id_b"),
-        (col("isz").cast("double") /
-          (col("sza") + col("szb") - col("isz")).cast("double")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    // 64-hash signatures. (r18: checkpointing the sets was MEASURED A
+    // REGRESSION — 1.07 s -> 1.47 s — the blocking materialization of
+    // the gram arrays costs more than the two re-derivations it saves;
+    // the lazy twin-join stays.)
+    jaccardOf(withSets(candidates, gramSets(df, textCol, shingleN, idCol))
+      .withColumn("isz", size(array_intersect(col("ga"), col("gb")))), threshold)
   }
 
   /** Persisted MinHash-LSH signature index: signatures + band rows +
@@ -592,8 +574,8 @@ object Dedup {
     * Window hashes are the same portable polynomial chain as
     * `TextOps.fingerprint` (token hash mod P, then a second-level
     * poly over each w-window), so the whole operator is
-    * DuckDB-oracle-checkable. The join is an inverted-index
-    * equi-join on the window hash — w-token windows are
+    * DuckDB-oracle-checkable. The join is the exact tier's
+    * `coOccurrence` keyed on the window hash — w-token windows are
     * near-unique at any realistic vocabulary, so posting lists stay
     * tiny and the join never approaches the bigram tier's Σf²;
     * `containment` = shared / min(|windows|) is the classic
@@ -602,31 +584,18 @@ object Dedup {
   def fingerprintPairs(df: DataFrame, idCol: String, textCol: String,
                        w: Int, minShared: Int = 1): DataFrame = {
     require(w >= 2, "fingerprintPairs: window must span at least 2 tokens")
-    val windows = df.repartition(col(idCol))
-      .withColumn("__toks", TextOps.tokens(textCol))
-      // gate on the cheap TOKEN count (not size(wh) — that filter
-      // would pushdown-substitute the whole hash chain at the scan)
-      .filter(size(col("__toks")) >= w)
+    val hashed = withTokens(df.repartition(col(idCol)), textCol, w)
       .withColumn("__th", TextOps.tokenHashes("__toks"))
       .select(col(idCol),
         array_distinct(TextOps.windowHashes("__th", w)).as("wh"))
       .withColumn("nw", coalesce(size(col("wh")), lit(-1)))
-      // explode_outer + isNotNull, NOT explode: the inferred
-      // size(wh) > 0 filter would re-substitute the whole hash chain
-      // at the scan (the postingsOf trap; measured 16 s of 17 s here)
-      .select(col(idCol), col("nw"), explode_outer(col("wh")).as("h"))
-      .filter(col("h").isNotNull)
-      // r19 (guide §5): same posting-frame checkpoint as
-      // substringSpans — the self-join re-ran the tokenize + hash
-      // chain per side: 1.63 -> 0.95 s same-JVM min-of-3,
-      // exceptAll-equal.
+    // r19 (guide §5): same posting-frame checkpoint as
+    // substringSpans — the self-join re-ran the tokenize + hash
+    // chain per side: 1.63 -> 0.95 s same-JVM min-of-3,
+    // exceptAll-equal.
+    val windows = explodeNonEmpty(hashed, "wh", "h", col(idCol), col("nw"))
       .localCheckpoint()
-    val a = windows.as("a")
-    val b = windows.as("b")
-    a.join(b, col("a.h") === col("b.h") && col(s"a.$idCol") < col(s"b.$idCol"))
-      .groupBy(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"),
-        col("a.nw").as("nwa"), col("b.nw").as("nwb"))
-      .agg(count(lit(1)).as("shared"))
+    coOccurrence(windows, windows, Seq("h"), idCol, "nw", "shared")
       .filter(col("shared") >= minShared)
       .select(col("id_a"), col("id_b"), col("shared"),
         (col("shared").cast("double") /
@@ -673,11 +642,7 @@ object Dedup {
                      k: Int, checkpointWindows: Boolean = false): DataFrame = {
     require(k >= 2, "substringSpans: spans must be at least 2 tokens")
     import org.apache.spark.sql.expressions.Window
-    val windows0 = df.repartition(col(idCol))
-      .withColumn("__toks", TextOps.tokens(textCol))
-      // gate on the cheap token count (size(wh) would pushdown-
-      // re-substitute the hash chain at the scan — the postingsOf trap)
-      .filter(size(col("__toks")) >= k)
+    val windows0 = withTokens(df.repartition(col(idCol)), textCol, k)
       .withColumn("__th", TextOps.tokenHashes("__toks"))
       .select(col(idCol), posexplode(TextOps.windowHashes("__th", k)))
       .withColumnRenamed("pos", "pos0").withColumnRenamed("col", "h")
@@ -823,14 +788,10 @@ object Dedup {
                          n: Int, minShared: Long): DataFrame = {
     require(idCol != "gram" && textCol != "gram",
       "contaminationPairs: 'gram' is reserved for the join key")
-    def gramRows(df: DataFrame, as: String): DataFrame = df
-      .filter(col(textCol).isNotNull)
-      .withColumn("__toks", TextOps.tokens(textCol))
-      // gate on the token count, not size(grams) — the r5 pushdown trap
-      .filter(size(col("__toks")) >= n)
-      .withColumn("__g", TextOps.ngrams("__toks", n))
-      .select(col(idCol).as(as), explode_outer(col("__g")).as("gram"))
-      .filter(col("gram").isNotNull)
+    def gramRows(df: DataFrame, as: String): DataFrame = explodeNonEmpty(
+      withTokens(df.filter(col(textCol).isNotNull), textCol, n)
+        .withColumn("__g", TextOps.ngrams("__toks", n)),
+      "__g", "gram", col(idCol).as(as))
     gramRows(corpus, "doc_id")
       .join(broadcast(gramRows(bench, "bench_id")), "gram")
       .groupBy("doc_id", "bench_id")
@@ -1032,10 +993,7 @@ object Dedup {
         "__g", "__first") if df.columns.contains(c))
       require(c == idCol,
         s"gramNovelty: '$c' is reserved for internal use — rename it")
-    val grams = df
-      .filter(col(textCol).isNotNull)
-      .withColumn("__toks", TextOps.tokens(textCol))
-      .filter(size(col("__toks")) >= n)
+    val grams = withTokens(df.filter(col(textCol).isNotNull), textCol, n)
       .select(col(idCol), explode(TextOps.ngrams("__toks", n)).as("gram"))
     val firstOwner = grams.groupBy("gram")
       .agg(min(col(idCol)).as("__first"))

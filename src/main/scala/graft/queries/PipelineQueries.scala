@@ -2251,12 +2251,14 @@ object PipelineQueries {
 
     // -- dedup tier 3, PPJoin arm: rarest-first prefix-filtered
     //    candidates + exact verify. Output-identical to q_ngram_jaccard
-    //    (it carries the same oracle); wins on selective-vocabulary
-    //    corpora, loses on this fixture's 31-word vocab — both
-    //    measured, see BASELINE.md. ------------------------------------
+    //    (it carries the same oracle). Measured in commit 1bfbf33: it
+    //    loses on this fixture's 31-word vocab (14.6 s PPJoin vs 10.0 s
+    //    standard) and wins on a generated 20k-doc corpus of 10
+    //    stopwords at 30 % token mass over a 50k-word zipf tail (6.4 s
+    //    vs 16.3 s). ----------------------------------------------------
     "q_ngram_jaccard_ppjoin" -> ((s, dir) =>
-      Dedup.ngramJaccardPairs(Tables.documents(s, dir), "doc_id", "text",
-        blockCol = "lang", n = 2, threshold = 0.5, prefixFilter = true)),
+      Dedup.ngramJaccardPairsPrefix(Tables.documents(s, dir), "doc_id", "text",
+        blockCol = "lang", n = 2, threshold = 0.5)),
 
     // -- the hot-gram guard, EXECUTED: same exact tier with postings
     //    longer than 64 dropped from the join (the 100 TB safety valve
@@ -6929,7 +6931,7 @@ object PipelineQueries {
         |FROM rec GROUP BY 1, 2""".stripMargin,
 
     // Weyl mix on the low 16 id bits — exact integer arithmetic in
-    // both engines (Chunking.stratifiedSample portableHash=true)
+    // both engines (Chunking.stratifiedSample)
     "q_sample_stratified" ->
       """SELECT d.doc_id, d.lang
         |FROM documents d

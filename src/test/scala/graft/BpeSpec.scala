@@ -96,14 +96,6 @@ class BpeSpec extends SparkSpec {
       assert(nSub < nChars, "merges must compress below the char count")
       assert(nSub >= nWords, "every word is at least one subword")
     }
-    // the adversarial-vocab arm (distinct-word table too big to
-    // broadcast) must be row-identical and actually skip the broadcast
-    val shuffled = Bpe.subwordStats(docs, "source", "text", m1,
-      broadcastEncoded = false)
-    assert(shuffled.collect().map(_.toSeq).toSet == stats.map(_.toSeq).toSet)
-    val plan = shuffled.queryExecution.executedPlan.toString
-    assert(!plan.contains("BroadcastHashJoin"),
-      "broadcastEncoded=false must not broadcast the encoded-vocab table")
   }
 
   test("compiled expression equals the canonical encoder on constructed edge cases") {

@@ -228,11 +228,6 @@ class ChunkingSpec extends SparkSpec {
     val nDe = s1.count(_._2 == "de").toDouble / df.filter(col("lang") === "de").count()
     assert(math.abs(nEn - 0.5) < 0.1, s"en rate $nEn ~ 0.5")
     assert(math.abs(nDe - 0.25) < 0.1, s"de rate $nDe ~ 0.25")
-    // the xxhash64 arm obeys the same contract
-    val sx = Chunking.stratifiedSample(df, "lang", "id", rates, portableHash = false)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(!sx.exists(_._2 == "fr"))
-    assert(math.abs(sx.count(_._2 == "en") / 1000.0 - 0.5) < 0.1)
   }
 
   test("gumbelTopK: exact k, deterministic, dominance beyond the noise band, ~w-proportional") {

@@ -134,8 +134,7 @@ class LlmDedupSpec extends SparkSpec {
       def get(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       val std = get(Dedup.ngramJaccardPairs(d, "doc_id", "text", block, 2, 0.5))
-      val pp = get(Dedup.ngramJaccardPairs(d, "doc_id", "text", block, 2, 0.5,
-        prefixFilter = true))
+      val pp = get(Dedup.ngramJaccardPairsPrefix(d, "doc_id", "text", block, 2, 0.5))
       assert(pp == std, s"ppjoin=${pp.size} std=${std.size} " +
         s"missed=${(std -- pp).size} extra=${(pp -- std).size}")
       std

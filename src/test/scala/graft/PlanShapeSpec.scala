@@ -75,33 +75,6 @@ class PlanShapeSpec extends SparkSpec {
     assert(p.contains("PushedFilters: [In(term"))
   }
 
-  test("scale-arm plans contain no all-pairs join operator") {
-    // the whole point of the LSH/IVF arms: candidates come from bucket
-    // EQUALITY joins, so a BroadcastNestedLoopJoin or CartesianProduct
-    // anywhere in their plans means the scale story regressed to the
-    // exact tier's theta join
-    for (q <- Seq("q_minhash_lsh", "q_simhash_neardup", "q_curation_lsh",
-        "q_embed_neardup_lsh", "q_ann_lsh", "q_ann_ivf", "q_knn_graph_lsh")) {
-      val p = plan(q)
-      assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
-        s"$q plans an all-pairs join")
-    }
-  }
-
-  test("fourth-batch plans: keyed joins only, no all-pairs surface") {
-    // q_novelty's whole claim is "the dedup metric with NO pairwise
-    // surface"; q_triangles' wedge join must stay an equi-join on src;
-    // q_soft_dedup / q_weighted_mix ride id-keyed joins around the CC;
-    // q_inverted_index / q_snapshot_drift are pure keyed aggs. The
-    // 1-row broadcast scalars (stats/totals) are the only nested-loop
-    // joins allowed — assert no CartesianProduct anywhere.
-    for (q <- Seq("q_novelty", "q_triangles", "q_soft_dedup",
-        "q_weighted_mix", "q_inverted_index", "q_snapshot_drift")) {
-      assert(!plan(q).contains("CartesianProduct"),
-        s"$q plans a cartesian product")
-    }
-  }
-
   test("no heavy expression is pushdown-substituted into a scan-side Filter") {
     // The recurring Spark trap this repo keeps paying for: an inferred
     // filter (isnotnull from a join/threshold, size(g) > 0 from a

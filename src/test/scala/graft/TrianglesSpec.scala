@@ -47,6 +47,19 @@ class TrianglesSpec extends SparkSpec {
     assert(m(3L) == ((4L, 3L, 500000L)), "hub: 2*3*1e6 div (4*3)")
   }
 
+  test("a call leaves no cache entry behind and counts as before") {
+    import spark.implicits._
+    spark.catalog.clearCache()
+    val k4 = for { i <- 0 until 4; j <- 0 until 4 if i < j }
+      yield (i.toLong, j.toLong)
+    val m = asMap(Triangles.localTriangles(
+      (k4 :+ ((3L, 9L))).toDF("a", "b"), "a", "b").collect())
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "localTriangles must not leave cached frames in the session")
+    assert(m == Map(0L -> ((3L, 3L, 1000000L)), 1L -> ((3L, 3L, 1000000L)),
+      2L -> ((3L, 3L, 1000000L)), 3L -> ((4L, 3L, 500000L)), 9L -> ((1L, 0L, 0L))))
+  }
+
   test("input-form invariance: reversed and duplicated directed edges count identically") {
     import spark.implicits._
     val base = for { i <- 0 until 4; j <- 0 until 4 if i < j }

@@ -3,7 +3,8 @@
 
 The driver's gate runs at sf0.01; this tool replays EVERY oracle in
 DuckDB at sf0.1 — 10x the gated scale — and value-compares against the
-Spark parquet dumped by `graft.Verify /root/testdata/sf0.1 <outDir>`.
+Spark parquet dumped by `graft.Verify <SF_DIR> <OUT_DIR>`,
+with the same comparator as tools/compare.py (`compare.check`).
 Each oracle runs in its own subprocess with a wall-clock budget, so the
 documented DuckDB-heavy class (quadratic replay CTEs: the kNN-edge /
 pagerank convention) reports TIMEOUT loudly instead of hanging the
@@ -20,36 +21,12 @@ import json
 import multiprocessing as mp
 import sys
 
-TABLES = ["region", "nation", "customer", "supplier", "part",
-          "orders", "lineitem", "events", "documents", "embeddings"]
-
 
 def run_one(sf_dir, out_dir, name, sql, q):
     try:
-        import duckdb
-        import pandas as pd  # noqa: F401
-        con = duckdb.connect()
-        for t in TABLES:
-            con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-
-        def canon(df):
-            df = df.reindex(sorted(df.columns), axis=1)
-            return df.sort_values(by=list(df.columns), ignore_index=True)
-
-        expected = canon(con.sql(sql).df())
-        actual = canon(con.sql(
-            f"SELECT * FROM '{out_dir}/{name}/*.parquet'").df())
-        if list(expected.columns) != list(actual.columns):
-            q.put(("FAIL", f"columns {list(actual.columns)} != "
-                           f"{list(expected.columns)}"))
-        elif len(expected) != len(actual):
-            q.put(("FAIL", f"rows {len(actual)} != {len(expected)}"))
-        elif not expected.equals(actual):
-            neq = (expected != actual) & ~(expected.isna() & actual.isna())
-            cols = [c for c in expected.columns if neq[c].any()]
-            q.put(("FAIL", f"values differ in {cols[:3]}"))
-        else:
-            q.put(("PASS", f"{len(actual)} rows"))
+        from compare import check, connect
+        ok, detail = check(connect(sf_dir), out_dir, name, sql)
+        q.put(("PASS" if ok else "FAIL", detail))
     except Exception as e:  # noqa: BLE001
         q.put(("ERROR", str(e)[:160]))
 
