@@ -871,33 +871,56 @@ object Dedup {
   /** Transitive duplicate clusters: near-dup PAIRS under-merge (A~B,
     * B~C but A≁C leaves two keep-decisions for one logical document
     * family), so cluster the pair graph and key each document by its
-    * component's minimum id. Min-label propagation: per round, every
-    * node takes the min of its own and its neighbors' labels — one
-    * keyed shuffle per round, converging in O(component diameter)
-    * rounds. Near-dup components are small and shallow (a boilerplate
-    * family, a mirrored page), so the bound is a handful of rounds;
-    * a web-scale graph with long chains would swap in the
-    * alternating small-star/large-star contraction (Kiveris et al.,
-    * "Connected Components in MapReduce", SoCC'14) — same API.
+    * component's minimum id.
     *
-    * The edge list is `localCheckpoint`ed once (it is usually the
-    * output of an expensive similarity join) and `Fixpoint` checkpoints
-    * each round's labels, truncating the iterative lineage — without
-    * that, round k replans rounds 1..k-1. Its probe is Σ(cluster_id),
-    * strictly monotone until the fixpoint since labels only DECREASE;
-    * decimal, as Σ of 64-bit ids can pass 2^63 and ANSI mode would throw.
+    * Two steps, after Kiveris et al., "Connected Components in
+    * MapReduce and Beyond" (SoCC'14): contract locally, then propagate.
+    *  1. Contraction. The symmetric, distinct edge list is hashed over
+    *     the shuffle partitions; each partition runs a union-find over
+    *     its own edges (path halving, union toward the smaller id) and
+    *     emits, for every non-root node x of a local component with
+    *     root r, the star edges (x, r) and (r, x). Each local component
+    *     is connected in the input, so the star graph has the same
+    *     components, and min-id labels are unique, so the output does
+    *     not depend on the partitioning. The union-find map holds one
+    *     partition's distinct endpoints in memory and cannot spill.
+    *  2. Min-label rounds on the star graph (below). One partition
+    *     (AQE coalesces a small edge shuffle into one) leaves one star
+    *     per component, which the first round labels and the second
+    *     confirms: 2 rounds. Edges spread over many partitions leave
+    *     stars joined across partitions, and the rounds merge those.
+    *
+    * The contracted edge list is `localCheckpoint`ed once (the input
+    * is usually the output of an expensive similarity join) and
+    * `Fixpoint` checkpoints each round's labels, truncating the
+    * iterative lineage — without that, round k replans rounds 1..k-1.
+    * Its probe is Σ(cluster_id), strictly monotone until the fixpoint
+    * since labels only DECREASE; decimal, as Σ of 64-bit ids can pass
+    * 2^63 and ANSI mode would throw.
     *
     * Returns (id, cluster_id) for every node of `pairs`; singleton
     * documents (no pair) are their own cluster by definition and
-    * don't appear. If `maxIter` rounds don't converge, the labels are
+    * don't appear. A null endpoint is an unknown partner: the pair
+    * gives no edge, and its other endpoint stays a node, labelled by
+    * its remaining pairs (its own id if it has none); no null id is
+    * returned. If `maxIter` rounds don't converge, the labels are
     * returned as-is with a WARN — audit, not silent truncation.
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 20): DataFrame = {
-    val edges = pairs
-      .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
-      .union(pairs.select(col(bCol).cast("long").as("src"), col(aCol).cast("long").as("dst")))
+    require(maxIter >= 1, s"connectedComponents: maxIter must be >= 1, got $maxIter")
+    import pairs.sparkSession.implicits._
+    val ab = pairs.select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
+    // a null endpoint turns the pair into a self-loop of the other one
+    val a = coalesce(col("a"), col("b"))
+    val b = coalesce(col("b"), col("a"))
+    val edges = ab.select(a.as("src"), b.as("dst"))
+      .union(ab.select(b.as("src"), a.as("dst")))
+      .filter(col("src").isNotNull)
       .distinct()
+      .as[(Long, Long)]
+      .mapPartitions(contractToStars)
+      .toDF("src", "dst")
       .localCheckpoint()
     val init = edges.select(col("src").as("id")).distinct()
       .withColumn("cluster_id", col("id"))
@@ -911,10 +934,10 @@ object Dedup {
       // on, labels also propagate between themselves (lab(dst) <-
       // lab(src) rides the same aggregate): neighbor-min on the
       // contracted cluster graph (Kiveris et al. 2014), which collapses
-      // chains of clusters logarithmically — the sf0.1 pixel pair graph
-      // converges in 6 rounds instead of 23. Rounds 1-2 skip it, as
-      // labels are still near-identity there and the label edges would
-      // repeat the plain ones; the all-singleton path pays ~+34%.
+      // chains of clusters logarithmically when the stars of step 1
+      // span partitions. Rounds 1-2 skip it, as labels are still
+      // near-identity there and the label edges would repeat the plain
+      // ones; the all-singleton path pays ~+34%.
       val neighborMin = (if (i < 2) {
         edges
           .join(labels.withColumnRenamed("id", "src"), "src")
@@ -940,6 +963,34 @@ object Dedup {
     }._1
   }
 
+  /** Step 1 of [[connectedComponents]] over one partition's edges: a
+    * union-find (path halving, union toward the smaller id) that emits
+    * (x, root) and (root, x) for every non-root node x. A node whose
+    * only local edges are self-loops keeps one (x, x), so it stays a
+    * node of the star graph.
+    */
+  private def contractToStars(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    for ((s, d) <- edges) {
+      parent.getOrElseUpdate(s, s)
+      parent.getOrElseUpdate(d, d)
+      val (rs, rd) = (find(s), find(d))
+      if (rs != rd) parent(math.max(rs, rd)) = math.min(rs, rd)
+    }
+    val roots = parent.keys.toArray.map(x => x -> find(x))
+    val joined = roots.collect { case (x, r) if x != r => r }.toSet
+    roots.iterator.flatMap {
+      case (x, r) if x != r => Iterator((x, r), (r, x))
+      case (x, _) if !joined(x) => Iterator((x, x))
+      case _ => Iterator.empty
+    }
+  }
+
   /** Dedup-aware SOFT retention weights — the downweight-instead-of-drop
     * alternative when removal is too aggressive (templated-but-distinct
     * docs, licensed boilerplate with unique payloads): every near-dup
@@ -954,7 +1005,7 @@ object Dedup {
     *
     * Scale shape: the pair graph (from any dedup tier — the LSH arms
     * slot in unchanged) is closed under `connectedComponents`
-    * (pointer-jumped, O(log diameter) rounds); docs outside every pair
+    * (per-partition contraction, then min-label rounds); docs outside every pair
     * ride a LEFT join and become their own singleton cluster; cluster
     * sizes are one partial-agg shuffle collapsing to #clusters rows;
     * the weight itself is row-local integer arithmetic. The doc table

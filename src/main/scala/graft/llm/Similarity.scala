@@ -1682,8 +1682,9 @@ object Similarity {
     * checkpointed (it feeds the degree, core-edge and border
     * branches), and everything after runs on the graph, not the
     * vectors: degrees partial-aggregate, components are
-    * `connectedComponents`' O(log diameter) min-label rounds, border
-    * assignment is one join + min.
+    * `connectedComponents`' per-partition union-find contraction and
+    * its min-label rounds (2 when the core edges fit one partition),
+    * border assignment is one join + min.
     */
   def dbscan(df: DataFrame, idCol: String, embCol: String,
              threshold: Double, minPts: Long): DataFrame = {

@@ -251,8 +251,7 @@ object EventQueries {
         col("event_type").as("concept:name"),
         col("event_id"),
         col("value"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft-xesrt")
-      tmp.toFile.deleteOnExit()
+      val tmp = TempDirs.create("graft-xesrt")
       val file = tmp.resolve("log.xes")
       XesWriter.write(src, file, tieCols = Seq("event_id"))
       XesReader.read(s, file.toString).select(
@@ -271,8 +270,7 @@ object EventQueries {
         col("event_type").as("concept:name"),
         col("event_id"),
         col("value"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft-xesv2")
-      tmp.toFile.deleteOnExit()
+      val tmp = TempDirs.create("graft-xesv2")
       val file = tmp.resolve("log.xes")
       XesWriter.write(src, file, tieCols = Seq("event_id"))
       s.read.format("xes").load(file.toString).select(

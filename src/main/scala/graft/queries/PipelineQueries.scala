@@ -905,8 +905,7 @@ object PipelineQueries {
     * derives from (size + mtime of documents.parquet — r17 ADVICE
     * fix: a dir-only key served a stale authority table if the
     * fixture was regenerated in place within one JVM). The temp dirs
-    * are registered for recursive delete at JVM exit so an
-    * adjudication loop doesn't accrete orphans.
+    * come from `TempDirs`, which deletes them at JVM exit.
     */
   private def fixtureFingerprint(dir: String): String = {
     val p = java.nio.file.Paths.get(dir, "documents.parquet")
@@ -931,17 +930,6 @@ object PipelineQueries {
     s"$dir|$sz|$mt"
   }
 
-  private def registerCleanup(root: java.nio.file.Path): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try {
-        val st = java.nio.file.Files.walk(root)
-        try st.sorted(java.util.Comparator.reverseOrder())
-          .forEach(f =>
-            try java.nio.file.Files.deleteIfExists(f)
-            catch { case _: java.io.IOException => () })
-        finally st.close()
-      } catch { case _: java.io.IOException => () }))
-
   private def hostAuthorityPath(s: SparkSession, dir: String): String =
     authorityStore.computeIfAbsent(fixtureFingerprint(dir), _ => {
       // same eager checkpoint as q_host_rank: the build step extracts
@@ -955,8 +943,7 @@ object PipelineQueries {
         .select(col("src_host"), col("dst_host"))
       val authority = graft.analytics.PageRank.pageRank(edges,
         "src_host", "dst_host", iters = 8, topN = 50)
-      val root = java.nio.file.Files.createTempDirectory("graft_authority_")
-      registerCleanup(root)
+      val root = TempDirs.create("graft_authority_")
       val path = root.toString + "/authority"
       // hosts-sized by construction (topN caps it): one small file
       authority.coalesce(1).write.mode("overwrite").parquet(path)
@@ -2915,8 +2902,7 @@ object PipelineQueries {
       val emb = Tables.embeddings(s, dir)
       val idx = DenseIndex.build(emb, "vec_id", "embedding",
         nClusters = 16).get
-      val store = java.nio.file.Files
-        .createTempDirectory("graft_dense_q_").toString + "/idx"
+      val store = TempDirs.create("graft_dense_q_").toString + "/idx"
       DenseIndex.save(idx, "vec_id", store)
       // the daily diff: vectors 0..4 "re-crawled" (unchanged content —
       // the update path still exercises remove + re-assign)

@@ -5,6 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
+import org.apache.logging.log4j.Level
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
@@ -118,47 +119,24 @@ class FixpointSpec extends SparkSpec {
 
   test("a capped kcoreMembers, bfsHops or connectedComponents logs one WARN line; a converged one none") {
     import spark.implicits._
-    import org.apache.logging.log4j.{Level, LogManager}
-    import org.apache.logging.log4j.core.{LogEvent, Logger}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.Property
-    val warns = new ConcurrentLinkedQueue[String]()
-    val appender = new AbstractAppender("fixpoint-lines", null, null, true, Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit =
-        if (e.getLevel == Level.WARN) warns.add(e.getMessage.getFormattedMessage)
-    }
-    appender.start()
-    val logger = LogManager.getLogger(Fixpoint.getClass).asInstanceOf[Logger]
-    val level = logger.getLevel
-    logger.addAppender(appender)
-    logger.setLevel(Level.INFO)
-    def warnsOf(run: => DataFrame): Seq[String] = {
-      warns.clear()
-      run.collect()
-      warns.asScala.toSeq
-    }
-    try {
-      val chain = (1L until 8L).map(i => (i, i + 1)).toDF("src", "dst")
-      val seeds = Seq(1L).toDF("id")
-      val path = LabelProp.symmetrize(chain, "src", "dst")
-      val cases = Seq(
-        ("kcoreMembers", 2,
-          (r: Int) => Kcore.kcoreMembers(chain, "src", "dst", k = 2, maxRounds = r)),
-        ("bfsHops", 2,
-          (r: Int) => LabelProp.bfsHops(path, "src", "dst", seeds, "id", maxIters = r)),
-        ("connectedComponents", 1,
-          (r: Int) => Dedup.connectedComponents(chain, "src", "dst", maxIter = r)))
-      for ((op, cap, run) <- cases) {
-        val capped = warnsOf(run(cap))
-        assert(capped.size == 1, s"$op capped at $cap logged $capped")
-        assert(capped.head == s"fixpoint op=$op rounds=$cap max=$cap converged=false",
-          capped.head)
-        assert(warnsOf(run(20)).isEmpty, s"$op converged but logged a WARN")
-      }
-    } finally {
-      logger.removeAppender(appender)
-      logger.setLevel(level)
-      appender.stop()
+    def warnsOf(run: => DataFrame): Seq[String] =
+      linesLogged(Fixpoint.getClass, Level.WARN)(run.collect())._2
+    val chain = (1L until 8L).map(i => (i, i + 1)).toDF("src", "dst")
+    val seeds = Seq(1L).toDF("id")
+    val path = LabelProp.symmetrize(chain, "src", "dst")
+    val cases = Seq(
+      ("kcoreMembers", 2,
+        (r: Int) => Kcore.kcoreMembers(chain, "src", "dst", k = 2, maxRounds = r)),
+      ("bfsHops", 2,
+        (r: Int) => LabelProp.bfsHops(path, "src", "dst", seeds, "id", maxIters = r)),
+      ("connectedComponents", 1,
+        (r: Int) => Dedup.connectedComponents(chain, "src", "dst", maxIter = r)))
+    for ((op, cap, run) <- cases) {
+      val capped = warnsOf(run(cap))
+      assert(capped.size == 1, s"$op capped at $cap logged $capped")
+      assert(capped.head == s"fixpoint op=$op rounds=$cap max=$cap converged=false",
+        capped.head)
+      assert(warnsOf(run(20)).isEmpty, s"$op converged but logged a WARN")
     }
   }
 }

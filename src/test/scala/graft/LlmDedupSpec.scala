@@ -2,11 +2,13 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.logging.log4j.Level
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.llm.{Dedup, TextOps}
+import graft.operators.Fixpoint
 
 /** Property gates for the approximate dedup tier: the rows-only driver
   * check can't judge quality, so MinHash-LSH is held to its exact
@@ -17,6 +19,14 @@ class LlmDedupSpec extends SparkSpec {
 
   private val Sf = "/root/testdata/sf0.001"
   private lazy val docs = Tables.documents(spark, Sf)
+
+  /** 30 near-dup clusters of 6 (hub = min id of the cluster, members
+    * star onto it) bridged in sequence: member 5 of cluster c pairs
+    * with member 1 of cluster c + 1. One component, labelled 0.
+    */
+  private val clusterChain: Seq[(Long, Long)] =
+    (for (c <- 0 until 30; m <- 1 until 6) yield (c * 100L, c * 100L + m)) ++
+      (for (c <- 0 until 29) yield (c * 100L + 5L, (c + 1) * 100L + 1L))
 
   /** Unblocked exact truth: every pair with bigram Jaccard >= t. */
   private def exactPairs(t: Double): Set[(Long, Long)] =
@@ -363,7 +373,23 @@ class LlmDedupSpec extends SparkSpec {
     // pairwise min-keep (the per-pair heuristic) would key 3~4 by 3,
     // splitting the family; the component keys it by 1
     assert(got(4L) == 1L, "transitive closure, not per-pair keep")
-    intercept[IllegalArgumentException](Dedup.connectedComponents(pairs, "id_a", "id_b", maxIter = 0))
+    val zero = jobsByGroup("maxIter=0" -> (() =>
+      intercept[IllegalArgumentException](Dedup.connectedComponents(pairs, "id_a", "id_b", maxIter = 0))))
+    assert(zero("maxIter=0") == 0, "maxIter = 0 must be refused before any job starts")
+  }
+
+  test("connected components: a null endpoint gives no edge and no null row; empty in, empty out") {
+    val sch = StructType(Seq(StructField("id_a", LongType), StructField("id_b", LongType)))
+    def cc(rows: Row*) = Dedup.connectedComponents(
+      spark.createDataFrame(rows.asJava, sch), "id_a", "id_b")
+    // (2, null) must not bridge 1-2 and (null, 5) into one component
+    // through a null node; 5 stays a node with its own label
+    val got = cc(Row(1L, 2L), Row(2L, null), Row(3L, 4L), Row(null, 5L), Row(null, null))
+      .collect().map(r => (r.get(0), r.get(1))).toSet
+    assert(got == Set((1L, 1L), (2L, 1L), (3L, 3L), (4L, 3L), (5L, 5L)), got)
+    val empty = cc()
+    assert(empty.columns.toSeq == Seq("id", "cluster_id"))
+    assert(empty.isEmpty)
   }
 
   test("connected components: a long cluster-chain converges inside maxIter to the exact min labels") {
@@ -378,18 +404,48 @@ class LlmDedupSpec extends SparkSpec {
     // (min-propagation on the contracted cluster graph) must reach
     // the EXACT fixpoint — every node labeled 0 — within the default
     // 20-round budget.
-    val stars = for {
-      c <- 0 until 30; m <- 1 until 6
-    } yield (c * 100L, c * 100L + m)
-    val bridges = for (c <- 0 until 29)
-      yield (c * 100L + 5L, (c + 1) * 100L + 1L)
-    val got = Dedup.connectedComponents(
-      (stars ++ bridges).toDF("id_a", "id_b"), "id_a", "id_b")
+    val got = Dedup.connectedComponents(clusterChain.toDF("id_a", "id_b"), "id_a", "id_b")
       .collect().map(r => r.getLong(0) -> r.getLong(1))
     assert(got.length == 180)
     assert(got.forall(_._2 == 0L),
       s"chain of 30 clusters must fully merge to label 0 inside maxIter; " +
         s"got ${got.filter(_._2 != 0L).take(5).mkString(", ")}")
+  }
+
+  test("connected components: labels do not depend on the shuffle partitioning") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val sparse = Seq.fill(300)((rnd.nextInt(400).toLong, rnd.nextInt(400).toLong))
+    def labels(pairs: Seq[(Long, Long)]): (Set[Row], Seq[String]) =
+      linesLogged(Fixpoint.getClass, Level.INFO) {
+        Dedup.connectedComponents(pairs.toDF("id_a", "id_b"), "id_a", "id_b").collect().toSet
+      }
+    val confs = Seq("spark.sql.shuffle.partitions" -> "16",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    for ((name, pairs) <- Seq("cluster chain" -> clusterChain, "sparse random" -> sparse)) {
+      val (coalesced, _) = labels(pairs)
+      val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      val (spread, lines) = try {
+        confs.foreach { case (k, v) => spark.conf.set(k, v) }
+        labels(pairs)
+      } finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+      assert(spread == coalesced, s"$name: 16 partitions gave other labels")
+      // spread over 16 partitions, the chain's local stars meet only
+      // across partitions, so the rounds past the first two must merge them
+      if (name == "cluster chain")
+        assert(lines.exists(_.matches("fixpoint op=connectedComponents rounds=([3-9]|1\\d) .*")), lines)
+    }
+  }
+
+  test("connected components: a chain contracted in one task converges in 2 rounds") {
+    import spark.implicits._
+    val (_, lines) = linesLogged(Fixpoint.getClass, Level.INFO) {
+      Dedup.connectedComponents(clusterChain.toDF("id_a", "id_b"), "id_a", "id_b").collect()
+    }
+    assert(lines == Seq("fixpoint op=connectedComponents rounds=2 max=20 converged=true"), lines)
   }
 
   test("decontamination: leaked passage flags, clean docs don't, bench side broadcasts") {

@@ -4,6 +4,10 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -62,5 +66,31 @@ abstract class SparkSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
     val started = groups.asScala.toSeq
     bodies.map { case (g, _) => g -> started.count(_ == g) }.toMap
+  }
+
+  /** Runs `body` with the log4j logger of `cls` set to `level` and
+    * returns its result with, in order, the messages the logger logged
+    * at `level` or above while the body ran. The logger's level is
+    * restored afterwards.
+    */
+  def linesLogged[T](cls: Class[_], level: Level)(body: => T): (T, Seq[String]) = {
+    val lines = new ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("linesLogged", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(level)) lines.add(e.getMessage.getFormattedMessage)
+    }
+    val logger = LogManager.getLogger(cls).asInstanceOf[Logger]
+    val saved = logger.getLevel
+    appender.start()
+    logger.addAppender(appender)
+    logger.setLevel(level)
+    try {
+      val out = body
+      (out, lines.asScala.toSeq)
+    } finally {
+      logger.removeAppender(appender)
+      logger.setLevel(saved)
+      appender.stop()
+    }
   }
 }
