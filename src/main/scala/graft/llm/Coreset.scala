@@ -20,14 +20,15 @@ import org.apache.spark.sql.functions._
   * EXACT cross-engine arithmetic, so the whole greedy trace is
   * oracle-checkable: vectors are quantized to integer milli-units
   * (`Similarity.quantize` — the same representation the kNN/cosine
-  * tiers share), a pair similarity is the exact BIGINT dot cast to
-  * double over `sqrt((nsqA·nsqB) as double)` — one IEEE multiply,
-  * sqrt, divide on exactly-representable integers, bit-identical in
-  * DuckDB — and the per-round argmin orders by that double with ties
-  * on id. A center's self-similarity is exactly 1.0 (nsq ≤ ~6.4e7 at
-  * d=64 milli-quantized, so nsq² < 2^53 is an exactly-representable
-  * perfect square and sqrt returns nsq), but selection never relies on
-  * that: already-chosen ids are excluded explicitly.
+  * tiers share), a pair similarity is `Similarity.cosQ` — the exact
+  * BIGINT dot over the root of the exact norm product: one IEEE
+  * multiply, sqrt, divide on exactly-representable integers,
+  * bit-identical in DuckDB — and the per-round argmin orders by that
+  * double with ties on id. A center's self-similarity is exactly 1.0
+  * (nsq ≤ ~6.4e7 at d=64 milli-quantized, so nsq² < 2^53 is an
+  * exactly-representable perfect square and sqrt returns nsq), but
+  * selection never relies on that: already-chosen ids are excluded
+  * explicitly.
   *
   * Scale shape: k passes, NO shuffle anywhere. The per-point state
   * (best = max cosine to any chosen center) lives in a column and is
@@ -78,10 +79,9 @@ object Coreset {
       val selected = collection.mutable.ArrayBuffer[(Long, Double)]()
 
       def centerCos(row: Row): org.apache.spark.sql.Column = {
-        val cv = typedLit(row.getSeq[Long](row.fieldIndex("__vq")))
-        val cn = row.getLong(row.fieldIndex("__nsq"))
-        graft.functions.Sketches.dotQ(col("__vq"), cv).cast("double") /
-          sqrt((col("__nsq") * lit(cn)).cast("double"))
+        Similarity.cosQ(col("__vq"), col("__nsq"),
+          typedLit(row.getSeq[Long](row.fieldIndex("__vq"))),
+          lit(row.getLong(row.fieldIndex("__nsq"))))
       }
 
       selected += ((first.getLong(first.fieldIndex(idCol)), -2.0))

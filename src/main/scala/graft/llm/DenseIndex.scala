@@ -2,10 +2,9 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 import graft.api.ModelStore
-import graft.llm.Similarity.{dotQ, normalizedVecs}
+import graft.llm.Similarity.{ivfMembers, ivfSearch, normalizedVecs}
 
 /** Persisted dense (IVF) ANN index — the lexical/MinHash index-store
   * pattern (`Retrieval.buildLexIndex` / `Dedup.buildMinhashIndex`)
@@ -59,12 +58,7 @@ object DenseIndex {
     require(kEff > 0 && flatCentroids.nonEmpty &&
       flatCentroids.length % kEff == 0,
       "assignMembers: centroids must be kEff x d row-major")
-    normalizedVecs(df, idCol, embCol)
-      .withColumn("__d",
-        graft.functions.Sketches.centroidDists(col("nd"), flatCentroids, kEff))
-      .withColumn("cluster",
-        coalesce(expr("array_position(__d, array_min(__d)) - 1"), lit(-1L)))
-      .select(col(idCol), col("cluster"), col("vq"), col("nsq"))
+    ivfMembers(normalizedVecs(df, idCol, embCol), idCol, flatCentroids, kEff)
   }
 
   /** Train the coarse quantizer on `df` (the `ivfTrain` bounded
@@ -89,29 +83,9 @@ object DenseIndex {
     * ranking (cos DESC, id ASC) with probe-id self-matches excluded.
     */
   def search(idx: DenseIndex, probes: DataFrame, idCol: String,
-             embCol: String, k: Int, nProbe: Int = 4): DataFrame = {
-    val p = broadcast(
-      normalizedVecs(probes, idCol, embCol)
-        .withColumn("__d", graft.functions.Sketches.centroidDists(
-          col("nd"), idx.flatCentroids, idx.kEff))
-        .select(col(idCol).as("probe_id"), col("vq").as("pv"),
-          col("nsq").as("pnsq"),
-          explode(expr(
-            s"""slice(array_sort(transform(__d, (x, i) -> struct(x AS d, i AS c))),
-               |  1, $nProbe)""".stripMargin)).as("pc"))
-        .select(col("probe_id"), col("pv"), col("pnsq"),
-          coalesce(col("pc.c").cast("long"), lit(-1L)).as("cluster")))
-    p.join(idx.members, Seq("cluster"))
-      .filter(col("probe_id") =!= col(idCol))
-      .withColumn("cos",
-        dotQ("pv", "vq").cast("double") /
-          sqrt((col("pnsq") * col("nsq")).cast("double")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col("cos").desc, col(idCol))))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col(idCol).as("neighbor_id"),
-        col("rank"), col("cos"))
-  }
+             embCol: String, k: Int, nProbe: Int = 4): DataFrame =
+    ivfSearch(normalizedVecs(probes, idCol, embCol), idx.members, idCol,
+      idx.flatCentroids, idx.kEff, nProbe, k)
 
   /** Apply a snapshot diff at touched-data cost: `removedIds` =
     * removed + changed ids, `addedDocs` = added + changed rows (the

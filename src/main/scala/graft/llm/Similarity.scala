@@ -61,7 +61,69 @@ object Similarity {
     * filter before the sentinel could fabricate a NaN comparison.
     */
   def normSqQ(v: String): Column =
-    coalesce(graft.functions.Sketches.dotQ(col(v), col(v)), lit(-1L))
+    coalesce(dotQ(v, v), lit(-1L))
+
+  /** The quantized cosine of vector `a` (exact squared norm `na`)
+    * against `b` (norm `nb`): the exact integer dot over the root of
+    * the exact norm product — one IEEE divide of exactly-representable
+    * doubles, the cross-engine-exact formula every cosine tier here
+    * (and `Coreset.kCenters`) scores with.
+    */
+  private[llm] def cosQ(a: Column, na: Column, b: Column, nb: Column): Column =
+    graft.functions.Sketches.dotQ(a, b).cast("double") / sqrt((na * nb).cast("double"))
+
+  /** Each `by` group's `n` best rows by `score` DESC, ties broken on
+    * `tie` ASC, numbered 1..n in column `as`: the one ranking rule of
+    * every top-k, shortlist and kNN cut here.
+    */
+  private def topPer(df: DataFrame, by: String, score: String, tie: String,
+                     n: Int, as: String): DataFrame =
+    df.withColumn(as, row_number().over(
+        Window.partitionBy(by).orderBy(col(score).desc, col(tie))))
+      .filter(col(as) <= n)
+
+  /** The tail of every probe-side top-k: score (probe_id, pv, pnsq) ×
+    * (idCol, `v`, nsq) rows by quantized cosine and keep each probe's
+    * k best as (probe_id, neighbor_id, rank, cos).
+    */
+  private def probeTopK(pairs: DataFrame, idCol: String, v: String,
+                        k: Int): DataFrame =
+    topPer(pairs.withColumn("cos", cosQ(col("pv"), col("pnsq"), col(v), col("nsq"))),
+        "probe_id", "cos", idCol, k, "rank")
+      .select(col("probe_id"), col(idCol).as("neighbor_id"), col("rank"), col("cos"))
+
+  /** `probeTopK`'s output with no rows: the trained tiers' answer when
+    * there is nothing to train on.
+    */
+  private def noNeighbors(df: DataFrame, idCol: String): DataFrame =
+    df.limit(0).select(col(idCol).as("probe_id"), col(idCol).as("neighbor_id"),
+      lit(1).as("rank"), lit(null).cast("double").as("cos"))
+
+  /** The probe side of a top-k join: the id, vector `v` and norm
+    * `nsq`, renamed to (probe_id, pv, pnsq).
+    */
+  private def probeCols(idCol: String, v: String): Seq[Column] =
+    Seq(col(idCol).as("probe_id"), col(v).as("pv"), col("nsq").as("pnsq"))
+
+  /** `keep` plus the quantized vector `v` and its norm `nsq`: the row
+    * shape of the exact, un-repartitioned tiers.
+    */
+  private def exactVecs(df: DataFrame, embCol: String, keep: Column*): DataFrame =
+    df.select(keep :+ quantize(embCol).as("v"): _*).withColumn("nsq", normSqQ("v"))
+
+  private def asDouble(embCol: String): Column =
+    expr(s"transform($embCol, x -> CAST(x AS double))")
+
+  /** `df` repartitioned on `idCol` — a small parquet arrives as one
+    * partition, and every expression after this is a per-row kernel —
+    * with its vector as doubles, `vd`.
+    */
+  private def doubleVecs(df: DataFrame, idCol: String, embCol: String): DataFrame =
+    df.repartition(col(idCol)).select(col(idCol), asDouble(embCol).as("vd"))
+
+  /** `vecs` plus the quantized `vq` of its `vd` and the exact norm `nsq`. */
+  private def withQuantized(vecs: DataFrame): DataFrame =
+    vecs.withColumn("vq", quantize("vd")).withColumn("nsq", normSqQ("vq"))
 
   /** Quantized-cosine top-k: exact, deterministic, oracle-checkable.
     * Probes are the rows matching `probePred`; ranking is
@@ -69,19 +131,9 @@ object Similarity {
     */
   def bruteForceTopK(df: DataFrame, idCol: String, embCol: String,
                      probePred: Column, k: Int): DataFrame = {
-    val vecs = df.select(col(idCol), quantize(embCol).as("v"))
-      .withColumn("nsq", normSqQ("v"))
-    val probes = broadcast(
-      vecs.filter(probePred).select(
-        col(idCol).as("probe_id"), col("v").as("pv"), col("nsq").as("pnsq")))
-    probes.join(vecs, col("probe_id") =!= col(idCol))
-      .withColumn("cos",
-        dotQ("pv", "v").cast("double") /
-          sqrt((col("pnsq") * col("nsq")).cast("double")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col("cos").desc, col(idCol))))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col(idCol).as("neighbor_id"), col("rank"), col("cos"))
+    val vecs = exactVecs(df, embCol, col(idCol))
+    val probes = broadcast(vecs.filter(probePred).select(probeCols(idCol, "v"): _*))
+    probeTopK(probes.join(vecs, col("probe_id") =!= col(idCol)), idCol, "v", k)
   }
 
   /** Two-stage search over the INT8 store: score every candidate with
@@ -98,41 +150,37 @@ object Similarity {
                      probePred: Column, k: Int, rerankFactor: Int = 4): DataFrame = {
     val q8 = quantizeInt8(df, idCol, embCol)
       .select(col(idCol), col("qvec"))
-      .withColumn("n8", graft.functions.Sketches.dotQ(col("qvec"), col("qvec")))
+      .withColumn("n8", dotQ("qvec", "qvec"))
     val probes8 = broadcast(q8.filter(probePred)
       .select(col(idCol).as("probe_id"), col("qvec").as("p8"), col("n8").as("pn8")))
-    val shortlist = probes8.join(q8, col("probe_id") =!= col(idCol))
-      .withColumn("cos8",
-        graft.functions.Sketches.dotQ(col("p8"), col("qvec")).cast("double") /
-          sqrt((col("pn8") * col("n8")).cast("double")))
-      .withColumn("r8", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col("cos8").desc, col(idCol))))
-      .filter(col("r8") <= k * rerankFactor)
-      .select(col("probe_id"), col(idCol))
-    // exact rerank on the shortlist only
-    val vecs = df.select(col(idCol), quantize(embCol).as("v"))
-      .withColumn("nsq", normSqQ("v"))
-    val pv = broadcast(vecs.filter(probePred)
-      .select(col(idCol).as("probe_id"), col("v").as("pv"), col("nsq").as("pnsq")))
-    shortlist
-      .join(vecs, idCol)
-      .join(pv, "probe_id")
-      .withColumn("cos",
-        dotQ("pv", "v").cast("double") /
-          sqrt((col("pnsq") * col("nsq")).cast("double")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col("cos").desc, col(idCol))))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col(idCol).as("neighbor_id"), col("rank"), col("cos"))
+    rerankExact(probes8.join(q8, col("probe_id") =!= col(idCol))
+        .withColumn("cos8", cosQ(col("p8"), col("pn8"), col("qvec"), col("n8"))),
+      "cos8", df, idCol, embCol, probePred, k, rerankFactor)
   }
 
-  /** Dimensionality probe: one tiny head() job on the first row.
-    * Assumes uniform dims (the embedding-table contract); 1 on empty
-    * input so downstream plane construction stays well-formed.
+  /** The exact stage of the two-stage tiers: keep each probe's
+    * `k · rerankFactor` best (probe_id, idCol) rows of `scored` by its
+    * approximate `score`, then re-score that shortlist with the exact
+    * quantized cosine — wide vectors are read ONLY for shortlisted ids
+    * and the broadcast probes.
+    */
+  private def rerankExact(scored: DataFrame, score: String, df: DataFrame,
+                          idCol: String, embCol: String, probePred: Column,
+                          k: Int, rerankFactor: Int): DataFrame = {
+    val shortlist = topPer(scored, "probe_id", score, idCol, k * rerankFactor, "r8")
+      .select(col("probe_id"), col(idCol))
+    val wide = exactVecs(df, embCol, col(idCol))
+    val pv = broadcast(wide.filter(probePred).select(probeCols(idCol, "v"): _*))
+    probeTopK(shortlist.join(wide, idCol).join(pv, "probe_id"), idCol, "v", k)
+  }
+
+  /** Dimensionality probe: one tiny head() job on the first non-null
+    * vector. Assumes uniform dims (the embedding-table contract); 0
+    * when there is no vector at all.
     */
   private def dimsOf(df: DataFrame, embCol: String): Int =
-    df.select(size(expr(embCol)).as("d")).head(1)
-      .headOption.map(_.getInt(0)).getOrElse(1)
+    df.where(expr(embCol).isNotNull).select(size(expr(embCol))).head(1)
+      .headOption.map(_.getInt(0)).getOrElse(0)
 
   /** IVFPQ — the top rung of the ANN ladder (brute → int8 → IVF/LSH →
     * PQ → this), the shape FAISS's IVFPQ and friends standardized from
@@ -177,50 +225,26 @@ object Similarity {
     val vecs = normalizedVecs(df, idCol, embCol)
     val sample = sampleNormalized(vecs, idCol, df.count(),
       math.max(trainSample, math.max(nClusters, nCentroids)))
-    if (sample.isEmpty)
-      return df.limit(0).select(
-        col(idCol).as("probe_id"), col(idCol).as("neighbor_id"),
-        lit(1).as("rank"), lit(0.0).as("cos"))
-    val kCoarse = math.min(nClusters, sample.length)
-    val coarse = lloyd(sample, kCoarse, lloydIters)
-    val flatCoarse = coarse.flatten
-    def nearestCell(v: Array[Double]): Int = {
-      var best = 0; var bd = Double.MaxValue; var c = 0
-      while (c < kCoarse) {
-        var s = 0.0; var i = 0
-        while (i < d) { val t = v(i) - coarse(c)(i); s += t * t; i += 1 }
-        if (s < bd) { bd = s; best = c }
-        c += 1
-      }
-      best
-    }
+    if (sample.isEmpty) return noNeighbors(df, idCol)
+    val coarse = lloyd(sample, math.min(nClusters, sample.length), lloydIters)
+    val coarseDists = graft.functions.Sketches.centroidDists(
+      col("nd"), coarse.flatten, coarse.length)
     val residSample = sample.map { v =>
-      val cc = coarse(nearestCell(v))
+      val cc = coarse(nearestCentroid(v, coarse))
       Array.tabulate(d)(i => v(i) - cc(i))
     }
-    val kEff = math.min(nCentroids, residSample.length)
-    val books = Array.tabulate(m) { j =>
-      lloyd(residSample.map(_.slice(j * sub, (j + 1) * sub)), kEff, lloydIters).flatten
-    }
+    val (books, kEff) = subspaceBooks(residSample, m, sub, nCentroids, lloydIters)
     // coarse centroids as a SQL literal for the residual zip_with (16
     // cells × dims doubles — plan-sized, same class as the plane/
     // centroid literals elsewhere)
     val centLit = coarse.map(c =>
       c.map(x => s"${x}D").mkString("array(", ",", ")"))
       .mkString("array(", ",", ")")
-    def residExpr(ndCol: String): Column = expr(
-      s"""CASE WHEN cell >= 0 THEN
-         |  zip_with($ndCol, element_at($centLit, CAST(cell + 1 AS int)),
-         |           (x, c) -> x - c)
-         |ELSE NULL END""".stripMargin)
-
     val members = pqEncodeWith(
-      vecs
-        .withColumn("__cd", graft.functions.Sketches.centroidDists(
-          col("nd"), flatCoarse, kCoarse))
-        .withColumn("cell",
-          coalesce(expr("array_position(__cd, array_min(__cd)) - 1"), lit(-1L)))
-        .withColumn("__resid", residExpr("nd")),
+      withCell(vecs, coarseDists, "__cd", "cell").withColumn("__resid", expr(
+        s"""CASE WHEN cell >= 0 THEN
+           |  zip_with(nd, element_at($centLit, CAST(cell + 1 AS int)), (x, c) -> x - c)
+           |ELSE NULL END""".stripMargin)),
       idCol, books, kEff, m, sub, vecCol = "__resid", keep = Seq("cell"))
 
     // Inner-product ADC decomposition (cross-cell comparable):
@@ -231,37 +255,25 @@ object Similarity {
     // <p, cent_cell> bias. Scoring by the residual-vs-residual dot
     // instead would drop the <cent, x_r> cross term and make scores
     // incomparable across a probe's nProbe cells.
-    val bigM = new Array[Double](m * kEff * d)
-    for (j <- 0 until m; c <- 0 until kEff; t <- 0 until sub)
-      bigM((j * kEff + c) * d + j * sub + t) = books(j)(c * sub + t)
     val probes = broadcast(
       vecs.filter(probePred)
-        .withColumn("__cd", graft.functions.Sketches.centroidDists(
-          col("nd"), flatCoarse, kCoarse))
-        .withColumn("__lut", graft.functions.Sketches.matVec(
-          col("nd"), bigM, new Array[Double](m * kEff)))
+        .withColumn("__cd", coarseDists)
+        .withColumn("__lut", adcTable(books, kEff, sub))
         .select(col(idCol).as("probe_id"), col("nd").as("__nd"), col("__lut"),
-          explode(expr(
-            s"""slice(array_sort(transform(__cd, (x, i) -> struct(x AS d, i AS c))),
-               |  1, $nProbe)""".stripMargin)).as("pc"))
-        .select(col("probe_id"), col("__lut"),
-          coalesce(col("pc.c").cast("long"), lit(-1L)).as("cell"),
+          probeCells("__cd", nProbe))
+        .select(col("probe_id"), col("__lut"), probeCell.as("cell"),
           expr(s"""CASE WHEN pc.c >= 0 THEN
                   |  aggregate(zip_with(__nd, element_at($centLit, CAST(pc.c + 1 AS int)),
                   |    (x, c) -> x * c), CAST(0.0 AS double), (a, b) -> a + b)
                   |ELSE NULL END""".stripMargin).as("__bias")))
 
-    val shortlist = probes.join(members, Seq("cell"))
-      .filter(col("probe_id") =!= col(idCol))
-      .withColumn("adc", col("__bias") + graft.functions.Sketches.pqAdc(
-        col("__lut"), col("pq_code"), m, kEff))
-      .filter(col("adc").isNotNull)
-      .select(col("probe_id"), col(idCol), col("adc"))
-      .withColumn("r8", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col("adc").desc, col(idCol))))
-      .filter(col("r8") <= k * rerankFactor)
-      .select(col("probe_id"), col(idCol))
-    rerankExact(shortlist, df, idCol, embCol, probePred, k)
+    rerankExact(probes.join(members, Seq("cell"))
+        .filter(col("probe_id") =!= col(idCol))
+        .withColumn("adc", col("__bias") + graft.functions.Sketches.pqAdc(
+          col("__lut"), col("pq_code"), m, kEff))
+        .filter(col("adc").isNotNull)
+        .select(col("probe_id"), col(idCol), col("adc")),
+      "adc", df, idCol, embCol, probePred, k, rerankFactor)
   }
 
   /** Tag every row with a `quarantine_reason` (NULL = clean): the
@@ -273,17 +285,18 @@ object Similarity {
     * `null_vector`, `wrong_dims`, `null_element`, `non_finite`
     * (NaN/±Inf), `zero_norm`. Pure row-local Column logic — a map at
     * any scale, no UDF, SQL-expressible on both engines (DuckDB
-    * oracle on `q_embed_quarantine`).
+    * oracle on `q_embed_quarantine`). The dimensionality is declared,
+    * not read off the data: a vector of any other length is
+    * `wrong_dims`, whichever row comes first.
     */
   def auditEmbeddings(df: DataFrame, idCol: String, embCol: String,
-                      expectedDims: Option[Int] = None): DataFrame = {
+                      expectedDims: Int): DataFrame = {
     require(!df.columns.contains("quarantine_reason"),
       "auditEmbeddings: 'quarantine_reason' is reserved for output — rename it")
-    val d = expectedDims.getOrElse(dimsOf(df, embCol))
     val asD = s"transform($embCol, x -> CAST(x AS double))"
     df.withColumn("quarantine_reason",
       when(col(embCol).isNull, lit("null_vector"))
-        .when(size(col(embCol)) =!= d, lit("wrong_dims"))
+        .when(size(col(embCol)) =!= expectedDims, lit("wrong_dims"))
         .when(expr(s"exists($embCol, x -> isnull(x))"), lit("null_element"))
         .when(expr(s"exists($asD, x -> isnan(x) OR x = CAST('Infinity' AS double)" +
           " OR x = CAST('-Infinity' AS double))"), lit("non_finite"))
@@ -298,10 +311,91 @@ object Similarity {
     * would persist the audit once and split the cached frame.)
     */
   def quarantineEmbeddings(df: DataFrame, idCol: String, embCol: String,
-                           expectedDims: Option[Int] = None): (DataFrame, DataFrame) = {
+                           expectedDims: Int): (DataFrame, DataFrame) = {
     val a = auditEmbeddings(df, idCol, embCol, expectedDims)
     (a.filter(col("quarantine_reason").isNull).drop("quarantine_reason"),
       a.filter(col("quarantine_reason").isNotNull))
+  }
+
+  /** Train the m per-subspace codebooks on one bounded sample. */
+  private def pqBooks(vecs: DataFrame, idCol: String, nRows: Long, m: Int,
+                      sub: Int, nCentroids: Int, lloydIters: Int,
+                      trainSample: Int): Option[(Array[Array[Double]], Int)] = {
+    val sample = sampleNormalized(vecs, idCol, nRows,
+      math.max(trainSample, nCentroids))
+    if (sample.isEmpty) None
+    else Some(subspaceBooks(sample, m, sub, nCentroids, lloydIters))
+  }
+
+  /** Lloyd on each of the m `sub`-dim slices of `sample`: the codebooks
+    * (flat kEff × sub each) and their shared effective size kEff.
+    */
+  private def subspaceBooks(sample: Array[Array[Double]], m: Int, sub: Int,
+                            nCentroids: Int, lloydIters: Int): (Array[Array[Double]], Int) = {
+    val kEff = math.min(nCentroids, sample.length)
+    (Array.tabulate(m) { j =>
+      lloyd(sample.map(_.slice(j * sub, (j + 1) * sub)), kEff, lloydIters).flatten
+    }, kEff)
+  }
+
+  /** Encode against trained codebooks: code_j = argmin centroid of
+    * subspace j of `vecCol`, packed one byte each into a single int64.
+    * Extra columns named in `keep` ride along (the IVFPQ variant keeps
+    * its coarse cell id next to the code).
+    */
+  private def pqEncodeWith(vecs: DataFrame, idCol: String,
+                           books: Array[Array[Double]], kEff: Int,
+                           m: Int, sub: Int, vecCol: String = "nd",
+                           keep: Seq[String] = Nil): DataFrame = {
+    var enc = vecs
+    for (j <- 0 until m)
+      enc = enc.withColumn(s"__d$j", graft.functions.Sketches.centroidDists(
+        expr(s"slice($vecCol, ${j * sub + 1}, $sub)"), books(j), kEff))
+    val packed = (0 until m).map(j =>
+      expr(s"shiftleft(array_position(__d$j, array_min(__d$j)) - 1, ${8 * j})"))
+      .reduce(_ + _)
+    enc.select(col(idCol) +: packed.as("pq_code") +: keep.map(col): _*)
+  }
+
+  /** A probe's ADC lookup table: ONE compiled matVec of its full unit
+    * vector `nd` through the block-diagonal codebook matrix (m·kEff
+    * rows, zeros outside block j), so entry j·kEff + c is the dot of
+    * the probe's subspace j with centroid c of book j.
+    */
+  private def adcTable(books: Array[Array[Double]], kEff: Int, sub: Int): Column = {
+    val m = books.length
+    val d = m * sub
+    val bigM = new Array[Double](m * kEff * d)
+    for (j <- 0 until m; c <- 0 until kEff; t <- 0 until sub)
+      bigM((j * kEff + c) * d + j * sub + t) = books(j)(c * sub + t)
+    graft.functions.Sketches.matVec(col("nd"), bigM, new Array[Double](m * kEff))
+  }
+
+  private def pqParams(df: DataFrame, embCol: String, m: Int,
+                       nCentroids: Int): Int = {
+    val d = dimsOf(df, embCol)
+    require(m >= 1 && m <= 8, s"PQ: 1 <= m <= 8 (codes pack one byte each into an int64), got $m")
+    require(d % m == 0, s"PQ: dims $d must divide into m=$m subspaces")
+    require(nCentroids >= 1 && nCentroids <= 256, s"PQ: codes are 8-bit, got $nCentroids")
+    d
+  }
+
+  /** The storage artifact alone: (idCol, pq_code bigint) — 8 bytes per
+    * vector. A zero-norm vector encodes to a NULL code (no direction;
+    * same quarantine as the other cosine tiers). See `pqTopK` for the
+    * full design story.
+    */
+  def pqEncode(df: DataFrame, idCol: String, embCol: String, m: Int = 8,
+               nCentroids: Int = 256, lloydIters: Int = 5,
+               trainSample: Int = 1024): DataFrame = {
+    val d = pqParams(df, embCol, m, nCentroids)
+    val sub = d / m
+    val vecs = normalizedVecs(df, idCol, embCol)
+    pqBooks(vecs, idCol, df.count(), m, sub, nCentroids, lloydIters,
+        trainSample) match {
+      case None => df.limit(0).select(col(idCol), lit(null).cast("long").as("pq_code"))
+      case Some((books, kEff)) => pqEncodeWith(vecs, idCol, books, kEff, m, sub)
+    }
   }
 
   /** Product-quantization ANN: the compression rung below int8 on the
@@ -337,65 +431,6 @@ object Similarity {
     * Zero-norm vectors quarantine to a null code (no direction → never
     * a candidate), same CASE-not-filter discipline as `ivfTopK`.
     */
-  /** Train the m per-subspace codebooks on one bounded sample. */
-  private def pqBooks(vecs: DataFrame, idCol: String, nRows: Long, m: Int,
-                      sub: Int, nCentroids: Int, lloydIters: Int,
-                      trainSample: Int): Option[(Array[Array[Double]], Int)] = {
-    val sample = sampleNormalized(vecs, idCol, nRows,
-      math.max(trainSample, nCentroids))
-    if (sample.isEmpty) return None
-    val kEff = math.min(nCentroids, sample.length)
-    Some((Array.tabulate(m) { j =>
-      lloyd(sample.map(_.slice(j * sub, (j + 1) * sub)), kEff, lloydIters).flatten
-    }, kEff))
-  }
-
-  /** Encode against trained codebooks: code_j = argmin centroid of
-    * subspace j of `vecCol`, packed one byte each into a single int64.
-    * Extra columns named in `keep` ride along (the IVFPQ variant keeps
-    * its coarse cell id next to the code).
-    */
-  private def pqEncodeWith(vecs: DataFrame, idCol: String,
-                           books: Array[Array[Double]], kEff: Int,
-                           m: Int, sub: Int, vecCol: String = "nd",
-                           keep: Seq[String] = Nil): DataFrame = {
-    var enc = vecs
-    for (j <- 0 until m)
-      enc = enc.withColumn(s"__d$j", graft.functions.Sketches.centroidDists(
-        expr(s"slice($vecCol, ${j * sub + 1}, $sub)"), books(j), kEff))
-    val packed = (0 until m).map(j =>
-      expr(s"shiftleft(array_position(__d$j, array_min(__d$j)) - 1, ${8 * j})"))
-      .reduce(_ + _)
-    enc.select(col(idCol) +: packed.as("pq_code") +: keep.map(col): _*)
-  }
-
-  private def pqParams(df: DataFrame, embCol: String, m: Int,
-                       nCentroids: Int): Int = {
-    val d = dimsOf(df, embCol)
-    require(m >= 1 && m <= 8, s"PQ: 1 <= m <= 8 (codes pack one byte each into an int64), got $m")
-    require(d % m == 0, s"PQ: dims $d must divide into m=$m subspaces")
-    require(nCentroids >= 1 && nCentroids <= 256, s"PQ: codes are 8-bit, got $nCentroids")
-    d
-  }
-
-  /** The storage artifact alone: (idCol, pq_code bigint) — 8 bytes per
-    * vector. A zero-norm vector encodes to a NULL code (no direction;
-    * same quarantine as the other cosine tiers). See `pqTopK` for the
-    * full design story.
-    */
-  def pqEncode(df: DataFrame, idCol: String, embCol: String, m: Int = 8,
-               nCentroids: Int = 256, lloydIters: Int = 5,
-               trainSample: Int = 1024): DataFrame = {
-    val d = pqParams(df, embCol, m, nCentroids)
-    val sub = d / m
-    val vecs = normalizedVecs(df, idCol, embCol)
-    pqBooks(vecs, idCol, df.count(), m, sub, nCentroids, lloydIters,
-        trainSample) match {
-      case None => df.limit(0).select(col(idCol), lit(0L).as("pq_code"))
-      case Some((books, kEff)) => pqEncodeWith(vecs, idCol, books, kEff, m, sub)
-    }
-  }
-
   def pqTopK(df: DataFrame, idCol: String, embCol: String,
              probePred: Column, k: Int, m: Int = 8, nCentroids: Int = 256,
              lloydIters: Int = 5, trainSample: Int = 1024,
@@ -405,56 +440,18 @@ object Similarity {
     val vecs = normalizedVecs(df, idCol, embCol)
     val trained = pqBooks(vecs, idCol, df.count(), m, sub, nCentroids,
       lloydIters, trainSample)
-    if (trained.isEmpty)
-      return df.limit(0).select(
-        col(idCol).as("probe_id"), col(idCol).as("neighbor_id"),
-        lit(1).as("rank"), lit(0.0).as("cos"))
+    if (trained.isEmpty) return noNeighbors(df, idCol)
     val (books, kEff) = trained.get
     val encoded = pqEncodeWith(vecs, idCol, books, kEff, m, sub)
-
-    // --- probe LUT: lut = M_blockdiag · probe, one compiled matVec --
-    val bigM = new Array[Double](m * kEff * d)
-    for (j <- 0 until m; c <- 0 until kEff; t <- 0 until sub)
-      bigM((j * kEff + c) * d + j * sub + t) = books(j)(c * sub + t)
     val probes = broadcast(vecs.filter(probePred)
-      .select(col(idCol).as("probe_id"),
-        graft.functions.Sketches.matVec(col("nd"), bigM,
-          new Array[Double](m * kEff)).as("__lut")))
-
-    // --- ADC scan + rank-limit shortlist (narrow rows only) ---------
-    val shortlist = probes.join(encoded, col("probe_id") =!= col(idCol))
-      .withColumn("adc", graft.functions.Sketches.pqAdc(
-        col("__lut"), col("pq_code"), m, kEff))
-      .filter(col("adc").isNotNull)
-      .select(col("probe_id"), col(idCol), col("adc"))
-      .withColumn("r8", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col("adc").desc, col(idCol))))
-      .filter(col("r8") <= k * rerankFactor)
-      .select(col("probe_id"), col(idCol))
-    rerankExact(shortlist, df, idCol, embCol, probePred, k)
-  }
-
-  /** Shared exact-rerank tail of the compressed-code tiers: re-score a
-    * (probe_id, idCol) shortlist with the exact quantized cosine —
-    * wide vectors are read ONLY for shortlisted ids and the broadcast
-    * probes.
-    */
-  private def rerankExact(shortlist: DataFrame, df: DataFrame, idCol: String,
-                          embCol: String, probePred: Column, k: Int): DataFrame = {
-    val wide = df.select(col(idCol), quantize(embCol).as("v"))
-      .withColumn("nsq", normSqQ("v"))
-    val pv = broadcast(wide.filter(probePred)
-      .select(col(idCol).as("probe_id"), col("v").as("pv"), col("nsq").as("pnsq")))
-    shortlist
-      .join(wide, idCol)
-      .join(pv, "probe_id")
-      .withColumn("cos",
-        dotQ("pv", "v").cast("double") /
-          sqrt((col("pnsq") * col("nsq")).cast("double")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col("cos").desc, col(idCol))))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col(idCol).as("neighbor_id"), col("rank"), col("cos"))
+      .select(col(idCol).as("probe_id"), adcTable(books, kEff, sub).as("__lut")))
+    // ADC scan + rank-limit shortlist (narrow rows only)
+    rerankExact(probes.join(encoded, col("probe_id") =!= col(idCol))
+        .withColumn("adc", graft.functions.Sketches.pqAdc(
+          col("__lut"), col("pq_code"), m, kEff))
+        .filter(col("adc").isNotNull)
+        .select(col("probe_id"), col(idCol), col("adc")),
+      "adc", df, idCol, embCol, probePred, k, rerankFactor)
   }
 
   /** ANN top-k via multiprobe hyperplane LSH. Candidates = corpus
@@ -471,14 +468,10 @@ object Similarity {
   def annTopK(df: DataFrame, idCol: String, embCol: String,
               probePred: Column, k: Int, nbits: Int = 5,
               probeFlips: Int = 1): DataFrame = {
-    val dims = dimsOf(df, embCol)
-    val vecs = df.repartition(col(idCol))
-      .select(col(idCol),
-        expr(s"transform($embCol, x -> CAST(x AS double))").as("vd"))
+    val vecs = withQuantized(doubleVecs(df, idCol, embCol)
       .withColumn("bucket", coalesce(element_at(
         graft.functions.Sketches.hyperplaneSigs(
-          col("vd"), planeArray(1, nbits, dims), 1, nbits), 1), lit(-1L)))
-      .withColumn("vq", quantize("vd")).withColumn("nsq", normSqQ("vq"))
+          col("vd"), planesFor(df, embCol, 1, nbits), 1, nbits), 1), lit(-1L))))
     // enumerated multiprobe: all bucket ids within hamming <= probeFlips
     // of the probe's bucket. 2-bit probing matters at the deeper codes
     // corpus scale needs for selectivity (at nbits=8, 1-bit probing
@@ -496,43 +489,11 @@ object Similarity {
         .withColumn("flip", explode(lit(flips.toArray)))
         .withColumn("bucket", col("flip").bitwiseXOR(col("pb")))
         .drop("flip", "pb"))
-    probes.join(vecs.drop("vd"), Seq("bucket"))
+    probeTopK(probes.join(vecs.drop("vd"), Seq("bucket"))
       .filter(col("probe_id") =!= col(idCol))
-      .dropDuplicates("probe_id", idCol)
-      .withColumn("cos",
-        dotQ("pv", "vq").cast("double") /
-          sqrt((col("pnsq") * col("nsq")).cast("double")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col("cos").desc, col(idCol))))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col(idCol).as("neighbor_id"), col("rank"), col("cos"))
+      .dropDuplicates("probe_id", idCol), idCol, "vq", k)
   }
 
-  /** IVF (inverted-file) ANN: a coarse k-means quantizer over
-    * L2-NORMALIZED vectors (squared L2 on the unit sphere is monotone
-    * in cosine), then probes scan only the `nProbe` nearest centroid
-    * lists — the classic FAISS-style scale path, complementary to the
-    * hyperplane-LSH tier (`annTopK`): IVF adapts to the data's actual
-    * density, LSH is oblivious and needs no training pass.
-    *
-    * Everything is deterministic so the driver's rows-only check and
-    * the AnnSpec recall gate are stable: the training sample is the
-    * `trainSample` vectors with the smallest xxhash64(id) (no RNG),
-    * init takes the sample's first `nClusters`, Lloyd runs on the
-    * driver over that bounded sample in a fixed order, and assignment
-    * ties break on the first minimal distance.
-    *
-    * Scale notes: training on a BOUNDED sample is the standard IVF
-    * recipe (a coarse quantizer needs ~10-100 samples per centroid,
-    * not the corpus) — so the train step collects k·dims-bounded data
-    * once, never the corpus (selected by a hash-threshold filter, not
-    * a corpus-wide sort — see below), and the distributed work is
-    * exactly two map passes (assign members, assign probes) against
-    * literal centroids plus one equality join on cluster id; the
-    * assignment's k·dims inner loop runs in the compiled
-    * `CentroidDistsExpr` kernel (graft.functions.Sketches). Candidate
-    * volume is ~nProbe/nClusters of the corpus per probe.
-    */
   /** Shared vector prep for the k-means-based tiers (ivfTopK,
     * semanticDedupClustered): quantized ints + exact norms for the
     * verify stage, and an L2-normalized double vector for clustering.
@@ -542,23 +503,13 @@ object Similarity {
     * pushdown-trap note in `ivfTopK`.
     */
   private[llm] def normalizedVecs(df: DataFrame, idCol: String, embCol: String): DataFrame =
-    df.repartition(col(idCol))
-      .select(col(idCol),
-        expr(s"transform($embCol, x -> CAST(x AS double))").as("vd"))
-      .withColumn("vq", quantize("vd")).withColumn("nsq", normSqQ("vq"))
+    withQuantized(doubleVecs(df, idCol, embCol))
       .withColumn("__n",
         sqrt(expr("aggregate(transform(vd, x -> x * x), CAST(0.0 AS double), (a, b) -> a + b)")))
       .withColumn("nd",
         expr("CASE WHEN __n > 0.0 THEN transform(vd, x -> x / __n) ELSE NULL END"))
       .drop("__n")
 
-  /** Deterministic driver-side Lloyd over a bounded hash-selected
-    * sample of `vecs` (which must carry the `nd` column from
-    * `normalizedVecs`). Returns the flattened centroid array and the
-    * effective cluster count, or None when the input is empty / all
-    * zero-norm. Shared by `ivfTopK` and `semanticDedupClustered`; the
-    * scale notes live on `ivfTopK`.
-    */
   /** Deterministic bounded sample of normalized vectors: the `want`
     * rows with the smallest xxhash64(id), realized as a hash-threshold
     * filter + TakeOrdered over the ~8× oversampled survivors (one
@@ -595,19 +546,11 @@ object Similarity {
   private def lloyd(sample: Array[Array[Double]], kEff: Int,
                     iters: Int): Array[Array[Double]] = {
     var centroids: Array[Array[Double]] = sample.take(kEff).map(_.clone())
-    def sqd(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
-      s
-    }
     for (_ <- 1 to iters) {
       val sums = Array.fill(kEff)(new Array[Double](sample.head.length))
       val counts = new Array[Long](kEff)
       for (v <- sample) {
-        var best = 0; var bd = sqd(v, centroids(0)); var c = 1
-        while (c < kEff) {
-          val d = sqd(v, centroids(c)); if (d < bd) { bd = d; best = c }; c += 1
-        }
+        val best = nearestCentroid(v, centroids)
         counts(best) += 1
         var i = 0; while (i < v.length) { sums(best)(i) += v(i); i += 1 }
       }
@@ -618,6 +561,27 @@ object Similarity {
     centroids
   }
 
+  /** Index of the centroid nearest `v` in squared L2, the first on a tie. */
+  private def nearestCentroid(v: Array[Double], centroids: Array[Array[Double]]): Int = {
+    def sqd(c: Array[Double]): Double = {
+      var s = 0.0; var i = 0
+      while (i < v.length) { val t = v(i) - c(i); s += t * t; i += 1 }
+      s
+    }
+    var best = 0; var bd = sqd(centroids(0)); var c = 1
+    while (c < centroids.length) {
+      val d = sqd(centroids(c)); if (d < bd) { bd = d; best = c }; c += 1
+    }
+    best
+  }
+
+  /** Deterministic driver-side Lloyd over a bounded hash-selected
+    * sample of `vecs` (which must carry the `nd` column from
+    * `normalizedVecs`). Returns the flattened centroid array and the
+    * effective cluster count, or None when the input is empty / all
+    * zero-norm. Shared by `ivfTrain` and `trainAssign`; the scale notes
+    * live on `ivfTopK`.
+    */
   private def trainKmeans(vecs: DataFrame, idCol: String, nRows: Long,
                           nClusters: Int, lloydIters: Int,
                           trainSample: Int): Option[(Array[Double], Int)] = {
@@ -628,12 +592,108 @@ object Similarity {
     Some((lloyd(sample, kEff, lloydIters).flatten, kEff))
   }
 
+  /** `vecs` plus column `dists` = `dist` (the squared distances of its
+    * unit vector to each centroid: a `centroidDists` column, or null
+    * when nothing was trained) and `as`, the 0-based index of the first
+    * minimal distance: the k-means cell. A null distance array
+    * (zero-norm or malformed vector, no centroids) takes the −1
+    * quarantine cell.
+    *
+    * The coalesce also makes the cell NON-NULLABLE: an inner join on a
+    * nullable key gets an inferred isnotnull(key) filter, and predicate
+    * pushdown re-substitutes the alias — re-evaluating the whole
+    * k-distance assignment a second time BELOW the repartition,
+    * single-core in the lone parquet partition (measured: 16 s of a
+    * 17 s query at sf0.1). With a non-nullable key no such filter
+    * exists; assignment runs once, distributed.
+    */
+  private def withCell(vecs: DataFrame, dist: Column, dists: String,
+                       as: String): DataFrame =
+    vecs.withColumn(dists, dist)
+      .withColumn(as, coalesce(expr(s"array_position($dists, array_min($dists)) - 1"), lit(-1L)))
+
+  /** A probe row exploded to its `nProbe` nearest cells by its
+    * `dists` column, as struct `pc` (d = distance, c = cell); read the
+    * cell with `probeCell`. A null `dists` explodes to no row.
+    */
+  private def probeCells(dists: String, nProbe: Int): Column =
+    explode(expr(
+      s"slice(array_sort(transform($dists, (x, i) -> struct(x AS d, i AS c))), 1, $nProbe)"))
+      .as("pc")
+
+  /** The cell of a `probeCells` row, non-nullable like `withCell`'s. */
+  private val probeCell: Column = coalesce(col("pc.c").cast("long"), lit(-1L))
+
+  /** IVF members: (idCol, cluster, vq, nsq) of `withCell` over frozen
+    * centroids — the rows `ivfSearch` joins and `DenseIndex` stores.
+    */
+  private[llm] def ivfMembers(vecs: DataFrame, idCol: String,
+                              flatCentroids: Array[Double], kEff: Int): DataFrame =
+    withCell(vecs, graft.functions.Sketches.centroidDists(col("nd"), flatCentroids, kEff),
+        "__d", "cluster")
+      .select(col(idCol), col("cluster"), col("vq"), col("nsq"))
+
+  /** IVF search: every `probeVecs` row (`normalizedVecs` columns) fans
+    * out to its `nProbe` nearest cells and broadcasts into an equi-join
+    * with `members` on `cluster`; the exact quantized cosine ranks what
+    * those cells hold, the probe's own id excluded.
+    */
+  private[llm] def ivfSearch(probeVecs: DataFrame, members: DataFrame, idCol: String,
+                             flatCentroids: Array[Double], kEff: Int, nProbe: Int,
+                             k: Int): DataFrame = {
+    val probes = broadcast(probeVecs
+      .withColumn("__d", graft.functions.Sketches.centroidDists(col("nd"), flatCentroids, kEff))
+      .select(probeCols(idCol, "vq") :+ probeCells("__d", nProbe): _*)
+      .select(col("probe_id"), col("pv"), col("pnsq"), probeCell.as("cluster")))
+    probeTopK(probes.join(members, Seq("cluster")).filter(col("probe_id") =!= col(idCol)),
+      idCol, "vq", k)
+  }
+
+  /** The front half of the clustered tiers: k-means trained on `df`'s
+    * bounded sample, every row of `normalizedVecs(df)` given its cell
+    * `as` by `withCell`. With nothing to train on — an empty or
+    * all-zero-norm corpus — every row takes the −1 quarantine cell.
+    */
+  private def trainAssign(df: DataFrame, idCol: String, embCol: String,
+                          nClusters: Int, lloydIters: Int, trainSample: Int,
+                          as: String): DataFrame = {
+    val vecs = normalizedVecs(df, idCol, embCol)
+    val dist = trainKmeans(vecs, idCol, df.count(), nClusters, lloydIters, trainSample) match {
+      case Some((flat, kEff)) => graft.functions.Sketches.centroidDists(col("nd"), flat, kEff)
+      case None => lit(null).cast("array<double>")
+    }
+    withCell(vecs, dist, "__d", as)
+  }
+
+  /** IVF (inverted-file) ANN: a coarse k-means quantizer over
+    * L2-NORMALIZED vectors (squared L2 on the unit sphere is monotone
+    * in cosine), then probes scan only the `nProbe` nearest centroid
+    * lists — the classic FAISS-style scale path, complementary to the
+    * hyperplane-LSH tier (`annTopK`): IVF adapts to the data's actual
+    * density, LSH is oblivious and needs no training pass.
+    *
+    * Everything is deterministic so the driver's rows-only check and
+    * the AnnSpec recall gate are stable: the training sample is the
+    * `trainSample` vectors with the smallest xxhash64(id) (no RNG),
+    * init takes the sample's first `nClusters`, Lloyd runs on the
+    * driver over that bounded sample in a fixed order, and assignment
+    * ties break on the first minimal distance.
+    *
+    * Scale notes: training on a BOUNDED sample is the standard IVF
+    * recipe (a coarse quantizer needs ~10-100 samples per centroid,
+    * not the corpus) — so the train step collects k·dims-bounded data
+    * once, never the corpus (selected by a hash-threshold filter, not
+    * a corpus-wide sort — see below), and the distributed work is
+    * exactly two map passes (assign members, assign probes) against
+    * literal centroids plus one equality join on cluster id; the
+    * assignment's k·dims inner loop runs in the compiled
+    * `CentroidDistsExpr` kernel (graft.functions.Sketches). Candidate
+    * volume is ~nProbe/nClusters of the corpus per probe.
+    */
   def ivfTopK(df: DataFrame, idCol: String, embCol: String,
               probePred: Column, k: Int, nClusters: Int = 16,
               nProbe: Int = 4, lloydIters: Int = 5,
               trainSample: Int = 512): DataFrame = {
-    // repartition FIRST: a small parquet arrives as one partition, and
-    // every expression below is a per-row interpreted HOF kernel.
     // Zero-norm vectors are quarantined up front: they have no
     // direction (cosine undefined), and a NaN-normalized sample vector
     // would silently poison a centroid during Lloyd (NaN compares
@@ -645,10 +705,8 @@ object Similarity {
     // to the -1 sentinel cluster on the member side (never probed) and
     // explodes to zero probe rows on the probe side — same exclusion,
     // no pushable predicate.
-    val vecs = normalizedVecs(df, idCol, embCol)
-
-    // --- driver-side Lloyd on the deterministic bounded sample ---
-    // Selection = the `trainSample` vectors with the smallest
+    //
+    // Training sample = the `trainSample` vectors with the smallest
     // xxhash64(id): deterministic (no RNG, no partition-order
     // dependence) and partition-layout-free. Realized as a hash-
     // THRESHOLD filter (the distributed TABLESAMPLE analogue — one
@@ -660,16 +718,11 @@ object Similarity {
     // the full corpus, at filter cost. Falls back to the full scan
     // (frac = 1) when the corpus is small or the filter underfills.
     // Empty (or all-zero-norm) input: nothing to train on and nothing
-    // to match — return an empty frame with the output schema, like
-    // the other Similarity operators, instead of throwing.
-    val trained = trainKmeans(vecs, idCol, df.count(), nClusters,
-      lloydIters, trainSample)
-    if (trained.isEmpty)
-      return df.limit(0).select(
-        col(idCol).as("probe_id"), col(idCol).as("neighbor_id"),
-        lit(1).as("rank"), lit(0.0).as("cos"))
-    val (c, ke) = trained.get
-    ivfTopKWith(df, idCol, embCol, probePred, k, c, ke, nProbe)
+    // to match — an empty frame with the output schema.
+    ivfTrain(df, idCol, embCol, nClusters, lloydIters, trainSample) match {
+      case None => noNeighbors(df, idCol)
+      case Some((c, ke)) => ivfTopKWith(df, idCol, embCol, probePred, k, c, ke, nProbe)
+    }
   }
 
   /** The IVF trainer alone — centroids for `api.ModelStore`
@@ -695,39 +748,8 @@ object Similarity {
     require(kEff > 0 && flatCentroids.length % kEff == 0,
       "ivfTopKWith: centroids must be kEff x d row-major")
     val vecs = normalizedVecs(df, idCol, embCol)
-    def withDists(d: DataFrame): DataFrame =
-      d.withColumn("__d",
-        graft.functions.Sketches.centroidDists(col("nd"), flatCentroids, kEff))
-
-    // the cluster join key is wrapped in coalesce(·, -1) to make it
-    // NON-NULLABLE: an inner join on a nullable key gets an inferred
-    // isnotnull(key) filter, and predicate pushdown re-substitutes the
-    // alias — re-evaluating the whole k-distance assignment a second
-    // time BELOW the repartition, single-core in the lone parquet
-    // partition (measured: 16 s of a 17 s query at sf0.1). With a
-    // non-nullable key no such filter exists; assignment runs once,
-    // distributed.
-    val members = vecs.transform(withDists)
-      .withColumn("cluster",
-        coalesce(expr("array_position(__d, array_min(__d)) - 1"), lit(-1L)))
-      .select(col(idCol), col("cluster"), col("vq"), col("nsq"))
-    val probes = broadcast(
-      vecs.filter(probePred).transform(withDists)
-        .select(col(idCol).as("probe_id"), col("vq").as("pv"), col("nsq").as("pnsq"),
-          explode(expr(
-            s"""slice(array_sort(transform(__d, (x, i) -> struct(x AS d, i AS c))),
-               |  1, $nProbe)""".stripMargin)).as("pc"))
-        .select(col("probe_id"), col("pv"), col("pnsq"),
-          coalesce(col("pc.c").cast("long"), lit(-1L)).as("cluster")))
-    probes.join(members, Seq("cluster"))
-      .filter(col("probe_id") =!= col(idCol))
-      .withColumn("cos",
-        dotQ("pv", "vq").cast("double") /
-          sqrt((col("pnsq") * col("nsq")).cast("double")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col("cos").desc, col(idCol))))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col(idCol).as("neighbor_id"), col("rank"), col("cos"))
+    ivfSearch(vecs.filter(probePred), ivfMembers(vecs, idCol, flatCentroids, kEff),
+      idCol, flatCentroids, kEff, nProbe, k)
   }
 
   /** Embedding-cosine near-duplicate pairs over the quantized grid:
@@ -737,16 +759,14 @@ object Similarity {
     */
   def cosineNearDupPairs(df: DataFrame, idCol: String, embCol: String,
                          threshold: Double, partitions: Int = 32): DataFrame = {
-    val vecs = df.select(col(idCol), quantize(embCol).as("v"))
-      .withColumn("nsq", normSqQ("v"))
+    val vecs = exactVecs(df, embCol, col(idCol))
     // the nested-loop join parallelizes over LEFT partitions; a small
     // parquet arrives as one partition, which would serialize the whole
     // O(n²) scan onto one core
     vecs.repartition(partitions).as("a")
       .join(vecs.as("b"), col(s"a.$idCol") < col(s"b.$idCol"))
       .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"),
-        (dotQ("a.v", "b.v").cast("double") /
-          sqrt((col("a.nsq") * col("b.nsq")).cast("double"))).as("cos"))
+        cosQ(col("a.v"), col("a.nsq"), col("b.v"), col("b.nsq")).as("cos"))
       .filter(col("cos") >= threshold)
   }
 
@@ -779,19 +799,11 @@ object Similarity {
     q(corpus, "doc_id").repartition(32)
       .crossJoin(broadcast(q(bench, "bench_id")))
       .select(col("doc_id"), col("bench_id"),
-        (dotQ("__v_doc_id", "__v_bench_id").cast("double") /
-          sqrt((col("__n_doc_id") * col("__n_bench_id")).cast("double")))
+        cosQ(col("__v_doc_id"), col("__n_doc_id"), col("__v_bench_id"), col("__n_bench_id"))
           .as("cos"))
       .filter(col("cos") >= threshold)
   }
 
-  /** Deterministic driver-side pseudo-random in [-0.5, 0.5] (splitmix64
-    * finalizer). Plane weights are Spark-internal — no oracle ever sees
-    * them — so they are precomputed here ONCE and shipped as literals:
-    * evaluating a string-concat + hash per (table, bit, dim, row)
-    * inside an interpreted lambda was the dominant cost of the
-    * multi-table signature (~10k string hashes per row).
-    */
   /** Storage-tier int8 quantization: per-vector symmetric scale
     * (maxabs/127), elements stored as floor(x/scale) ∈ [−127, 127].
     * 4× the density of float32 — at 100 TB the embedding store is
@@ -806,15 +818,20 @@ object Similarity {
     * fidelity of the reconstruction.
     */
   def quantizeInt8(df: DataFrame, idCol: String, embCol: String): DataFrame =
-    df.select(col(idCol),
-        expr(s"transform($embCol, x -> CAST(x AS double))").as("__v"))
-      .withColumn("scale",
-        array_max(expr("transform(__v, x -> abs(x))")) / lit(127.0))
-      .select(col(idCol), col("scale"),
-        when(col("scale") === 0.0,
-            expr("transform(__v, x -> CAST(0 AS bigint))"))
-          .otherwise(expr("transform(__v, x -> CAST(floor(x / scale) AS bigint))"))
-          .as("qvec"))
+    df.select(col(idCol), asDouble(embCol).as("__v"))
+      .withColumn("scale", int8Scale("__v"))
+      .select(col(idCol), col("scale"), int8Code("__v", "scale").as("qvec"))
+
+  /** The symmetric int8 scale of double vector `v`: maxabs / 127. */
+  private def int8Scale(v: String): Column =
+    array_max(expr(s"transform($v, x -> abs(x))")) / lit(127.0)
+
+  /** The int8 code of double vector `v` at `scale`: floor(x / scale),
+    * all zeros at scale 0.
+    */
+  private def int8Code(v: String, scale: String): Column =
+    when(col(scale) === 0.0, expr(s"transform($v, x -> CAST(0 AS bigint))"))
+      .otherwise(expr(s"transform($v, x -> CAST(floor(x / $scale) AS bigint))"))
 
   /** Like `quantizeInt8` but APPENDS the 8-bit code column to the
     * input row instead of projecting it out — the streaming arm needs
@@ -825,13 +842,9 @@ object Similarity {
   def quantizeInt8Attach(df: DataFrame, embCol: String, as: String): DataFrame = {
     for (c <- Seq("__v8", "__scale8", as) if df.columns.contains(c))
       require(false, s"quantizeInt8Attach: '$c' is reserved — rename it")
-    df.withColumn("__v8", expr(s"transform($embCol, x -> CAST(x AS double))"))
-      .withColumn("__scale8",
-        array_max(expr("transform(__v8, x -> abs(x))")) / lit(127.0))
-      .withColumn(as,
-        when(col("__scale8") === 0.0,
-            expr("transform(__v8, x -> CAST(0 AS bigint))"))
-          .otherwise(expr("transform(__v8, x -> CAST(floor(x / __scale8) AS bigint))")))
+    df.withColumn("__v8", asDouble(embCol))
+      .withColumn("__scale8", int8Scale("__v8"))
+      .withColumn(as, int8Code("__v8", "__scale8"))
       .drop("__v8", "__scale8")
   }
 
@@ -844,6 +857,13 @@ object Similarity {
     df.withColumn(as,
       expr(s"transform($qvecCol, q -> CAST((CAST(q AS double) + 0.5) * $scaleCol AS float))"))
 
+  /** Deterministic driver-side pseudo-random in [-0.5, 0.5] (splitmix64
+    * finalizer). Plane weights are Spark-internal — no oracle ever sees
+    * them — so they are precomputed here ONCE and shipped as literals:
+    * evaluating a string-concat + hash per (table, bit, dim, row)
+    * inside an interpreted lambda was the dominant cost of the
+    * multi-table signature (~10k string hashes per row).
+    */
   private def splitmixUnit(seed: Long): Double = {
     var z = seed + 0x9e3779b97f4a7c15L
     z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
@@ -868,26 +888,12 @@ object Similarity {
     out
   }
 
-  /** Bucketed near-duplicate pairs: multi-table hyperplane-LSH
-    * candidate generation + exact quantized-cosine verification. Same
-    * output contract as `cosineNearDupPairs` (id_a < id_b, exact cos ≥
-    * threshold) but the join is bucket-equality over (table, bucket) —
-    * never an all-pairs product. Candidate volume per table is
-    * Σ_bucket n_b² ≈ N²/2^nbits; total ≈ T·N²/2^nbits of the exact
-    * arm's N²/2, with per-pair miss probability (1-p^b)^T where
-    * p = 1-θ/π is the per-bit agreement at angle θ.
-    *
-    * Parameter honesty: at REAL near-dup thresholds (cos ≥ 0.9,
-    * p ≈ 0.86) a deep code (nbits 16+) separates true pairs from the
-    * 2^-nbits random-collision floor and the plan is genuinely
-    * sub-quadratic. At this fixture's adversarial setting — isotropic
-    * vectors, threshold 0.35 ⇒ p ≈ 0.61 vs the 0.5 floor — NO
-    * hyperplane code separates well (0.61/0.5 per bit), so the
-    * defaults below are tuned for verified completeness on the fixture
-    * (the driver oracle-checks this query EQUAL to the exact arm),
-    * not for speed there. The plan shape, not the fixture constants,
-    * is what survives the 100× scale-up.
+  /** `planeArray` at `df`'s dimensionality — at least 1, so an empty
+    * corpus still gets a well-formed (and unused) plane set.
     */
+  private def planesFor(df: DataFrame, embCol: String, tables: Int, nbits: Int): Array[Double] =
+    planeArray(tables, nbits, math.max(1, dimsOf(df, embCol)))
+
   /** Greedy keep-lowest decision over a near-dup pair list: a document
     * is removed iff it has a close neighbor with a LOWER id (SemDeDup's
     * keep-one-per-group rule, realized without iteration — the rule is
@@ -935,31 +941,17 @@ object Similarity {
                              threshold: Double, nClusters: Int = 16,
                              lloydIters: Int = 5,
                              trainSample: Int = 512): DataFrame = {
-    val vecs = normalizedVecs(df, idCol, embCol)
-    val trained = trainKmeans(vecs, idCol, df.count(), nClusters,
-      lloydIters, trainSample)
-    if (trained.isEmpty)
-      return df.limit(0).select(col(idCol),
-        lit(true).as("kept"), col(idCol).as("dup_of"))
-    val (flatCentroids, kEff) = trained.get
-    // non-nullable cell key (coalesce sentinel): the equi-join below
-    // would otherwise infer isnotnull(cell) and pushdown would
-    // re-evaluate the whole assignment kernel at the scan (the ivfTopK
-    // trap). Zero-norm vectors (null nd) take the -1 sentinel cell and
-    // pair only with each other — cosine is undefined for them, and a
-    // null dot drops the row at the threshold filter anyway.
-    val members = vecs
-      .withColumn("__d",
-        graft.functions.Sketches.centroidDists(col("nd"), flatCentroids, kEff))
-      .withColumn("cell",
-        coalesce(expr("array_position(__d, array_min(__d)) - 1"), lit(-1L)))
+    // Zero-norm vectors (null nd) take the -1 sentinel cell and pair
+    // only with each other: a pair of them divides 0 by 0 and fails the
+    // query under ANSI (DIVIDE_BY_ZERO), the exact tier's contract; a
+    // malformed vector's null dot drops its pairs at the threshold.
+    val members = trainAssign(df, idCol, embCol, nClusters, lloydIters, trainSample, "cell")
       .select(col(idCol), col("cell"), col("vq"), col("nsq"))
     val pairs = members.as("a")
       .join(members.as("b"),
         col("a.cell") === col("b.cell") && col(s"a.$idCol") < col(s"b.$idCol"))
       .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"),
-        (dotQ("a.vq", "b.vq").cast("double") /
-          sqrt((col("a.nsq") * col("b.nsq")).cast("double"))).as("cos"))
+        cosQ(col("a.vq"), col("a.nsq"), col("b.vq"), col("b.nsq")).as("cos"))
       .filter(col("cos") >= threshold)
     applyKeepRule(df, idCol, pairs)
   }
@@ -974,22 +966,10 @@ object Similarity {
     */
   def semanticDedupCells(df: DataFrame, idCol: String, embCol: String,
                          nClusters: Int = 16, lloydIters: Int = 5,
-                         trainSample: Int = 512): DataFrame = {
-    val vecs = normalizedVecs(df, idCol, embCol)
-    val trained = trainKmeans(vecs, idCol, df.count(), nClusters,
-      lloydIters, trainSample)
-    if (trained.isEmpty)
-      return df.limit(0).select(col(idCol).as("cell"),
-        col(idCol).as("n_members"))
-    val (flatCentroids, kEff) = trained.get
-    vecs
-      .withColumn("__d",
-        graft.functions.Sketches.centroidDists(col("nd"), flatCentroids, kEff))
-      .withColumn("cell",
-        coalesce(expr("array_position(__d, array_min(__d)) - 1"), lit(-1L)))
+                         trainSample: Int = 512): DataFrame =
+    trainAssign(df, idCol, embCol, nClusters, lloydIters, trainSample, "cell")
       .groupBy("cell")
       .agg(count(lit(1)).as("n_members"))
-  }
 
   /** Public k-means cluster assignment — the shared front half of every
     * clustered tier (semanticDedupClustered, IVF), exposed for the
@@ -999,20 +979,9 @@ object Similarity {
     */
   def clusterAssign(df: DataFrame, idCol: String, embCol: String,
                     nClusters: Int = 16, lloydIters: Int = 5,
-                    trainSample: Int = 512): DataFrame = {
-    val vecs = normalizedVecs(df, idCol, embCol)
-    val trained = trainKmeans(vecs, idCol, df.count(), nClusters,
-      lloydIters, trainSample)
-    if (trained.isEmpty)
-      return df.limit(0).select(col(idCol), lit(-1L).as("cluster"))
-    val (flatCentroids, kEff) = trained.get
-    vecs
-      .withColumn("__d",
-        graft.functions.Sketches.centroidDists(col("nd"), flatCentroids, kEff))
-      .withColumn("cluster",
-        coalesce(expr("array_position(__d, array_min(__d)) - 1"), lit(-1L)))
+                    trainSample: Int = 512): DataFrame =
+    trainAssign(df, idCol, embCol, nClusters, lloydIters, trainSample, "cluster")
       .select(col(idCol), col("cluster"))
-  }
 
   /** Simplified-silhouette clustering diagnostic — the O(N·k) variant
     * (per point: a = distance to its OWN (nearest) centroid, b =
@@ -1032,19 +1001,8 @@ object Similarity {
     */
   def clusterQuality(df: DataFrame, idCol: String, embCol: String,
                      nClusters: Int = 16, lloydIters: Int = 5,
-                     trainSample: Int = 512): DataFrame = {
-    val vecs = normalizedVecs(df, idCol, embCol)
-    val trained = trainKmeans(vecs, idCol, df.count(), nClusters,
-      lloydIters, trainSample)
-    if (trained.isEmpty)
-      return df.limit(0).select(col(idCol).as("cluster"),
-        col(idCol).as("n_members"), col(idCol).as("silhouette_micro"))
-    val (flatCentroids, kEff) = trained.get
-    vecs
-      .withColumn("__d",
-        graft.functions.Sketches.centroidDists(col("nd"), flatCentroids, kEff))
-      .withColumn("cluster",
-        coalesce(expr("array_position(__d, array_min(__d)) - 1"), lit(-1L)))
+                     trainSample: Int = 512): DataFrame =
+    trainAssign(df, idCol, embCol, nClusters, lloydIters, trainSample, "cluster")
       .withColumn("__s", expr("array_sort(__d)"))
       // try_element_at: a single effective centroid has no second
       // distance — NULL silhouette, not an ANSI index error. Identical
@@ -1059,8 +1017,27 @@ object Similarity {
       .groupBy("cluster")
       .agg(count(lit(1)).as("n_members"),
         expr("sum(__sil) div count(__sil)").as("silhouette_micro"))
-  }
 
+  /** Bucketed near-duplicate pairs: multi-table hyperplane-LSH
+    * candidate generation + exact quantized-cosine verification. Same
+    * output contract as `cosineNearDupPairs` (id_a < id_b, exact cos ≥
+    * threshold) but the join is bucket-equality over (table, bucket) —
+    * never an all-pairs product. Candidate volume per table is
+    * Σ_bucket n_b² ≈ N²/2^nbits; total ≈ T·N²/2^nbits of the exact
+    * arm's N²/2, with per-pair miss probability (1-p^b)^T where
+    * p = 1-θ/π is the per-bit agreement at angle θ.
+    *
+    * Parameter honesty: at REAL near-dup thresholds (cos ≥ 0.9,
+    * p ≈ 0.86) a deep code (nbits 16+) separates true pairs from the
+    * 2^-nbits random-collision floor and the plan is genuinely
+    * sub-quadratic. At this fixture's adversarial setting — isotropic
+    * vectors, threshold 0.35 ⇒ p ≈ 0.61 vs the 0.5 floor — NO
+    * hyperplane code separates well (0.61/0.5 per bit), so the
+    * defaults below are tuned for verified completeness on the fixture
+    * (the driver oracle-checks this query EQUAL to the exact arm),
+    * not for speed there. The plan shape, not the fixture constants,
+    * is what survives the 100× scale-up.
+    */
   def cosineNearDupPairsLsh(df: DataFrame, idCol: String, embCol: String,
                             threshold: Double, nbits: Int = 0,
                             tables: Int = 32): DataFrame = {
@@ -1070,10 +1047,7 @@ object Similarity {
     // MEASURED a slight regression — 2.6 s -> 2.9 s — the blocking
     // materialization loses to the lazy, fully-parallel re-derivation
     // at bench scale; the lazy shape stays.)
-    val vecs = df.repartition(col(idCol))
-      .select(col(idCol),
-        expr(s"transform($embCol, x -> CAST(x AS double))").as("vd"))
-      .withColumn("vq", quantize("vd")).withColumn("nsq", normSqQ("vq"))
+    val vecs = withQuantized(doubleVecs(df, idCol, embCol))
     // nbits = 0 (the default) auto-sizes the code depth so buckets stay
     // ~64 vectors: in-bucket pair volume per table is then bounded at
     // ~N·32 rows regardless of corpus size — the depth, not the table
@@ -1084,7 +1058,6 @@ object Similarity {
       if (nbits > 0) nbits
       else math.max(1, math.ceil(math.log(math.max(df.count(), 2L) / 64.0) /
         math.log(2.0)).toInt)
-    val dims = dimsOf(df, embCol)
     // r19: pair generation is a compiled (table, bucket) self-join of
     // the checkpointed posting frame, not collect_list + the
     // interpreted bucketPairs HOF explode — the hashNearDups r18
@@ -1103,7 +1076,7 @@ object Similarity {
     // raw candidate row — measured 12.5 s, 6x WORSE.
     val posts = vecs
       .select(col(idCol), posexplode(graft.functions.Sketches.hyperplaneSigs(
-        col("vd"), planeArray(tables, bits, dims), tables, bits)))
+        col("vd"), planesFor(df, embCol, tables, bits), tables, bits)))
       .withColumnRenamed("pos", "table").withColumnRenamed("col", "bucket")
       .localCheckpoint()
     val candidates = posts.as("a").join(posts.as("b"),
@@ -1117,8 +1090,7 @@ object Similarity {
       .join(sides.toDF("id_a", "va", "nsqa"), "id_a")
       .join(sides.toDF("id_b", "vb", "nsqb"), "id_b")
       .select(col("id_a"), col("id_b"),
-        (dotQ("va", "vb").cast("double") /
-          sqrt((col("nsqa") * col("nsqb")).cast("double"))).as("cos"))
+        cosQ(col("va"), col("nsqa"), col("vb"), col("nsqb")).as("cos"))
       .filter(col("cos") >= threshold)
   }
 
@@ -1133,18 +1105,25 @@ object Similarity {
     * Output: (src, dst, rank, cos).
     */
   def knnGraph(df: DataFrame, idCol: String, embCol: String, k: Int,
-               partitions: Int = 32): DataFrame = {
-    val vecs = df.select(col(idCol), quantize(embCol).as("v"))
-      .withColumn("nsq", normSqQ("v"))
-    val w = Window.partitionBy(col("src"))
-      .orderBy(col("cos").desc, col("dst").asc)
-    vecs.repartition(partitions).as("a")
-      .join(vecs.as("b"), col(s"a.$idCol") =!= col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("src"), col(s"b.$idCol").as("dst"),
-        (dotQ("a.v", "b.v").cast("double") /
-          sqrt((col("a.nsq") * col("b.nsq")).cast("double"))).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+               partitions: Int = 32): DataFrame =
+    exactKnn(df, idCol, embCol, None, k, partitions)
+
+  /** The quadratic scan of the exact kNN tiers: every ordered pair of
+    * rows with distinct ids — and distinct `label`, when there is one —
+    * scored by quantized cosine, each src cut to its k best. Output:
+    * (src[, src_label], dst[, dst_label], cos, rank).
+    */
+  private def exactKnn(df: DataFrame, idCol: String, embCol: String,
+                       label: Option[String], k: Int, partitions: Int): DataFrame = {
+    val keys = idCol +: label.toSeq
+    val vecs = exactVecs(df, embCol, keys.map(col): _*)
+    def side(t: String, as: String): Seq[Column] =
+      col(s"$t.$idCol").as(as) +: label.map(l => col(s"$t.$l").as(s"${as}_label")).toSeq
+    topPer(vecs.repartition(partitions).as("a")
+        .join(vecs.as("b"), keys.map(c => col(s"a.$c") =!= col(s"b.$c")).reduce(_ && _))
+        .select(side("a", "src") ++ side("b", "dst") :+
+          cosQ(col("a.v"), col("a.nsq"), col("b.v"), col("b.nsq")).as("cos"): _*),
+      "src", "cos", "dst", k, "rank")
   }
 
   /** Hard-negative mining for contrastive training: for every anchor
@@ -1163,21 +1142,8 @@ object Similarity {
     */
   def hardNegatives(df: DataFrame, idCol: String, embCol: String,
                     labelCol: String, k: Int,
-                    partitions: Int = 32): DataFrame = {
-    val vecs = df.select(col(idCol), col(labelCol), quantize(embCol).as("v"))
-      .withColumn("nsq", normSqQ("v"))
-    val w = Window.partitionBy(col("src"))
-      .orderBy(col("cos").desc, col("dst").asc)
-    vecs.repartition(partitions).as("a")
-      .join(vecs.as("b"), col(s"a.$idCol") =!= col(s"b.$idCol") &&
-        col(s"a.$labelCol") =!= col(s"b.$labelCol"))
-      .select(col(s"a.$idCol").as("src"), col(s"a.$labelCol").as("src_label"),
-        col(s"b.$idCol").as("dst"), col(s"b.$labelCol").as("dst_label"),
-        (dotQ("a.v", "b.v").cast("double") /
-          sqrt((col("a.nsq") * col("b.nsq")).cast("double"))).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
+                    partitions: Int = 32): DataFrame =
+    exactKnn(df, idCol, embCol, Some(labelCol), k, partitions)
 
   /** Hard negatives, bucketed SCALE arm: LSH candidate pairs (linear
     * pair volume), labels attached by two id-keyed equi-joins, the
@@ -1190,30 +1156,31 @@ object Similarity {
                        labelCol: String, k: Int,
                        nbits: Int = 0, tables: Int = 32): DataFrame = {
     val labels = df.select(col(idCol), col(labelCol))
-    val pairs = cosineNearDupPairsLsh(df, idCol, embCol,
-      threshold = -1.0, nbits = nbits, tables = tables)
-    // r19: both directions from ONE row-local explode — the union of
-    // two selects re-planned the whole candidate+verify pipeline per
-    // branch (exchange reuse caught the shuffles but re-ran the join
-    // and cosine compute; 4.04 -> 3.50 s same-JVM on the knn sibling,
-    // exceptAll-equal).
-    val sym = pairs.select(explode(array(
-        struct(col("id_a").as("src"), col("id_b").as("dst"), col("cos")),
-        struct(col("id_b").as("src"), col("id_a").as("dst"), col("cos")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"), col("e.cos").as("cos"))
-    val w = Window.partitionBy(col("src"))
-      .orderBy(col("cos").desc, col("dst").asc)
-    sym
-      .join(labels.withColumnRenamed(idCol, "src")
-        .withColumnRenamed(labelCol, "src_label"), "src")
-      .join(labels.withColumnRenamed(idCol, "dst")
-        .withColumnRenamed(labelCol, "dst_label"), "dst")
-      .filter(col("src_label") =!= col("dst_label"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topPer(lshEdges(df, idCol, embCol, nbits, tables)
+        .join(labels.withColumnRenamed(idCol, "src")
+          .withColumnRenamed(labelCol, "src_label"), "src")
+        .join(labels.withColumnRenamed(idCol, "dst")
+          .withColumnRenamed(labelCol, "dst_label"), "dst")
+        .filter(col("src_label") =!= col("dst_label")),
+        "src", "cos", "dst", k, "rank")
       .select(col("src"), col("src_label"), col("dst"), col("dst_label"),
         col("cos"), col("rank"))
   }
+
+  /** Every `cosineNearDupPairsLsh` candidate pair (threshold −1), in
+    * both directions, as (src, dst, cos). r19: both directions from ONE
+    * row-local explode — the union of two selects re-planned the whole
+    * candidate+verify pipeline per branch (exchange reuse caught the
+    * shuffles but re-ran the join and cosine compute; 4.04 -> 3.50 s
+    * same-JVM on knnGraphLsh, exceptAll-equal).
+    */
+  private def lshEdges(df: DataFrame, idCol: String, embCol: String,
+                       nbits: Int, tables: Int): DataFrame =
+    cosineNearDupPairsLsh(df, idCol, embCol, threshold = -1.0, nbits = nbits, tables = tables)
+      .select(explode(array(
+        struct(col("id_a").as("src"), col("id_b").as("dst"), col("cos")),
+        struct(col("id_b").as("src"), col("id_a").as("dst"), col("cos")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"), col("e.cos").as("cos"))
 
   /** kNN graph, bucketed SCALE arm: candidate neighbors come from
     * shared hyperplane-LSH buckets (the same multi-table signature +
@@ -1233,20 +1200,8 @@ object Similarity {
     * arm is the shape that survives when N² stops fitting anywhere.
     */
   def knnGraphLsh(df: DataFrame, idCol: String, embCol: String, k: Int,
-                  nbits: Int = 0, tables: Int = 32): DataFrame = {
-    val pairs = cosineNearDupPairsLsh(df, idCol, embCol,
-      threshold = -1.0, nbits = nbits, tables = tables)
-    // r19: one row-local explode instead of union-of-two-selects (see
-    // hardNegativesLsh) — 4.04 -> 3.50 s same-JVM, exceptAll-equal.
-    val sym = pairs.select(explode(array(
-        struct(col("id_a").as("src"), col("id_b").as("dst"), col("cos")),
-        struct(col("id_b").as("src"), col("id_a").as("dst"), col("cos")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"), col("e.cos").as("cos"))
-    val w = Window.partitionBy(col("src"))
-      .orderBy(col("cos").desc, col("dst").asc)
-    sym.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
+                  nbits: Int = 0, tables: Int = 32): DataFrame =
+    topPer(lshEdges(df, idCol, embCol, nbits, tables), "src", "cos", "dst", k, "rank")
 
   /** Matryoshka truncation-fidelity report — the diagnostic an
     * MRL-style dimensionality cut reads before shrinking the ANN
@@ -1268,7 +1223,7 @@ object Similarity {
     require(widths.nonEmpty && widths.forall(_ > 0),
       "truncationFidelity: widths must be positive")
     val vecs = df.select(col(idCol), quantize(embCol).as("v"))
-      .withColumn("__nsq", graft.functions.Sketches.dotQ(col("v"), col("v")))
+      .withColumn("__nsq", dotQ("v", "v"))
       .filter(col("v").isNotNull)
     val wArr = widths.sorted.map(w => lit(w))
     vecs
@@ -1352,9 +1307,10 @@ object Similarity {
   def pcaTrain(df: DataFrame, idCol: String, embCol: String,
                k: Int): (Array[Double], Array[Double], Array[Double]) = {
     val d = dimsOf(df, embCol)
+    require(d > 0, "pcaTrain: no well-formed vectors")
     require(k > 0 && k <= d, s"pcaTrain: need 0 < k <= dims, got $k/$d")
     val vecs = df
-      .select(expr(s"transform($embCol, x -> CAST(x AS double))").as("vd"))
+      .select(asDouble(embCol).as("vd"))
       .where(col("vd").isNotNull && size(col("vd")) === d)
     // Shifted one-pass accumulation (r8 advisor): E[xxᵀ] - μμᵀ suffers
     // catastrophic cancellation when the mean is large relative to the
@@ -1437,8 +1393,7 @@ object Similarity {
   def procrustesTrain(pairs: DataFrame, srcCol: String,
                       tgtCol: String): Array[Double] = {
     val rows = pairs
-      .select(expr(s"transform($srcCol, x -> CAST(x AS double))").as("x"),
-        expr(s"transform($tgtCol, x -> CAST(x AS double))").as("y"))
+      .select(asDouble(srcCol).as("x"), asDouble(tgtCol).as("y"))
       .where(col("x").isNotNull && col("y").isNotNull &&
         size(col("x")) === size(col("y")))
     val first = rows.take(1)
@@ -1507,8 +1462,7 @@ object Similarity {
                       w: Array[Double]): DataFrame = {
     val d = math.sqrt(w.length).toInt
     require(d * d == w.length, "procrustesApply: W must be square d x d")
-    df.select(col(idCol),
-        expr(s"transform($embCol, x -> CAST(x AS double))").as("__vd"))
+    df.select(col(idCol), asDouble(embCol).as("__vd"))
       .select(col(idCol),
         graft.functions.Sketches.matVec(col("__vd"), w,
           new Array[Double](d)).as("aligned"))
@@ -1601,8 +1555,7 @@ object Similarity {
       while (i < d) { s -= m(cc * d + i) * mean(i); i += 1 }
       s
     }
-    df.select(col(idCol),
-      expr(s"transform($embCol, x -> CAST(x AS double))").as("__vd"))
+    df.select(col(idCol), asDouble(embCol).as("__vd"))
       .select(col(idCol),
         graft.functions.Sketches.matVec(col("__vd"), m, bias).as("proj"))
   }

@@ -2837,7 +2837,7 @@ object PipelineQueries {
           |UNION ALL SELECT CAST(-6 AS BIGINT),
           |       transform(sequence(1, 64), i -> IF(i = 1, CAST('Infinity' AS double), CAST(1 AS double)))""".stripMargin)
       Similarity.auditEmbeddings(base.unionByName(dirty), "vec_id",
-          "embedding", expectedDims = Some(64))
+          "embedding", expectedDims = 64)
         .select(col("vec_id"),
           coalesce(col("quarantine_reason"), lit("clean")).as("quarantine_reason"))
     }),

@@ -137,7 +137,7 @@ class AnnSpec extends SparkSpec {
         |       transform(sequence(1, 64), i -> IF(i = 1, CAST(NULL AS double), CAST(1 AS double)))
         |UNION ALL SELECT CAST(-5 AS BIGINT), CAST(NULL AS ARRAY<double>)""".stripMargin))
     val (clean, quarantined) = Similarity.quarantineEmbeddings(
-      dirty, "vec_id", "embedding", expectedDims = Some(64))
+      dirty, "vec_id", "embedding", expectedDims = 64)
     // nothing vanishes: every input row lands on exactly one side
     assert(clean.count() + quarantined.count() == dirty.count())
     val reasons = quarantined.select("vec_id", "quarantine_reason").collect()
@@ -378,6 +378,75 @@ class AnnSpec extends SparkSpec {
     assert(strict(5L) == (("noise", -1L)))
     intercept[IllegalArgumentException] {
       Similarity.dbscan(vecs, "vec_id", "embedding", 0.9, 0L)
+    }
+  }
+
+  test("empty and null-first input: the corpus's rows, an empty frame, or pcaTrain's own error") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    val emb = Tables.embeddings(spark, Sf)
+    val nullFirst = spark.createDataFrame(
+        java.util.List.of(Row(-1L, null, 0)), emb.schema)
+      .unionByName(emb).coalesce(1)
+    val probes = col("vec_id") < 10
+    // the rows that do not name the null vector's id -1 in `ids`
+    def rowsOf(df: DataFrame, ids: String*): Set[Seq[Any]] =
+      df.filter(ids.map(c => col(c) =!= -1L).reduce(_ && _))
+        .collect().map(_.toSeq).toSet
+    // (operator, run, the error it raises on an empty corpus)
+    val cases: Seq[(String, DataFrame => Set[Seq[Any]], Option[String])] = Seq(
+      ("cosineNearDupPairsLsh", d => rowsOf(
+        Similarity.cosineNearDupPairsLsh(d, "vec_id", "embedding", 0.35), "id_a", "id_b"), None),
+      ("annTopK", d => rowsOf(
+        Similarity.annTopK(d, "vec_id", "embedding", probes, k = 10),
+        "probe_id", "neighbor_id"), None),
+      ("auditEmbeddings", d => rowsOf(
+        Similarity.auditEmbeddings(d, "vec_id", "embedding", 64)
+          .select("vec_id", "quarantine_reason"), "vec_id"), None),
+      ("pqEncode", d => rowsOf(Similarity.pqEncode(d, "vec_id", "embedding"), "vec_id"), None),
+      ("pqTopK", d => rowsOf(
+        Similarity.pqTopK(d, "vec_id", "embedding", probes, k = 10),
+        "probe_id", "neighbor_id"), None),
+      ("ivfpqTopK", d => rowsOf(
+        Similarity.ivfpqTopK(d, "vec_id", "embedding", probes, k = 10),
+        "probe_id", "neighbor_id"), None),
+      ("pcaTrain", { d =>
+        val (mean, comps, eig) = Similarity.pcaTrain(d, "vec_id", "embedding", 2)
+        // float sums in partition order: equal to 1e-6, not bit-equal
+        Set((mean ++ comps ++ eig).toSeq.map(x => math.round(x * 1e6)))
+      }, Some("no well-formed vectors")))
+    for ((name, run, emptyError) <- cases) {
+      withClue(s"$name, null vector first: ") {
+        assert(run(nullFirst) == run(emb))
+      }
+      withClue(s"$name, empty corpus: ") {
+        emptyError match {
+          case None => assert(run(emb.limit(0)).isEmpty)
+          case Some(msg) =>
+            val e = intercept[IllegalArgumentException](run(emb.limit(0)))
+            assert(e.getMessage.contains(msg))
+        }
+      }
+    }
+  }
+
+  test("empty input: every trained tier returns no rows, with its fixture schema") {
+    import org.apache.spark.sql.DataFrame
+    val emb = Tables.embeddings(spark, Sf)
+    val probes = col("vec_id") < 10
+    val ops: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "ivfTopK" -> (d => Similarity.ivfTopK(d, "vec_id", "embedding", probes, k = 10)),
+      "pqTopK" -> (d => Similarity.pqTopK(d, "vec_id", "embedding", probes, k = 10)),
+      "ivfpqTopK" -> (d => Similarity.ivfpqTopK(d, "vec_id", "embedding", probes, k = 10)),
+      "pqEncode" -> (d => Similarity.pqEncode(d, "vec_id", "embedding")),
+      "semanticDedupClustered" ->
+        (d => Similarity.semanticDedupClustered(d, "vec_id", "embedding", 0.35)),
+      "semanticDedupCells" -> (d => Similarity.semanticDedupCells(d, "vec_id", "embedding")),
+      "clusterAssign" -> (d => Similarity.clusterAssign(d, "vec_id", "embedding")),
+      "clusterQuality" -> (d => Similarity.clusterQuality(d, "vec_id", "embedding")))
+    for ((name, op) <- ops) withClue(s"$name: ") {
+      val empty = op(emb.limit(0))
+      assert(empty.count() == 0L)
+      assert(empty.schema == op(emb).schema)
     }
   }
 }

@@ -160,10 +160,36 @@ object PlanLedger {
       }
     }
 
-  /** Regenerates `PLANS.tsv` from a fresh pass. */
+  /** The parts of a plan string that differ between two builds of the
+    * same plan: expression ids, exchange `plan_id`s, object hashes,
+    * lambda class ids, `_common_expr_N` aliases and the random suffix
+    * of `TempDirs` directory names.
+    */
+  private val Volatile: Seq[(scala.util.matching.Regex, String)] = Seq(
+    "#\\d+".r -> "#",
+    "plan_id=\\d+".r -> "plan_id=",
+    "\\$\\$Lambda[\\$/0-9a-fx]*".r -> "\\$\\$Lambda",
+    "(?<=[\\w\\];$])@[0-9a-f]{4,}\\b".r -> "@",
+    "_common_expr_\\d+".r -> "_common_expr_",
+    "(/graft[-_][A-Za-z0-9_]*?)\\d{12,}".r -> "$1*")
+
+  /** `plan` with every `Volatile` part replaced by a fixed token. */
+  def normalize(plan: String): String =
+    Volatile.foldLeft(plan) { case (s, (re, to)) => re.replaceAllIn(s, to) }
+
+  /** Rewrites `PLANS.tsv` from a fresh pass; with `--plans <dir>`, writes
+    * each query's normalized executed plan to `<dir>/<query>.txt`
+    * instead, so two builds' plans can be compared with `diff -r`.
+    */
   def main(args: Array[String]): Unit =
-    try {
-      Files.writeString(File, render(rows))
-      println(s"wrote ${pass.size} rows to ${File.toAbsolutePath}")
+    try args match {
+      case Array() =>
+        Files.writeString(File, render(rows))
+        println(s"wrote ${pass.size} rows to ${File.toAbsolutePath}")
+      case Array("--plans", dir) =>
+        val out = Files.createDirectories(Paths.get(dir))
+        for ((q, e) <- pass) Files.writeString(out.resolve(s"$q.txt"), normalize(e.plan) + "\n")
+        println(s"wrote ${pass.size} plans to ${out.toAbsolutePath}")
+      case _ => sys.error("usage: PlanLedger [--plans <dir>]")
     } finally TestSpark.spark.stop()
 }

@@ -32,4 +32,29 @@ class PlanLedgerSpec extends SparkSpec {
     assert(PlanLedger.parse(PlanLedger.render(Map("q_a" -> moved)))
       == (PlanLedger.Columns, Map("q_a" -> moved)))
   }
+
+  test("the plan dump normalizer blanks exactly the parts that vary between builds") {
+    val plan = Seq(
+      "AdaptiveSparkPlan isFinalPlan=false",
+      "+- Project [id#12L, _common_expr_3#40 AS cos#41]",
+      "   +- Exchange hashpartitioning(id#12L, 4), ENSURE_REQUIREMENTS, [plan_id=318]",
+      "      +- centroid_dists(nd#9, [D@6f1a2b3c, 16) AS __d#77",
+      "      +- token_replay(__seq#5, [Ljava.lang.String;@5a1d1a72) AS __r#6",
+      "         +- Scan ExistingRDD graft.Foo$$Lambda/0x00007f3c1d2e4a58@1b2c3d4e",
+      "            +- FileScan parquet [id#1L] Location: InMemoryFileIndex(1 paths)" +
+        "[file:/tmp/graft_dense_q_8123456789012345678/idx/members]",
+      "            +- FileScan parquet [id#2L] Location: [file:/tmp/graft-xesv28123456789012345678]",
+      "            +- Filter (k#3 <= 10) AND isnotnull(plan_id#4)").mkString("\n")
+    assert(PlanLedger.normalize(plan) == Seq(
+      "AdaptiveSparkPlan isFinalPlan=false",
+      "+- Project [id#L, _common_expr_# AS cos#]",
+      "   +- Exchange hashpartitioning(id#L, 4), ENSURE_REQUIREMENTS, [plan_id=]",
+      "      +- centroid_dists(nd#, [D@, 16) AS __d#",
+      "      +- token_replay(__seq#, [Ljava.lang.String;@) AS __r#",
+      "         +- Scan ExistingRDD graft.Foo$$Lambda@",
+      "            +- FileScan parquet [id#L] Location: InMemoryFileIndex(1 paths)" +
+        "[file:/tmp/graft_dense_q_*/idx/members]",
+      "            +- FileScan parquet [id#L] Location: [file:/tmp/graft-xesv*]",
+      "            +- Filter (k# <= 10) AND isnotnull(plan_id#)").mkString("\n"))
+  }
 }

@@ -128,4 +128,29 @@ class SemDedupSpec extends SparkSpec {
         "embedding", threshold = 0.0)
     }
   }
+
+  test("an all-zero-norm corpus: every row in the -1 cell, and the pair arms fail loudly") {
+    import spark.implicits._
+    val zeros = (1L to 5L).map(i => (i, Seq(0f, 0f, 0f, 0f))).toDF("vec_id", "embedding")
+    val cells = Similarity.clusterAssign(zeros, "vec_id", "embedding").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(cells == (1L to 5L).map(_ -> -1L).toSet)
+    val sizes = Similarity.semanticDedupCells(zeros, "vec_id", "embedding").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(sizes == Seq((-1L, 5L)))
+    val quality = Similarity.clusterQuality(zeros, "vec_id", "embedding").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.isNullAt(2))).toSeq
+    assert(quality == Seq((-1L, 5L, true)), "counted, silhouette NULL")
+    // the clustered arm scores the -1 cell like any other, so a zero
+    // vector fails it loudly, as it fails the exact arm: the pushed-down
+    // cosine filter is evaluated before the id order, even for a
+    // vector's pair with itself
+    val one = zeros.filter(col("vec_id") === 1L)
+    for (arm <- Seq[org.apache.spark.sql.DataFrame => Any](
+        Similarity.semanticDedup(_, "vec_id", "embedding", Threshold).collect(),
+        Similarity.semanticDedupClustered(_, "vec_id", "embedding", Threshold).collect())) {
+      val e = intercept[Exception](arm(one))
+      assert(e.getMessage.contains("DIVIDE_BY_ZERO"))
+    }
+  }
 }
